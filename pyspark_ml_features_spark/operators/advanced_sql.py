@@ -1,5 +1,9 @@
-"""Advanced SQL surface: UNPIVOT (long-form reshaping), recursive CTEs
-(engine-scheduled iteration, new in Spark 4), and one-pass data profiling.
+"""SQL-text family: queries whose subject is the SQL language surface —
+UNPIVOT, recursive CTEs (engine-scheduled iteration, new in Spark 4),
+LATERAL and subqueries, the Spark 4 additions (pipe syntax, GROUP/ORDER BY
+ALL, session variables, EXECUTE IMMEDIATE, IDENTIFIER(), parameterized SQL,
+SQL scripting, SQL UDFs and table functions, polymorphic UDTFs), the TPC-H
+shapes written as SQL text, and one-pass data profiling.
 
 These close out the relational surface a warehouse user expects beyond the
 D1–D20 operator families: d33 is the inverse of d23_pivot, d34 exercises
@@ -10,8 +14,12 @@ and d35 is the schema-profiling pass run before ingesting a new source.
 
 from __future__ import annotations
 
+import datetime
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import table
@@ -1102,3 +1110,729 @@ def d121_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
         |> SELECT o_orderpriority, n_orders,
                   CAST(sum_cents AS BIGINT) AS sum_cents, max_cents
         """)
+
+
+_D25_SQL = """
+SELECT c.c_custkey, c.c_name, c.c_acctbal
+FROM customer c
+WHERE c.c_acctbal > (SELECT avg(c_acctbal) FROM customer)
+  AND c.c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
+"""
+
+
+@register(
+    "d25_sql_subqueries",
+    oracle=_D25_SQL,
+    tags=("engine", "sql", "subquery"),
+)
+def d25_sql_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scalar + IN subqueries through the spark.sql text entry point
+    (identical text runs on both engines). Catalyst rewrites the IN to a
+    semi join and the scalar to a broadcast single-row aggregate."""
+    table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
+    return spark.sql(_D25_SQL)
+
+
+@register(
+    "d68_grouped_topk_lateral",
+    oracle="""
+SELECT s.c_mktsegment, t.c_custkey, t.c_acctbal
+FROM (SELECT DISTINCT c_mktsegment FROM customer) s,
+LATERAL (SELECT c_custkey, c_acctbal FROM customer
+         WHERE c_mktsegment = s.c_mktsegment
+         ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 3) t
+""",
+    tags=("engine", "lateral", "topk"),
+)
+def d68_grouped_topk_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grouped top-k via correlated LATERAL over the GROUP DOMAIN (VERDICT
+    r3 task 3's 'grouped top-k over the d65 lateral shape'): distinct
+    segments on the outer side, each segment's top-3 customers by balance
+    in the lateral — the declarative twin of d10's window rank-filter.
+    (acctbal, custkey) ordering makes the top-3 deterministic under ties.
+
+    100 TB: Catalyst decorrelates to one shuffle on the correlation key
+    with a bounded per-group sort (WindowGroupLimit), exactly d65 —
+    never a per-segment rescan."""
+    c = table(spark, sf_dir, "customer")
+    c.createOrReplaceTempView("pmfs_d68_customer")
+    return spark.sql("""
+        SELECT s.c_mktsegment, t.c_custkey, t.c_acctbal
+        FROM (SELECT DISTINCT c_mktsegment FROM pmfs_d68_customer) s,
+        LATERAL (SELECT c_custkey, c_acctbal FROM pmfs_d68_customer
+                 WHERE c_mktsegment = s.c_mktsegment
+                 ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 3) t
+    """)
+
+
+@register(
+    "d80_group_by_all",
+    oracle="""
+SELECT o_orderstatus, o_orderpriority,
+       CAST(year(o_orderdate) AS BIGINT) AS o_year,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS sum_price_cents
+FROM orders
+GROUP BY ALL
+""",
+    tags=("engine", "sql", "group-by-all"),
+)
+def d80_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GROUP BY ALL (Spark 4 / modern-SQL sugar): every non-aggregate
+    SELECT item becomes a grouping key — the analyst shorthand both
+    engines resolve identically at bind time, so the plan is exactly the
+    explicit three-key hash aggregate (zero runtime cost; this row pins
+    the RESOLUTION semantics)."""
+    o = table(spark, sf_dir, "orders")
+    o.createOrReplaceTempView("pmfs_d80_orders")
+    return spark.sql("""
+        SELECT o_orderstatus, o_orderpriority,
+               CAST(year(o_orderdate) AS BIGINT) AS o_year,
+               count(*) AS n_orders,
+               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+                   AS sum_price_cents
+        FROM pmfs_d80_orders
+        GROUP BY ALL
+    """)
+
+
+@register(
+    "d110_parameterized_sql",
+    oracle="""
+SELECT o_orderpriority,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS sum_cents
+FROM orders
+WHERE o_orderdate >= DATE '1994-01-01'
+  AND o_orderdate < DATE '1996-01-01'
+  AND o_orderstatus = 'F'
+GROUP BY o_orderpriority
+""",
+    tags=("engine", "sql", "parameterized"),
+)
+def d110_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PARAMETERIZED SQL with named markers and an IDENTIFIER() table
+    parameter (Spark 3.4/4 surface): the query text carries ``:start`` /
+    ``:end`` / ``:status`` value parameters and ``IDENTIFIER(:tbl)`` for
+    the relation — the injection-safe templating API that replaces
+    f-string SQL assembly in production jobs (values are bound as
+    literals by the parser, identifiers validated as names, never
+    spliced as text). The oracle is the same query with the parameters
+    inlined, so parity proves binding ≡ inlining. Money aggregates as
+    floor-cents BIGINT per the parity conventions.
+
+    100 TB: parameter binding is parse-time — the bound plan is
+    IDENTICAL to the inlined one (same pushed filters, same partition
+    pruning), so templated job fleets get full Catalyst optimization;
+    this query's filters land in the parquet scan like any literal."""
+    view = f"orders_param_{os.getpid()}"
+    table(spark, sf_dir, "orders").createOrReplaceTempView(view)
+    return spark.sql(
+        """
+        SELECT o_orderpriority,
+               count(*) AS n_orders,
+               sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS sum_cents
+        FROM IDENTIFIER(:tbl)
+        WHERE o_orderdate >= :start
+          AND o_orderdate < :end
+          AND o_orderstatus = :status
+        GROUP BY o_orderpriority
+        """,
+        args={"tbl": view,
+              "start": datetime.date(1994, 1, 1),
+              "end": datetime.date(1996, 1, 1),
+              "status": "F"})
+
+
+@register(
+    "d113_sql_udf",
+    oracle="""
+SELECT CAST(yr AS BIGINT) AS yr,
+       CAST(count(o_orderkey) AS BIGINT) AS n_orders,
+       CAST(coalesce(sum(CAST(floor(o_totalprice * 100) AS BIGINT)), 0)
+            AS BIGINT) AS sum_cents
+FROM (SELECT unnest(range(1992, 1999)) AS yr) spine
+LEFT JOIN orders ON CAST(year(o_orderdate) AS BIGINT) = CAST(yr AS BIGINT)
+GROUP BY yr
+""",
+    tags=("engine", "D20", "sql-udf", "function-spectrum"),
+)
+def d113_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL-language UDFs (Spark 4 ``CREATE FUNCTION ... RETURN``) — the
+    DECLARATIVE slot of the D20 function spectrum: a scalar SQL UDF
+    (floor-cents) used inside the aggregate and a table-valued SQL UDF
+    (year spine) used in the FROM clause, joined LEFT so empty years
+    survive with zero counts. Unlike every Python-boundary sibling (d20
+    pandas UDF, d22 row UDF, d23 UDTF, d83 UDAF, d109 table-arg UDTF),
+    Catalyst INLINES the SQL function body into the plan — the physical
+    plan contains no BatchEvalPython/ArrowEvalPython node, the inlined
+    expression participates in whole-stage codegen, and filters through
+    it can still push down (test_plans pins the zero-Python-boundary
+    claim). The oracle inlines the same bodies by hand, proving the
+    function-call indirection changes nothing.
+
+    100 TB: this is the UDF form to prefer whenever the logic is
+    expressible — zero serialization boundary, optimizer-transparent,
+    and shareable via the catalog instead of shipped Python pickles."""
+    o = table(spark, sf_dir, "orders")
+    o.createOrReplaceTempView("pmfs_d113_orders")
+    spark.sql("""
+        CREATE OR REPLACE TEMPORARY FUNCTION pmfs_floor_cents(x DOUBLE)
+        RETURNS BIGINT RETURN CAST(floor(x * 100) AS BIGINT)""")
+    spark.sql("""
+        CREATE OR REPLACE TEMPORARY FUNCTION pmfs_year_spine(a INT, b INT)
+        RETURNS TABLE(yr INT) RETURN SELECT explode(sequence(a, b))""")
+    return spark.sql("""
+        SELECT CAST(yr AS BIGINT) AS yr,
+               count(o_orderkey) AS n_orders,
+               coalesce(sum(pmfs_floor_cents(o_totalprice)), 0) AS sum_cents
+        FROM pmfs_year_spine(1992, 1998)
+        LEFT JOIN pmfs_d113_orders
+          ON CAST(year(o_orderdate) AS BIGINT) = CAST(yr AS BIGINT)
+        GROUP BY yr""")
+
+
+@register(
+    "d127_pipe_syntax_join_window",
+    oracle="""
+WITH a AS (
+    SELECT c_mktsegment, o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               AS sum_cents
+    FROM orders JOIN customer ON o_custkey = c_custkey
+    GROUP BY c_mktsegment, o_orderpriority
+)
+SELECT c_mktsegment, o_orderpriority, n_orders, sum_cents,
+       CAST(rank() OVER (PARTITION BY c_mktsegment
+                         ORDER BY n_orders DESC, o_orderpriority)
+            AS BIGINT) AS rnk
+FROM a
+""",
+    tags=("engine", "sql", "spark4", "window"),
+)
+def d127_pipe_syntax_join_window(spark: SparkSession,
+                                 sf_dir: str) -> DataFrame:
+    """SQL PIPE SYNTAX with a JOIN and a post-aggregate WINDOW — d121
+    proved the linear FROM→WHERE→AGGREGATE lowering; this extends the
+    surface to the two clauses production pipelines actually chain:
+    `|> JOIN` (lowered to the same equi-join as the classic form) and a
+    window function in a piped SELECT (rank of each order priority
+    within its market segment). Tie-break on the priority string keeps
+    rank deterministic.
+
+    100 TB: surface syntax only — identical broadcast-able equi-join +
+    partial/final aggregate + segment-partitioned window as the ANSI
+    form (the oracle)."""
+    import os
+
+    pid = os.getpid()
+    table(spark, sf_dir, "orders").createOrReplaceTempView(f"ord_p7_{pid}")
+    table(spark, sf_dir, "customer").createOrReplaceTempView(f"cus_p7_{pid}")
+    return spark.sql(f"""
+        FROM ord_p7_{pid}
+        |> JOIN cus_p7_{pid} ON o_custkey = c_custkey
+        |> EXTEND CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        |> AGGREGATE count(*) AS n_orders, sum(cents) AS sum_cents
+           GROUP BY c_mktsegment, o_orderpriority
+        |> SELECT c_mktsegment, o_orderpriority,
+                  CAST(n_orders AS BIGINT) AS n_orders,
+                  CAST(sum_cents AS BIGINT) AS sum_cents,
+                  CAST(rank() OVER (PARTITION BY c_mktsegment
+                                    ORDER BY n_orders DESC,
+                                             o_orderpriority)
+                       AS BIGINT) AS rnk
+        """)
+
+
+@register(
+    "d129_lateral_column_alias",
+    oracle="""
+WITH c AS (
+    SELECT o_orderkey, o_orderpriority,
+           CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+    FROM orders WHERE o_orderstatus = 'O'
+)
+SELECT o_orderkey, o_orderpriority, cents,
+       cents * 3 AS triple_cents,
+       cents * 3 + cents AS quad_cents,
+       (cents * 3 + cents) % 97 AS quad_mod97
+FROM c
+""",
+    tags=("engine", "sql", "spark4", "lateral-alias"),
+)
+def d129_lateral_column_alias(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """LATERAL COLUMN ALIASES (Spark 3.4+/DuckDB both support them): a
+    SELECT item referencing an alias defined EARLIER IN THE SAME SELECT
+    (`cents AS c, c*3 AS t, t+c AS q`), chained three deep — the
+    ergonomic form every hand-written feature-derivation query wants.
+    The oracle is the fully EXPANDED expression tree, proving Spark's
+    alias resolution substitutes rather than re-evaluates differently
+    (exact integer arithmetic, so any divergence would hash).
+
+    100 TB: pure per-row codegen over one pushed-filter scan — the
+    aliases collapse into a single Project node."""
+    import os
+
+    view = f"ord_lca_{os.getpid()}"
+    table(spark, sf_dir, "orders").createOrReplaceTempView(view)
+    return spark.sql(f"""
+        SELECT o_orderkey, o_orderpriority,
+               CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+               cents * 3 AS triple_cents,
+               triple_cents + cents AS quad_cents,
+               quad_cents % 97 AS quad_mod97
+        FROM {view} WHERE o_orderstatus = 'O'
+        """)
+
+
+@register(
+    "d130_pipe_extend_set_drop",
+    oracle="""
+WITH base AS (
+    SELECT l_returnflag, l_shipdate,
+           CAST(floor(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
+               AS net_cents
+    FROM lineitem
+), flt AS (
+    SELECT * FROM base WHERE l_shipdate >= DATE '1995-01-01'
+)
+SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(net_cents) AS BIGINT) AS net_cents_sum
+FROM flt GROUP BY l_returnflag
+""",
+    tags=("engine", "sql-pipe", "spark4"),
+)
+def d130_pipe_extend_set_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL pipe-syntax column lifecycle — |> EXTEND (add a computed
+    column), |> SET (redefine it in place), |> DROP (remove a source
+    column), |> WHERE, |> AGGREGATE: the d121/d127 family's third
+    variant, exercising the mutation operators rather than join/window.
+    Lowers to the identical classic plan (filter pushed to the scan,
+    partial-aggregated GROUP BY), which the expanded-form oracle states
+    directly. Money stays in floor-cents BIGINT from the first EXTEND
+    (per-row IEEE multiply then floor is engine-exact; the cross-row
+    sum is integer)."""
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("li_pipe8")
+    return spark.sql("""
+        FROM li_pipe8
+        |> EXTEND l_extendedprice * (1 - l_discount) AS net
+        |> SET net = CAST(floor(net * 100) AS BIGINT)
+        |> DROP l_tax, l_partkey, l_suppkey
+        |> WHERE l_shipdate >= DATE '1995-01-01'
+        |> AGGREGATE CAST(count(*) AS BIGINT) AS n,
+                     CAST(sum(net) AS BIGINT) AS net_cents_sum
+           GROUP BY l_returnflag
+        |> SELECT l_returnflag, n, net_cents_sum
+    """)
+
+
+@register(
+    "d131_group_order_by_all",
+    oracle="""
+SELECT l_returnflag, l_linestatus,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+           AS qty_cents
+FROM lineitem
+GROUP BY ALL
+ORDER BY ALL
+""",
+    tags=("engine", "sql-sugar", "spark4"),
+)
+def d131_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GROUP BY ALL + ORDER BY ALL together (d80 exercised GROUP BY ALL
+    alone): both engines expand ALL to the non-aggregate select list in
+    select-list order, so the sugar is plan-identical to the explicit
+    form — zero-cost readability, not a new operator. The ordered output
+    also pins that both engines agree on the expansion ORDER (a mismatch
+    would hash-differ even with equal row sets only if values disagreed,
+    so the real check is the grouping expansion)."""
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("li_all8")
+    return spark.sql("""
+        SELECT l_returnflag, l_linestatus,
+               CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+                   AS qty_cents
+        FROM li_all8
+        GROUP BY ALL
+        ORDER BY ALL
+    """)
+
+
+@register(
+    "d133_sql_session_variables",
+    oracle="""
+SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_big
+FROM orders
+WHERE o_totalprice > 150000.0 AND o_orderdate >= DATE '1995-01-01'
+GROUP BY o_orderpriority
+""",
+    tags=("engine", "sql-variables", "spark4"),
+)
+def d133_sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL session variables (Spark 4 DECLARE / SET VAR): a parameterized
+    threshold report where the knobs live in session state instead of
+    string interpolation — the SQL-native alternative to d110's
+    parameterized-query API. Variables fold to constants at plan time
+    (the filter still pushes to the scan; the oracle is the expanded
+    constant form). Session-scoped: DECLARE OR REPLACE keeps reruns
+    idempotent within one SparkSession."""
+    table(spark, sf_dir, "orders").createOrReplaceTempView("ord_var8")
+    spark.sql("DECLARE OR REPLACE VARIABLE price_floor DOUBLE DEFAULT 0.0")
+    spark.sql("DECLARE OR REPLACE VARIABLE cutoff_date DATE "
+              "DEFAULT DATE '1990-01-01'")
+    spark.sql("SET VAR price_floor = 150000.0")
+    spark.sql("SET VAR cutoff_date = DATE '1995-01-01'")
+    return spark.sql("""
+        SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_big
+        FROM ord_var8
+        WHERE o_totalprice > price_floor AND o_orderdate >= cutoff_date
+        GROUP BY o_orderpriority
+    """)
+
+
+@register(
+    "d134_execute_immediate",
+    oracle="""
+SELECT n_name, CAST(count(*) AS BIGINT) AS n_customers
+FROM customer JOIN nation ON c_nationkey = n_nationkey
+WHERE c_acctbal > 5000.0
+GROUP BY n_name
+""",
+    tags=("engine", "sql-variables", "spark4"),
+)
+def d134_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXECUTE IMMEDIATE with USING parameters (Spark 4): dynamic SQL
+    with engine-side parameter binding — the injection-safe form of
+    query-by-string (the parameter is bound as a typed literal, never
+    spliced as text). The plan is identical to the static query, so the
+    oracle is the expanded form; the broadcast-able nation dim keeps
+    the join a BHJ."""
+    table(spark, sf_dir, "customer").createOrReplaceTempView("cust_ei8")
+    table(spark, sf_dir, "nation").createOrReplaceTempView("nat_ei8")
+    return spark.sql(
+        "EXECUTE IMMEDIATE "
+        "'SELECT n_name, CAST(count(*) AS BIGINT) AS n_customers "
+        " FROM cust_ei8 JOIN nat_ei8 ON c_nationkey = n_nationkey "
+        " WHERE c_acctbal > ? GROUP BY n_name' "
+        "USING 5000.0d")
+
+
+@register(
+    "d136_unpivot_sql",
+    oracle="""
+SELECT l_orderkey, l_linenumber, feat, val
+FROM lineitem
+UNPIVOT (val FOR feat IN (l_quantity, l_extendedprice, l_discount))
+""",
+    tags=("engine", "D16", "reshape"),
+)
+def d136_unpivot_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Standard SQL UNPIVOT clause — d33 reshapes with the stack() TVF
+    and d106 with selectExpr stack; this is the declarative form both
+    engines parse natively (Spark lowers it to the same Expand node as
+    stack, so wide→long stays a zero-shuffle flatMap). NULL cells are
+    dropped by UNPIVOT's default (none exist in lineitem; both engines
+    agree on the default INCLUDE NULLS = false)."""
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("li_unpvt8")
+    return spark.sql("""
+        SELECT l_orderkey, l_linenumber, feat, val
+        FROM li_unpvt8
+        UNPIVOT (val FOR feat IN (l_quantity, l_extendedprice, l_discount))
+    """)
+
+
+@register(
+    "d138_identifier_clause",
+    oracle="""
+SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS price_cents
+FROM orders
+GROUP BY o_orderpriority
+""",
+    tags=("engine", "sql-variables", "spark4"),
+)
+def d138_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IDENTIFIER() clause (Spark 4): table and column names supplied as
+    PARAMETERS instead of string-spliced SQL — the injection-safe form
+    of "group this table by that column", template queries over a
+    catalog. The identifier resolves at analysis time, so the plan is
+    byte-identical to the static query (the oracle's expanded form);
+    a value that is not a valid identifier is a parse error, never an
+    executed injection."""
+    table(spark, sf_dir, "orders").createOrReplaceTempView("ord_ident8")
+    return spark.sql(
+        """
+        SELECT IDENTIFIER(:gcol), CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+                    AS BIGINT) AS price_cents
+        FROM IDENTIFIER(:tab)
+        GROUP BY IDENTIFIER(:gcol)
+        """,
+        args={"gcol": "o_orderpriority", "tab": "ord_ident8"})
+
+
+@register(
+    "d139_listagg_within_group",
+    oracle="""
+SELECT l_orderkey,
+       string_agg(CAST(l_linenumber AS VARCHAR), ','
+                  ORDER BY l_linenumber) AS line_list,
+       CAST(count(*) AS BIGINT) AS n_lines
+FROM lineitem
+WHERE l_orderkey % 50 = 0
+GROUP BY l_orderkey
+""",
+    tags=("engine", "D4", "aggregate", "spark4"),
+)
+def d139_listagg_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """listagg(...) WITHIN GROUP (ORDER BY ...) — the SQL-standard
+    ordered string aggregate added in Spark 4 (d69 built the same thing
+    manually from array_join(array_sort(collect_list))). The WITHIN
+    GROUP order makes the concatenation deterministic — DuckDB's
+    string_agg(... ORDER BY ...) is the exact equivalent; duplicate
+    order keys are harmless because equal keys carry equal strings.
+    Per-order groups are bounded (≤7 lines), so the aggregate state is
+    small and map-side combinable like any collect."""
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("li_lagg8")
+    return spark.sql("""
+        SELECT l_orderkey,
+               listagg(CAST(l_linenumber AS STRING), ',')
+                   WITHIN GROUP (ORDER BY l_linenumber) AS line_list,
+               CAST(count(*) AS BIGINT) AS n_lines
+        FROM li_lagg8
+        WHERE l_orderkey % 50 = 0
+        GROUP BY l_orderkey
+    """)
+
+
+@register(
+    "d144_sql_scripting",
+    oracle="""
+WITH s AS (
+    SELECT avg(o_totalprice) AS ap FROM orders
+)
+SELECT o_orderpriority,
+       CASE WHEN s.ap > 100000.0 THEN 'high' ELSE 'low' END AS price_band,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(floor(s.ap * 100) AS BIGINT) AS avg_cents,
+       0.9990234375 AS geo_sum
+FROM orders, s
+GROUP BY o_orderpriority, s.ap
+""",
+    tags=("engine", "sql-scripting", "spark4"),
+)
+def d144_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL scripting (Spark 4 BEGIN…END): DECLARE'd local variables, a
+    scalar-subquery SET, an IF/ELSE branch, and a WHILE loop — the
+    procedural control flow that previously required a driver-side
+    Python wrapper, now running as one SQL unit whose value is the last
+    statement's result. Everything the script computes is expressible
+    declaratively (the expanded-form oracle: the branch is a CASE over
+    the same average, the loop's geometric sum of ten exact dyadics is
+    the literal 0.9990234375), which is the right mental model — the
+    scripting layer sequences plans, it does not add operators, so each
+    inner statement still gets full Catalyst treatment."""
+    table(spark, sf_dir, "orders").createOrReplaceTempView("ord_scr8")
+    return spark.sql("""
+        BEGIN
+            DECLARE avg_price DOUBLE;
+            DECLARE band STRING;
+            DECLARE geo DOUBLE DEFAULT 0.0;
+            DECLARE half DOUBLE DEFAULT 0.5;
+            DECLARE i INT DEFAULT 1;
+            SET avg_price = (SELECT avg(o_totalprice) FROM ord_scr8);
+            IF avg_price > 100000.0 THEN
+                SET band = 'high';
+            ELSE
+                SET band = 'low';
+            END IF;
+            -- geometric sum via an exact dyadic recurrence (each step
+            -- halves a power of two — always representable), never
+            -- power(): no libm transcendental behind an exact oracle.
+            WHILE i <= 10 DO
+                SET geo = geo + half;
+                SET half = half * 0.5;
+                SET i = i + 1;
+            END WHILE;
+            SELECT o_orderpriority, band AS price_band,
+                   CAST(count(*) AS BIGINT) AS n,
+                   CAST(floor(avg_price * 100) AS BIGINT) AS avg_cents,
+                   geo AS geo_sum
+            FROM ord_scr8
+            GROUP BY o_orderpriority;
+        END
+    """)
+
+
+@register(
+    "d145_polymorphic_udtf",
+    oracle="""
+WITH proj AS (
+    SELECT o_orderpriority, o_orderkey,
+           CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+    FROM orders
+)
+SELECT o_orderpriority, o_orderkey, cents,
+       CAST(row_number() OVER (PARTITION BY o_orderpriority
+                               ORDER BY o_orderkey) AS BIGINT) AS rn
+FROM proj
+""",
+    tags=("engine", "D20", "udf", "udtf", "table-arg", "spark4"),
+)
+def d145_polymorphic_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """POLYMORPHIC table-valued function (Spark 4): a UDTF with no fixed
+    returnType whose ``analyze()`` receives the TABLE argument's schema
+    at plan time and computes the output schema from it — here the input
+    row plus a ``rn`` partition-sequence column, so ONE registration
+    numbers rows of ANY table (`FROM numbered(TABLE(v) PARTITION BY k
+    ORDER BY ...)`), where d109's gap_stats was pinned to one shape.
+    Eval streams each partition's rows in ORDER BY order through one
+    instance; the expanded-form oracle is the row_number window over the
+    same unique ordering.
+
+    100 TB: same economics as d109 — PARTITION BY shuffles once on the
+    key; the Python boundary is row-at-a-time by API design, so this
+    slot is for genuinely sequential per-group logic whose schema must
+    follow the input's (generic numbering/diffing/auditing TVFs); a
+    fixed-schema vectorizable transform belongs in applyInPandas (d21).
+    Reference: no UDF surface in the reference repo
+    (spark_ml_features.py:1); SURVEY §2-D20 family."""
+
+    from pyspark.sql.functions import udtf
+    from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
+
+    class Numbered:
+        @staticmethod
+        def analyze(t: AnalyzeArgument) -> AnalyzeResult:
+            return AnalyzeResult(schema=StructType(
+                list(t.dataType.fields) + [StructField("rn", LongType())]))
+
+        def __init__(self) -> None:
+            self.rn = 0
+
+        def eval(self, row):
+            self.rn += 1
+            yield (*row, self.rn)
+
+    o = (table(spark, sf_dir, "orders")
+         .select("o_orderpriority", "o_orderkey",
+                 F.floor(F.col("o_totalprice") * 100).cast("bigint")
+                 .alias("cents")))
+    view = f"poly_orders_{os.getpid()}"
+    o.createOrReplaceTempView(view)
+    spark.udtf.register("numbered", udtf(Numbered))
+    return spark.sql(
+        f"SELECT * FROM numbered(TABLE({view}) "
+        "PARTITION BY o_orderpriority ORDER BY o_orderkey)")
+
+
+@register(
+    "d146_recursive_month_spine",
+    oracle="""
+WITH RECURSIVE months(m) AS (
+    SELECT date_trunc('month', (SELECT min(o_orderdate) FROM orders))
+    UNION ALL
+    SELECT m + INTERVAL 1 MONTH FROM months
+    WHERE m < date_trunc('month', (SELECT max(o_orderdate) FROM orders))
+)
+SELECT CAST(m AS TIMESTAMP) AS month_start,
+       CAST(count(o_orderkey) AS BIGINT) AS n_orders
+FROM months LEFT JOIN orders ON date_trunc('month', o_orderdate) = m
+GROUP BY m
+""",
+    tags=("engine", "D14", "sql", "recursive-cte", "spark4"),
+)
+def d146_recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RECURSIVE CTE (Spark 4.1 `WITH RECURSIVE`): a gap-free month
+    spine whose BOUNDS are data-driven (scalar subqueries over the same
+    table anchor and terminate the recursion), left-joined back so
+    months with zero orders appear as explicit 0 rows — the calendar-
+    densification pattern every time-series rollup needs, previously
+    only expressible via sequence()+explode (d49's shape). DuckDB runs
+    the IDENTICAL recursive SQL as the oracle. Both engines' DATE +
+    INTERVAL yield TIMESTAMP-kind months; the output casts to TIMESTAMP
+    explicitly (the d74 date-kind parity rule).
+
+    100 TB: the recursion materializes ~84 month rows (bounded by the
+    data's time span, not its volume) — the spine side is trivially
+    broadcast; the orders side partial-aggregates per month before the
+    exchange. Recursion depth is checked by the engine
+    (spark.sql.cteRecursionLevelLimit, default 100) — a spine over a
+    century of data would raise, not spin."""
+    o = table(spark, sf_dir, "orders")
+    view = f"rec_orders_{os.getpid()}"
+    o.createOrReplaceTempView(view)
+    return spark.sql(f"""
+        WITH RECURSIVE months(m) AS (
+            SELECT date_trunc('month',
+                              (SELECT min(o_orderdate) FROM {view}))
+            UNION ALL
+            SELECT m + INTERVAL '1' MONTH FROM months
+            WHERE m < date_trunc('month',
+                                 (SELECT max(o_orderdate) FROM {view}))
+        )
+        SELECT CAST(m AS TIMESTAMP) AS month_start,
+               CAST(count(o_orderkey) AS BIGINT) AS n_orders
+        FROM months LEFT JOIN {view}
+             ON date_trunc('month', o_orderdate) = m
+        GROUP BY m
+    """)
+
+
+@register(
+    "d148_sql_table_function",
+    oracle="""
+WITH ranked AS (
+    SELECT o_orderpriority, o_orderkey,
+           CAST(floor(o_totalprice * 100) AS BIGINT) AS cents,
+           CAST(row_number() OVER (
+               PARTITION BY o_orderpriority
+               ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rnk
+    FROM orders
+)
+SELECT * FROM ranked WHERE rnk <= 5
+""",
+    tags=("engine", "D20", "sql", "table-function", "spark4"),
+)
+def d148_sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL-DEFINED table function (`CREATE FUNCTION ... RETURNS TABLE
+    ... RETURN SELECT`): the declarative macro layer of the D20 spectrum
+    — d113 is the scalar SQL UDF, d109/d145 are Python UDTFs; this slot
+    is a PARAMETERIZED table view whose body is pure SQL, so Catalyst
+    inlines it like any subquery (full pushdown/pruning through the
+    function boundary — no black box, unlike the Python shapes). The
+    parameter feeds a rank predicate rather than LIMIT because a
+    correlated limit must be plan-time constant
+    (INVALID_LIMIT_LIKE_EXPRESSION — probed); the rank filter lowers to
+    WindowGroupLimit anyway, which is the better plan at scale.
+
+    100 TB: the inlined body is d10's top-k-per-group shape — one
+    window exchange on the partition key, group-limit pushed into the
+    sort. Reference: no SQL-function surface in the reference repo
+    (spark_ml_features.py:1); SURVEY §2-D20 family."""
+    o = table(spark, sf_dir, "orders")
+    view = f"sqltvf_orders_{os.getpid()}"
+    o.createOrReplaceTempView(view)
+    fn = f"priority_top_{os.getpid()}"
+    spark.sql(f"""
+        CREATE OR REPLACE TEMPORARY FUNCTION {fn}(lim INT)
+        RETURNS TABLE (o_orderpriority STRING, o_orderkey BIGINT,
+                       cents BIGINT, rnk BIGINT)
+        RETURN SELECT * FROM (
+            SELECT o_orderpriority, o_orderkey,
+                   CAST(floor(o_totalprice * 100) AS BIGINT) AS cents,
+                   CAST(row_number() OVER (
+                       PARTITION BY o_orderpriority
+                       ORDER BY o_totalprice DESC, o_orderkey)
+                        AS BIGINT) AS rnk
+            FROM {view}
+        ) WHERE rnk <= lim
+    """)
+    return spark.sql(f"SELECT * FROM {fn}(5)")

@@ -1,6 +1,7 @@
-"""A-series: sources, projections, filters — the relational substrate
-(SURVEY §2-A A1-A10). Each primitive the reference touches is declared as a
-tiny oracle-checked query so the judged inventory is exercised line by line.
+"""Source and sink family (SURVEY §2-A): scans, projections, filters and
+every source/sink round-trip — the relational substrate. Each primitive the
+reference touches is declared as a tiny oracle-checked query so the judged
+inventory is exercised line by line.
 
 A1 csv_scan writes a deterministic iris-shaped CSV to a staging dir once and
 scans it back with schema inference on both engines — the reference's loader
@@ -827,3 +828,253 @@ def a27_multipath_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n"),
                  F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
                  .alias("sum_cents")))
+
+
+@register(
+    "a18_zstd_roundtrip",
+    oracle="""
+SELECT l_linestatus,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+           AS sum_price_cents,
+       CAST(sum(CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT)
+           AS sum_disc_cents
+FROM lineitem
+GROUP BY l_linestatus
+""",
+    tags=("engine", "source", "parquet", "codec", "sink"),
+)
+def a18_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Parquet sink with an explicit zstd codec + read-back, proven
+    LOSSLESS: the aggregate over the round-tripped copy must hash-match
+    the oracle computed from the ORIGINAL table (a15's proof shape for the
+    columnar path). zstd is the 100 TB default — snappy-class decode speed
+    at a meaningfully higher ratio, so scans move fewer bytes for the same
+    data; correctness of the codec swap is exactly what this row pins."""
+    out = pid_scoped("pmfs_lineitem_zstd")
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linestatus", "l_extendedprice", "l_discount")
+    li.write.mode("overwrite").option("compression", "zstd").parquet(out)
+    back = spark.read.parquet(out)
+    return (back.groupBy("l_linestatus")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+                  .alias("sum_price_cents"),
+                 F.sum(F.round(F.col("l_discount") * 100).cast("bigint"))
+                  .alias("sum_disc_cents")))
+
+
+@register(
+    "a19_dynamic_partition_overwrite",
+    oracle="""
+SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(sum(CASE WHEN year(o_orderdate) = 1995
+                     THEN CAST(round(o_totalprice * 2 * 100) AS BIGINT)
+                     ELSE CAST(round(o_totalprice * 100) AS BIGINT) END)
+            AS BIGINT) AS sum_price_cents
+FROM orders
+GROUP BY 1
+""",
+    tags=("engine", "source", "sink", "partition-overwrite"),
+)
+def a19_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DYNAMIC partition overwrite — the incremental-reprocessing sink
+    semantics 100 TB pipelines rely on: a year-partitioned table is fully
+    written once, then ONE year's corrected batch (1995, prices doubled)
+    is written with mode=overwrite + partitionOverwriteMode=dynamic — only
+    the partitions present in the batch are replaced, every other year
+    survives untouched (static overwrite would truncate the whole table).
+    The read-back aggregate hash-matches the oracle's reconstruction, so
+    the 'replaced exactly one partition' semantics are what is verified.
+    The option rides the writer (no session-conf mutation to restore)."""
+    out = pid_scoped("pmfs_orders_dynpart")
+    o = (table(spark, sf_dir, "orders")
+         .withColumn("o_year", F.year("o_orderdate")))
+    o.write.mode("overwrite").partitionBy("o_year").parquet(out)
+    fixed = (o.filter(F.col("o_year") == 1995)
+             .withColumn("o_totalprice", F.col("o_totalprice") * 2))
+    (fixed.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("o_year").parquet(out))
+    back = spark.read.parquet(out)
+    return (back.groupBy(F.col("o_year").cast("bigint").alias("o_year"))
+            .agg(F.count(F.lit(1)).alias("n_orders"),
+                 F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+                  .alias("sum_price_cents")))
+
+
+@register(
+    "a28_binaryfile_scan",
+    oracle="""
+SELECT source,
+       CAST(sum(len(text)) + count(*) AS BIGINT) AS n_bytes
+FROM documents GROUP BY source
+""",
+    tags=("engine", "source", "binary", "multimodal"),
+)
+def a28_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BINARYFILE source (`spark.read.format("binaryFile")`) — the
+    opaque-bytes ingestion path every multimodal pipeline starts from
+    (image/audio/video files land as (path, length, content) rows
+    BEFORE any decode). Round-trip proof: documents are written as a
+    source-partitioned TEXT sink (one newline per row — ASCII corpus,
+    so chars = bytes), read back as whole binary files, and the
+    per-source BYTE totals from file metadata must hash-match byte
+    totals computed from the ORIGINAL table (the a15 oracle trick) —
+    sum(length) over files ≡ sum(len(text)) + one newline per row.
+
+    100 TB: binaryFile scans parallelize per file and never load a file
+    on the driver; partition-dir names carry the routing column so no
+    content parse is needed for grouping. Decode stays in Arrow-batched
+    mapInPandas downstream (e12/e71's posture)."""
+    from pyspark_ml_features_spark.tmp_artifacts import pid_scoped
+
+    out = pid_scoped("pmfs_docs_text_by_source")
+    d = table(spark, sf_dir, "documents")
+    (d.select("source", "text").write.mode("overwrite")
+     .partitionBy("source").text(out))
+    files = (spark.read.format("binaryFile")
+             .option("recursiveFileLookup", "false")
+             .load(out + "/source=*"))
+    return (files
+            .select(F.regexp_extract(F.col("path"), r"source=([^/]+)", 1)
+                    .alias("source"),
+                    F.col("length"))
+            .groupBy("source")
+            .agg(F.sum("length").cast("bigint").alias("n_bytes")))
+
+
+@register(
+    "a29_multiline_csv_roundtrip",
+    oracle="""
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(len(text)) AS BIGINT) AS n_chars
+FROM documents GROUP BY source
+""",
+    tags=("engine", "source", "csv", "multiline"),
+)
+def a29_multiline_csv_roundtrip(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    """MULTILINE-QUOTED CSV round-trip — the CSV corner that breaks naive
+    line-splitting ingest: every document's spaces become embedded
+    NEWLINES, forcing the writer to quote each field across many
+    physical lines; reading it back requires ``multiLine=true`` (the
+    whole-file parse mode — without it every physical line is a
+    row and the counts explode). The restored per-source doc and char
+    totals must hash-match the ORIGINAL table (the a15 oracle trick),
+    proving the quote-aware writer/parser pair is lossless on
+    line-break-bearing text.
+
+    100 TB: multiLine CSV files are NOT splittable (one parse task per
+    file) — acceptable for many small files, wrong for single huge
+    ones; the docstring is the warning and parquet is the fix. The
+    parallelism here comes from writing many part files."""
+    from pyspark_ml_features_spark.tmp_artifacts import pid_scoped
+
+    out = pid_scoped("pmfs_docs_multiline_csv")
+    d = table(spark, sf_dir, "documents")
+    (d.select("doc_id", "source",
+              F.regexp_replace("text", " ", "\n").alias("text_nl"))
+     .write.mode("overwrite").option("header", "true").csv(out))
+    back = (spark.read.option("header", "true")
+            .option("multiLine", "true")
+            .schema("doc_id bigint, source string, text_nl string")
+            .csv(out))
+    return (back.select("source",
+                        F.length(F.regexp_replace("text_nl", "\n", " "))
+                        .cast("bigint").alias("n_chars_doc"))
+            .groupBy("source")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                 F.sum("n_chars_doc").cast("bigint").alias("n_chars")))
+
+
+@register(
+    "a30_insert_default_columns",
+    oracle="""
+WITH ins AS (
+    SELECT o_orderkey, 'UNKNOWN' AS priority, 'none' AS flag
+    FROM orders WHERE o_orderkey % 100 = 0
+    UNION ALL
+    SELECT o_orderkey, o_orderpriority, 'none' FROM orders
+    WHERE o_orderkey % 100 = 50
+)
+SELECT priority, flag, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(o_orderkey) AS BIGINT) AS key_sum
+FROM ins GROUP BY priority, flag
+""",
+    tags=("engine", "A-source", "ddl", "spark4"),
+)
+def a30_insert_default_columns(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """Column DEFAULT values on a parquet catalog table: CREATE TABLE
+    with DEFAULTs, one INSERT naming only (o_orderkey) — the engine
+    fills both defaults — and one naming (o_orderkey, priority) — only
+    flag defaults. The oracle states the expanded values over the
+    ORIGINAL orders table (the a15 trick: sink round-trip oracles never
+    read the sink). pid-suffixed table name + DROP + location rmtree
+    first (d50's stale-warehouse-dir gotcha); defaults resolve at
+    INSERT time, so the stored parquet holds materialized values — a
+    reader without the table schema sees the same data."""
+    import os
+    import shutil
+
+    tab = f"pmfs_a30_defaults_{os.getpid()}"
+    spark.sql(f"DROP TABLE IF EXISTS {tab}")
+    loc = os.path.join(spark.conf.get("spark.sql.warehouse.dir")
+                       .removeprefix("file:"), tab)
+    shutil.rmtree(loc, ignore_errors=True)
+    table(spark, sf_dir, "orders").createOrReplaceTempView("ord_a30")
+    spark.sql(f"""
+        CREATE TABLE {tab} (
+            o_orderkey BIGINT,
+            priority STRING DEFAULT 'UNKNOWN',
+            flag STRING DEFAULT 'none'
+        ) USING parquet
+    """)
+    spark.sql(f"""
+        INSERT INTO {tab} (o_orderkey)
+        SELECT o_orderkey FROM ord_a30 WHERE o_orderkey % 100 = 0
+    """)
+    spark.sql(f"""
+        INSERT INTO {tab} (o_orderkey, priority)
+        SELECT o_orderkey, o_orderpriority FROM ord_a30
+        WHERE o_orderkey % 100 = 50
+    """)
+    return spark.sql(f"""
+        SELECT priority, flag, CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(o_orderkey) AS BIGINT) AS key_sum
+        FROM {tab} GROUP BY priority, flag
+    """)
+
+
+@register(
+    "a31_metadata_columns",
+    oracle="""
+SELECT 'orders.parquet' AS file_name,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(sum(o_orderkey) AS BIGINT) AS key_sum
+FROM orders
+""",
+    tags=("engine", "A-source", "lineage"),
+)
+def a31_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hidden ``_metadata`` file columns on a parquet scan — per-file row
+    lineage (which physical file produced each row) without a separate
+    listing join: the debugging primitive for "which input file is
+    corrupt/skewed/duplicated" at 100 TB, where a scan covers 10^5
+    files. The column materializes scan-side per split (no shuffle, no
+    extra IO — the reader already knows its file). Every sf_dir ships
+    each table as ONE file with a constant basename, so the oracle
+    states 'orders.parquet' literally (DuckDB's equivalent probe,
+    read_parquet(filename=true) + parse_filename, verified identical);
+    the Spark side still COMPUTES the name from _metadata.file_path —
+    a wrong file association breaks the hash."""
+    o = table(spark, sf_dir, "orders")
+    return (o.select(
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+        .alias("file_name"), "o_orderkey")
+        .groupBy("file_name")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+             F.sum("o_orderkey").cast("bigint").alias("key_sum")))

@@ -1,10 +1,12 @@
-"""Training-data preparation operators: embedding quantization, sequence
-packing, hash-based dataset splits, vocabulary construction — the batch
-steps between a cleaned corpus and a training run.
+"""Training-data preparation family: embedding quantization, chunking,
+sequence packing, hash-based splits and sharding, vocabulary construction
+and token encoding, mixtures and batching — the batch steps between a
+cleaned corpus and a training run.
 
-All four are pure SQL expressions with exact oracles: quantization and
-splits are integer arithmetic; packing is a per-partition running sum
-(deterministic order); vocab is label_index generalized to tokens.
+The core operators are pure SQL expressions with exact oracles:
+quantization and splits are integer arithmetic; packing is a per-partition
+running sum (deterministic order); vocab is label_index generalized to
+tokens.
 """
 
 from __future__ import annotations
@@ -12,7 +14,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pyspark_ml_features_spark.functions.text import duckdb_rolling_hash, rolling_hash, tokens
+from pyspark_ml_features_spark.functions.text import (
+    duckdb_rolling_hash,
+    rolling_hash,
+    tokens,
+)
 from pyspark_ml_features_spark.operators.dedup import jaccard_pairs
 from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import table
@@ -1008,3 +1014,478 @@ def e92_incremental_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_group,
         schema="lang string, shard bigint, doc_id bigint, "
                "n_tokens bigint, bin_id bigint")
+
+
+INFER_BATCH = 32
+
+
+@register(
+    "e78_length_bucketed_batches",
+    oracle=f"""
+WITH tok AS (
+    SELECT doc_id,
+           CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens
+    FROM documents
+), r AS (
+    SELECT doc_id, n_tokens,
+           row_number() OVER (ORDER BY n_tokens, doc_id) AS rk
+    FROM tok
+)
+SELECT CAST((rk - 1) // {INFER_BATCH} AS BIGINT) AS batch_id,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(max(n_tokens) AS BIGINT) AS max_tokens,
+       CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+       CAST(count(*) * max(n_tokens) - sum(n_tokens) AS BIGINT)
+           AS padding_waste
+FROM r GROUP BY 1
+""",
+    tags=("north-star", "llm-pipeline", "scale", "ranking"),
+)
+def e78_length_bucketed_batches(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    """LENGTH-BUCKETED inference batching: sort the corpus by token count,
+    cut it into fixed-size batches of INFER_BATCH docs, and report each
+    batch's padding waste (docs padded to the batch max). Grouping
+    similar-length docs is the standard trick that turns ragged-batch
+    inference from ~50% padding FLOPs into a few percent — the report
+    tells you what a batch plan costs BEFORE committing GPU time.
+
+    The engine piece is the global total order WITHOUT a global sort
+    into one partition: ``distributed_row_number`` (d106's primitive)
+    range-repartitions on (n_tokens, doc_id), collects per-partition
+    counts as P metadata rows, and adds offsets to bounded local ranks;
+    batch assignment and the per-batch aggregate are then integer
+    arithmetic on the rank. The oracle IS the single-partition window
+    this replaces.
+
+    100 TB: one range shuffle + one metadata collect + one hash
+    aggregate on batch_id — no step holds more than ~n/P rows."""
+    from pyspark_ml_features_spark.functions.text import tokens
+    from pyspark_ml_features_spark.operators.relational import (
+        distributed_row_number,
+    )
+
+    d = table(spark, sf_dir, "documents")
+    scored = d.select(
+        "doc_id", F.size(tokens("text")).cast("bigint").alias("n_tokens"))
+    ranked = distributed_row_number(scored, ["n_tokens", "doc_id"])
+    return (ranked
+            .withColumn("batch_id",
+                        F.expr(f"(grk - 1) DIV {INFER_BATCH}"))
+            .groupBy("batch_id")
+            .agg(F.count(F.lit(1)).alias("n_docs"),
+                 F.max("n_tokens").alias("max_tokens"),
+                 F.sum("n_tokens").alias("sum_tokens"))
+            .select("batch_id", "n_docs", "max_tokens", "sum_tokens",
+                    (F.col("n_docs") * F.col("max_tokens")
+                     - F.col("sum_tokens")).alias("padding_waste")))
+
+
+@register(
+    "e85_packing_utilization",
+    oracle=_GREEDY_PACK_CTE + f"""
+SELECT lang, shard,
+       CAST(max(bin_id) AS BIGINT) AS n_bins,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+       CAST(sum(n_tokens)::HUGEINT * 10000
+            // (max(bin_id) * {GREEDY_PACK_CAP}) AS BIGINT)
+           AS utilization_bp
+FROM pack GROUP BY lang, shard
+""",
+    tags=("north-star", "llm-pipeline", "packing", "stewardship"),
+)
+def e85_packing_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CONTEXT-WINDOW UTILIZATION per (lang, shard) — the training-
+    efficiency KPI on top of e51's packing: how full the packed
+    sequences actually are (utilization_bp = packed tokens ·10⁴ DIV
+    (bins · capacity)). Utilization is what the packing capacity knob
+    is TUNED against — a corpus packing at 60% wastes 40% of every
+    training FLOP on padding; e78 reports the same economics for
+    inference batching.
+
+    Rides e51's fold (same Arrow boundary, allowlisted) + one bounded
+    aggregate; the oracle extends the shared recursive-CTE fold. All
+    ratios are exact integer DIV (d112)."""
+    from pyspark_ml_features_spark.functions.text import tokens
+
+    d = table(spark, sf_dir, "documents")
+    base = d.select("lang", (F.col("doc_id") % 4).alias("shard"),
+                    "doc_id",
+                    F.size(tokens("text")).cast("bigint").alias("n_tokens"))
+    packed = greedy_pack(base, GREEDY_PACK_CAP)
+    return (packed.groupBy("lang", "shard")
+            .agg(F.max("bin_id").cast("bigint").alias("n_bins"),
+                 F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                 F.sum("n_tokens").cast("bigint").alias("sum_tokens"))
+            .select("lang", "shard", "n_bins", "n_docs", "sum_tokens",
+                    F.expr(f"CAST(CAST(sum_tokens AS DECIMAL(38,0))"
+                           f" * 10000 DIV (n_bins * {GREEDY_PACK_CAP})"
+                           f" AS BIGINT)").alias("utilization_bp")))
+
+
+N_SHARDS = 8
+
+
+@register(
+    "e89_balanced_shards",
+    oracle=f"""
+WITH t AS (
+    SELECT ((doc_id % 2147483648) * 1103515245 + 12345) % 2147483648 % {N_SHARDS}
+               AS shard,
+           CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens
+    FROM documents
+), s AS (
+    SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS shard_tokens
+    FROM t GROUP BY shard
+)
+SELECT CAST(shard AS BIGINT) AS shard, n_docs, shard_tokens,
+       CAST(10000 * shard_tokens // sum(shard_tokens) OVER () AS BIGINT)
+           AS share_bp
+FROM s
+""",
+    tags=("north-star", "llm-pipeline", "sharding", "scale"),
+)
+def e89_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BALANCED OUTPUT SHARDING report: assign every document to one of
+    N_SHARDS output shards by a portable LCG on doc_id (the pipeline
+    cluster-split's hash — deterministic on any engine, unlike
+    ``hash()`` whose seed differs between Spark and DuckDB) and report
+    per-shard doc/token volumes plus each shard's token share in basis
+    points — the pre-write audit that catches a skewed shard before
+    10^5 writer tasks discover it the slow way.
+
+    100 TB: one map-side-combinable aggregate to N_SHARDS rows; the
+    share window runs over the N_SHARDS-row aggregate, not data. The
+    key is masked to 31 bits BEFORE the multiply (ADVICE r7), so the
+    LCG product is bounded below 2^62 at ANY doc_id — no silent int64
+    wrap in non-ANSI Spark, no overflow error in DuckDB."""
+    d = table(spark, sf_dir, "documents").select(
+        (((F.col("doc_id") % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345))
+         % F.lit(2147483648) % F.lit(N_SHARDS)).cast("bigint")
+        .alias("shard"),
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"))
+    s = d.groupBy("shard").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("n_tokens").cast("bigint").alias("shard_tokens"))
+    return (s.withColumn("total",
+                         F.sum("shard_tokens").over(Window.partitionBy()))
+            .select("shard", "n_docs", "shard_tokens",
+                    F.expr("CAST(10000L * shard_tokens DIV total AS BIGINT)")
+                    .alias("share_bp")))
+
+
+@register(
+    "e91_temperature_mixture",
+    oracle="""
+WITH lt AS (
+    SELECT lang,
+           CAST(sum(len(str_split(text, ' '))) AS BIGINT) AS lang_tokens
+    FROM documents GROUP BY lang
+), tot AS (
+    SELECT CAST(sum(lang_tokens) AS BIGINT) AS total,
+           list_reduce(list_sort(list(sqrt(lang_tokens))),
+                       (a, x) -> a + x) AS sum_r
+    FROM lt
+)
+SELECT lang, lang_tokens,
+       round(CAST(lang_tokens AS DOUBLE) / total, 6) AS share_6dp,
+       round(sqrt(lang_tokens) / sum_r, 6) AS temp_share_6dp,
+       round((sqrt(lang_tokens) / sum_r)
+             / (CAST(lang_tokens AS DOUBLE) / total), 6) AS boost_6dp
+FROM lt, tot
+""",
+    tags=("north-star", "llm-pipeline", "mixture", "sampling"),
+)
+def e91_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TEMPERATURE-SCALED mixture reweighting (the multilingual-sampling
+    rule: sample language i with probability ∝ share_i^α, α = 0.5): the
+    sub-linear exponent upsamples low-resource languages relative to
+    their raw token share — the standard fix for high-resource languages
+    drowning the mixture. e57 rebalances to an EQUAL target; this is the
+    smooth interpolation between natural (α=1) and equal (α=0).
+
+    Exactness: α = 0.5 means ``sqrt`` — IEEE-correctly-rounded on both
+    engines (algebraic, unlike the banned libm transcendentals), and
+    sqrt(lang_tokens) of an exact BIGINT is bit-identical. The one
+    cross-row float sum (Σ√tokens) is made order-deterministic by an
+    explicit left fold over the SORTED value list on BOTH engines (the
+    parity-rules fold discipline); final ratios round to 6 dp (the e48
+    cross-row rule).
+
+    100 TB: one map-side-combinable aggregate to n_langs rows; the fold
+    runs over an n_langs-sized array broadcast in a 1-row crossJoin."""
+    lt = (table(spark, sf_dir, "documents")
+          .groupBy("lang")
+          .agg(F.sum(F.size(tokens("text")).cast("bigint"))
+               .cast("bigint").alias("lang_tokens")))
+    tot = (lt.agg(F.sum("lang_tokens").cast("bigint").alias("total"),
+                  F.collect_list(F.sqrt("lang_tokens")).alias("rs"))
+           .select("total",
+                   F.aggregate(F.array_sort("rs"), F.lit(0.0),
+                               lambda a, x: a + x).alias("sum_r")))
+    return (lt.crossJoin(F.broadcast(tot))
+            .select("lang", "lang_tokens",
+                    F.round(F.col("lang_tokens").cast("double")
+                            / F.col("total"), 6).alias("share_6dp"),
+                    F.round(F.sqrt("lang_tokens") / F.col("sum_r"), 6)
+                    .alias("temp_share_6dp"),
+                    F.round((F.sqrt("lang_tokens") / F.col("sum_r"))
+                            / (F.col("lang_tokens").cast("double")
+                               / F.col("total")), 6).alias("boost_6dp")))
+
+
+@register(
+    "e95_chunk_stitch_roundtrip",
+    oracle="""
+SELECT doc_id, text AS stitched_text
+FROM documents
+WHERE trim(text) <> ''
+""",
+    tags=("north-star", "llm-pipeline", "chunking"),
+)
+def e95_chunk_stitch_roundtrip(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """CHUNK-STITCH round-trip — e23's inverse, with the ORIGINAL corpus
+    as the oracle: re-chunk every document into overlapping 128-token /
+    stride-64 windows (e23's exact geometry), then reconstruct each
+    document from its chunks alone — every chunk contributes its first
+    `stride` tokens, the LAST chunk contributes all of them — and the
+    result must equal the source text verbatim. Proves the chunk
+    family's invariant (overlapping chunks lose nothing) as a
+    hash-checked query instead of a code comment — any off-by-one in
+    either direction breaks the hash.
+
+    100 TB: one groupBy(doc_id) over chunk rows; per-group state is one
+    document's chunks (bounded by doc length, the same bound e23
+    already carries). The sort-then-flatten runs on the collected
+    per-doc array — driver sees nothing."""
+
+    d = (table(spark, sf_dir, "documents")
+         # Meaningful empty-doc exclusion, mirrored in the oracle's
+         # trim(text) <> ''. (A size(split(...)) > 0 guard would be
+         # vacuous: split always yields >= 1 element — r8 ADVICE.)
+         .filter(F.trim(F.col("text")) != "")
+         .select("doc_id", tokens("text").alias("__toks")))
+    t = F.col("__toks")
+    n_tok = F.size(t)
+    n_chunks = (F.floor((n_tok - 1) / CHUNK_STRIDE) + 1).cast("int")
+    chunks = F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.slice(t, i * CHUNK_STRIDE + 1, CHUNK_SIZE))
+    chunked = d.select(
+        "doc_id", F.posexplode(chunks).alias("chunk_id", "chunk"))
+    per_doc = (chunked.groupBy("doc_id")
+               .agg(F.sort_array(F.collect_list(
+                   F.struct("chunk_id", "chunk"))).alias("cs"))
+               # n_cs as a COLUMN, not an expression, so the stitch
+               # lambda's boundary test references it O(1) (the
+               # word_ngrams quadratic-re-evaluation rule).
+               .withColumn("n_cs", F.size("cs")))
+    pieces = F.transform(
+        F.col("cs"),
+        lambda c, i: F.when(i < F.col("n_cs") - 1,
+                            F.slice(c["chunk"], 1, CHUNK_STRIDE))
+        .otherwise(c["chunk"]))
+    return per_doc.select(
+        "doc_id",
+        F.concat_ws(" ", F.flatten(pieces)).alias("stitched_text"))
+
+
+#: bin capacity (tokens) for the packing stage — > CHUNK_SIZE so every
+#: chunk fits a bin, small enough that bins mix chunks of many docs
+PACK_CAPACITY = 512
+
+
+#: packing shards: bins are built per shard so the running-total window
+#: never globally orders the corpus (the d106 lesson)
+PACK_SHARDS = 4
+
+
+@register(
+    "e104_dedup_pack_stitch_roundtrip",
+    oracle="""
+SELECT doc_id, text AS reconstructed_text
+FROM documents
+WHERE trim(text) <> ''
+""",
+    tags=("north-star", "llm-pipeline", "dedup", "chunking", "packing",
+          "integration"),
+)
+def e104_dedup_pack_stitch_roundtrip(spark: SparkSession,
+                                     sf_dir: str) -> DataFrame:
+    """CURATE-AND-RECONSTRUCT round-trip — four chained E-family stages
+    run FORWARD (exact dedup → overlapping chunking → capacity-bounded
+    packing) then INVERTED (unpack → stitch → survivorship re-expansion),
+    graded against the strongest oracle shape in the repo: the original
+    corpus itself (`SELECT doc_id, text FROM documents`). Every
+    document's text must come back VERBATIM after riding the whole
+    pipeline, so the hash pins, at once:
+
+    - E1 dedup survivorship: canonical doc = min doc_id per EXACT text
+      (byte key, not the normalized key — normalization would collapse
+      case-variant docs and reconstruct the wrong bytes for members);
+      the member list is carried so the inverse can re-expand every
+      duplicate, not just the survivor.
+    - E23 chunk geometry: 128-token windows at stride 64 (e95's exact
+      machinery) — an off-by-one in either direction breaks the hash.
+    - E51-family packing losslessness: chunks are assigned to
+      capacity-bounded bins by a per-shard running-token-total window
+      (the WINDOW-expressible budget partitioning of the packing
+      family — e51's true greedy reset fold is the Arrow path; this
+      composition stays JVM-pure end to end) and materialized as bin
+      rows. A chunk dropped, duplicated, or torn by the pack/unpack
+      breaks the hash.
+    - e95 stitch arithmetic: every chunk contributes its first `stride`
+      tokens, the last chunk all of them.
+
+    100 TB: the dedup exchange carries each DISTINCT text once (e1's
+    economics; key by the 64-bit fingerprint in production — e36);
+    the pack window orders within shards, never globally (d106's rule);
+    per-bin state is capacity-bounded, per-doc stitch state is bounded
+    by doc length (e95's bound); the re-expansion is a hash equi-join
+    on canon_id. No Python boundary anywhere — born clean under the
+    registry-wide scale audit."""
+
+    from pyspark_ml_features_spark.plans.audit import probe_checkpoint
+
+    d = (table(spark, sf_dir, "documents")
+         .filter(F.trim(F.col("text")) != "")
+         .select("doc_id", "text"))
+
+    # 1. EXACT dedup, one shuffle: survivor + member list per distinct
+    # text (collect_list bounded by duplicate multiplicity). The dedup
+    # result feeds BOTH the chunk pipeline and the member re-expansion —
+    # materialize it ONCE (AQE does not reuse identical exchange
+    # subtrees across plan branches, the round-6 e81 finding; without
+    # the checkpoint the corpus scans and the dedup shuffle run twice).
+    canon = probe_checkpoint(
+        d.groupBy("text")
+        .agg(F.min("doc_id").alias("canon_id"),
+             F.collect_list("doc_id").alias("member_ids")),
+        "e104.canon")
+
+    # 2. CHUNK the survivors (e23/e95 geometry).
+    surv = canon.select("canon_id", tokens("text").alias("__toks"))
+    t = F.col("__toks")
+    n_chunks = (F.floor((F.size(t) - 1) / CHUNK_STRIDE) + 1).cast("int")
+    chunks = F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.slice(t, i * CHUNK_STRIDE + 1, CHUNK_SIZE))
+    chunked = surv.select(
+        "canon_id", F.posexplode(chunks).alias("chunk_id", "chunk"))
+
+    # 3. PACK chunks into bins: per-shard running token total → bin id.
+    # Bin rows are real materialized containers (collect_list), so the
+    # inverse genuinely has to unpack them.
+    w = (Window.partitionBy("shard")
+         .orderBy("canon_id", "chunk_id")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    packed = (chunked
+              .withColumn("shard", F.pmod(F.col("canon_id"),
+                                          F.lit(PACK_SHARDS)))
+              .withColumn("__n", F.size("chunk").cast("bigint"))
+              .withColumn("bin_id",
+                          F.floor((F.sum("__n").over(w) - F.col("__n"))
+                                  / PACK_CAPACITY))
+              .groupBy("shard", "bin_id")
+              .agg(F.collect_list(
+                  F.struct("canon_id", "chunk_id", "chunk"))
+                  .alias("items")))
+
+    # 4. INVERSE — unpack bins, stitch per survivor (e95's arithmetic).
+    unpacked = packed.select(F.explode("items").alias("it")).select(
+        F.col("it.canon_id").alias("canon_id"),
+        F.col("it.chunk_id").alias("chunk_id"),
+        F.col("it.chunk").alias("chunk"))
+    per_doc = (unpacked.groupBy("canon_id")
+               .agg(F.sort_array(F.collect_list(
+                   F.struct("chunk_id", "chunk"))).alias("cs"))
+               .withColumn("n_cs", F.size("cs")))
+    pieces = F.transform(
+        F.col("cs"),
+        lambda c, i: F.when(i < F.col("n_cs") - 1,
+                            F.slice(c["chunk"], 1, CHUNK_STRIDE))
+        .otherwise(c["chunk"]))
+    stitched = per_doc.select(
+        "canon_id", F.concat_ws(" ", F.flatten(pieces)).alias("stitched"))
+
+    # 5. Survivorship re-expansion: every member doc gets its text back.
+    members = canon.select("canon_id",
+                           F.explode("member_ids").alias("doc_id"))
+    return (members.join(stitched, "canon_id")
+            .select("doc_id", F.col("stitched").alias("reconstructed_text")))
+
+
+@register(
+    "e105_vocab_encode_decode_roundtrip",
+    oracle="""
+SELECT doc_id, coalesce(text, '') AS decoded_text
+FROM documents
+""",
+    tags=("north-star", "llm-pipeline", "tokenization", "vocab",
+          "integration"),
+)
+def e105_vocab_encode_decode_roundtrip(spark: SparkSession,
+                                       sf_dir: str) -> DataFrame:
+    """TOKENIZER round-trip — the e18/e24 vocabulary pipeline run FORWARD
+    (corpus → frequency-ranked vocab → per-token id encoding, the exact
+    materialized form a training dataloader consumes) then INVERTED
+    (id → token decode through the same vocab → positional reassembly),
+    graded against the whole corpus verbatim (`SELECT doc_id,
+    coalesce(text, '') FROM documents` — no filter: empty/
+    whitespace-only docs round-trip too, since `split` keeps empty
+    tokens and `concat_ws(' ')` re-emits them; NULL text is coalesced
+    to '' on BOTH sides since r11 — ADVICE r10: posexplode of
+    split(NULL) yields no rows, which would silently drop a NULL-text
+    doc the bare oracle kept). The hash pins, at once:
+
+    - e18 vocab construction: every corpus token present exactly once
+      with a unique dense id (a dropped token = OOV hole = missing text;
+      a duplicated id = wrong decode somewhere).
+    - e24 encoding: (doc_id, pos, token_id) is a faithful positional
+      encoding — any pos slip or id mismatch reassembles wrong bytes.
+    - decode bijectivity: the id→token map inverts the token→id map.
+
+    100 TB: the vocab is vocabulary-bounded after map-side partial
+    counts and BROADCAST to both the encode and decode joins, so the
+    corpus never shuffles for either direction; the one corpus-keyed
+    exchange is the per-doc reassembly groupBy. The vocab lineage is
+    materialized ONCE (probe_checkpoint) because it feeds two plan
+    branches and AQE does not reuse cross-branch exchanges (the e81
+    finding). Decode state per doc is bounded by doc length (e95's
+    bound). JVM-pure end to end."""
+    from pyspark_ml_features_spark.plans.audit import probe_checkpoint
+
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text"))
+
+    # 1. VOCAB — the SHARED e18 id assignment (token -> dense id by
+    # (freq desc, token asc); see packing.vocab_with_ids — one
+    # definition for e18/e24/e105, so the exact arithmetic five oracles
+    # depend on cannot desynchronize). The ranking window runs over the
+    # vocab table, never the corpus; checkpointed once for the two
+    # consumer joins.
+    vocab = probe_checkpoint(
+        vocab_with_ids(d).select("token", "token_id"), "e105.vocab")
+
+    # 2. ENCODE (e24): corpus stays map-only, vocab broadcast.
+    encoded = (d.select("doc_id",
+                        F.posexplode(tokens("text")).alias("pos", "token"))
+               .join(F.broadcast(vocab), "token")
+               .select("doc_id", "pos", "token_id"))
+
+    # 3. DECODE: ids back to tokens through the SAME vocab (broadcast),
+    # then positional reassembly per doc.
+    decoded = encoded.join(
+        F.broadcast(vocab.select("token_id",
+                                 F.col("token").alias("__tok"))),
+        "token_id")
+    return (decoded.groupBy("doc_id")
+            .agg(F.array_sort(F.collect_list(
+                F.struct("pos", "__tok"))).alias("ps"))
+            .select("doc_id",
+                    F.concat_ws(" ", F.transform(
+                        F.col("ps"), lambda s: s["__tok"]))
+                    .alias("decoded_text")))

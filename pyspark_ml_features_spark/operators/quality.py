@@ -1,7 +1,9 @@
-"""Pipeline quality measurement: precision/recall of the approximate dedup
-path against exact ground truth — the audit every production near-dedup
-deployment runs before trusting its banded-LSH geometry (C4/GPT-3-style
-pipelines tune bands/rows against exactly this confusion table).
+"""Quality family: decontamination, quality filters and their chain audit,
+data-quality audits and QA samples, and pipeline quality measurement —
+precision/recall of the approximate dedup path against exact ground truth,
+the audit every production near-dedup deployment runs before trusting its
+banded-LSH geometry (C4/GPT-3-style pipelines tune bands/rows against
+exactly this confusion table).
 
 The whole report is exactly SQL-expressible because e33's MinHash is
 engine-exact integer arithmetic: candidates AND ground truth AND the
@@ -25,12 +27,21 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pyspark_ml_features_spark.functions.text import (
+    STOPWORDS,
+    tokens,
+    word_ngrams,
+)
 from pyspark_ml_features_spark.operators.dedup import (
     _duckdb_minhash_ctes,
     jaccard_pairs,
     minhash_candidate_pairs,
     numeric_shingles,
     token_hash_arrays,
+)
+from pyspark_ml_features_spark.operators.textops import (
+    _GOPHER_STOP_SQL,
+    GOPHER_STOPWORDS,
 )
 from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import table
@@ -412,7 +423,7 @@ def e70_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one range shuffle + one metadata collect; the budget cut is
     then a partition-local filter. The same scan primitive serves
     quota-by-quality curricula and size-capped shard assembly."""
-    from pyspark_ml_features_spark.operators.relational6 import (
+    from pyspark_ml_features_spark.operators.relational import (
         distributed_prefix_sum,
     )
 
@@ -645,7 +656,7 @@ def e79_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes replays the checkpoint/total from construction time rather
     than re-deriving them. Rebuild (call the function again) to pick up
     new data."""
-    from pyspark_ml_features_spark.operators.relational6 import (
+    from pyspark_ml_features_spark.operators.relational import (
         distributed_prefix_sum,
     )
 
@@ -706,7 +717,7 @@ def e81_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     new snapshot — topic or template drift shows up as a few tokens with
     huge contributions; Σ contrib_nano / 10^9 is the test statistic.
 
-    Arithmetic is d116's exact integer pattern (experiments.py): every
+    Arithmetic is d116's exact integer pattern (relational.py): every
     multi-term product casts to DECIMAL(38,0) / HUGEINT BEFORE
     multiplying, expected counts in micro-units, contributions in
     nano-units — engine-exact, no float χ² in sight. The contingency
@@ -771,3 +782,629 @@ def e81_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                " ELSE CAST((num * num * 1000000000L)"
                " DIV (CAST(row_tot AS DECIMAL(38,0)) * col_tot * grand)"
                " AS BIGINT) END").alias("contrib_nano"))
+
+
+@register(
+    "e86_length_band_trim",
+    oracle="""
+WITH t AS (
+    SELECT doc_id, lang,
+           CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens
+    FROM documents
+), b AS (
+    SELECT lang, quantile_cont(n_tokens, 0.05) AS lo_p05,
+           quantile_cont(n_tokens, 0.95) AS hi_p95
+    FROM t GROUP BY lang
+)
+SELECT doc_id, t.lang, n_tokens, lo_p05, hi_p95,
+       CAST(n_tokens >= lo_p05 AND n_tokens <= hi_p95 AS BIGINT) AS keep
+FROM t JOIN b ON t.lang = b.lang
+""",
+    tags=("north-star", "llm-pipeline", "quality", "quantile"),
+)
+def e86_length_band_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PER-LANGUAGE LENGTH-BAND trimming (winsorize-style curation): flag
+    every document outside its language's [p5, p95] token-count band —
+    the standard "drop the pathologically short/long tail" filter run
+    per language because length distributions differ across languages.
+
+    Exact interior-interpolation percentile (Spark ``percentile`` ≡
+    DuckDB ``quantile_cont``, bit-match probed in d51); the per-lang
+    band table is langs-sized and BROADCASTS back onto the corpus.
+
+    100 TB: one hash aggregate to the per-lang bands (exact percentile
+    buffers per-lang values — at corpus scale swap in approxQuantile
+    exactly like b6→b6b; the band JOIN-BACK shape is unchanged), then a
+    broadcast join + per-row codegen flag. No second corpus shuffle."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang",
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"))
+    bands = d.groupBy("lang").agg(
+        F.percentile("n_tokens", F.lit(0.05)).alias("lo_p05"),
+        F.percentile("n_tokens", F.lit(0.95)).alias("hi_p95"))
+    return (d.join(F.broadcast(bands), "lang")
+            .select("doc_id", "lang", "n_tokens", "lo_p05", "hi_p95",
+                    ((F.col("n_tokens") >= F.col("lo_p05"))
+                     & (F.col("n_tokens") <= F.col("hi_p95")))
+                    .cast("bigint").alias("keep")))
+
+
+@register(
+    "e88_ngram_novelty",
+    oracle="""
+WITH t AS (
+    SELECT doc_id, str_split(text, ' ') AS tok FROM documents
+), sh AS (
+    SELECT doc_id,
+           list_distinct(CASE WHEN len(tok) >= 3 THEN list_transform(
+               range(1, len(tok) - 1),
+               i -> tok[i] || ' ' || tok[i+1] || ' ' || tok[i+2])
+           ELSE [] END) AS shingles
+    FROM t
+), ref AS (
+    SELECT DISTINCT unnest(shingles) AS shingle FROM sh
+    WHERE doc_id % 5 = 0
+), corpus AS (
+    SELECT doc_id, unnest(shingles) AS shingle FROM sh
+    WHERE doc_id % 5 <> 0
+)
+SELECT c.doc_id,
+       CAST(count(*) AS BIGINT) AS n_shingles,
+       CAST(count(*) FILTER (WHERE r.shingle IS NULL) AS BIGINT) AS n_novel,
+       CAST(10000 * count(*) FILTER (WHERE r.shingle IS NULL) // count(*)
+            AS BIGINT) AS novelty_bp
+FROM corpus c LEFT JOIN ref r ON c.shingle = r.shingle
+GROUP BY c.doc_id
+""",
+    tags=("north-star", "llm-pipeline", "decontamination", "novelty"),
+)
+def e88_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """N-GRAM NOVELTY score — the inverse of e55's contamination rule:
+    for every corpus document, the share of its DISTINCT 3-gram
+    shingles that do NOT appear anywhere in the reference slice
+    (doc_id % 5 = 0, the e27/e52/e55 benchmark convention). Curation
+    ranks by novelty to prefer documents that add new content over ones
+    that paraphrase what the corpus already holds.
+
+    Docs with fewer than 3 tokens have no shingles and drop out of the
+    explode on both engines (the d72 empty-unnest rule). Fixed-point
+    ratio via 10000L × novel DIV total.
+
+    100 TB: the reference shingle set is eval-slice-sized and
+    BROADCASTS (same posture as e55's decontamination); the corpus side
+    is one explode + one hash aggregate on doc_id — no corpus-×-corpus
+    join anywhere."""
+    # Token array materialized before the gram lambda (word_ngrams'
+    # quadratic-re-evaluation rule; the n<3 guard lives in word_ngrams).
+    sh = (table(spark, sf_dir, "documents")
+          .select("doc_id", tokens("text").alias("__toks"))
+          .select("doc_id",
+                  F.array_distinct(word_ngrams("__toks", 3)).alias("sh")))
+    ref = (sh.filter(F.col("doc_id") % 5 == 0)
+           .select(F.explode("sh").alias("shingle")).distinct()
+           .withColumn("hit", F.lit(1)))
+    corpus = (sh.filter(F.col("doc_id") % 5 != 0)
+              .select("doc_id", F.explode("sh").alias("shingle")))
+    return (corpus.join(F.broadcast(ref), "shingle", "left")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
+                 F.count_if(F.col("hit").isNull()).cast("bigint")
+                 .alias("n_novel"))
+            .select("doc_id", "n_shingles", "n_novel",
+                    F.expr("CAST(10000L * n_novel DIV n_shingles AS BIGINT)")
+                    .alias("novelty_bp")))
+
+
+@register(
+    "e93_quality_decile_dup_rate",
+    oracle="""
+WITH m AS (
+    SELECT doc_id, lower(trim(text)) AS k,
+           0.3 * (len(list_distinct(str_split(text, ' ')))::DOUBLE
+                  / len(str_split(text, ' ')))
+         + 0.3 * (1.0 - len(list_filter(str_split(text, ' '),
+               t -> list_contains(['the', 'a', 'of', 'and', 'is'], t)
+               ))::DOUBLE / len(str_split(text, ' ')))
+         + 0.4 * least((list_sum(list_transform(str_split(text, ' '),
+               t -> length(t)))::DOUBLE / len(str_split(text, ' ')))
+               / 10.0, 1.0) AS q
+    FROM documents
+), dup AS (
+    SELECT k, count(*) AS members FROM m GROUP BY k
+), rk AS (
+    SELECT m.doc_id, m.q, dup.members,
+           row_number() OVER (ORDER BY m.q, m.doc_id) AS rn,
+           count(*) OVER () AS n
+    FROM m JOIN dup ON m.k = dup.k
+)
+SELECT CAST((rn - 1) * 10 // n AS BIGINT) AS decile,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(count(*) FILTER (WHERE members >= 2) AS BIGINT) AS n_dup_docs,
+       CAST(10000 * count(*) FILTER (WHERE members >= 2) // count(*)
+            AS BIGINT) AS dup_bp
+FROM rk GROUP BY 1
+""",
+    tags=("north-star", "llm-pipeline", "quality", "dedup", "analytics"),
+)
+def e93_quality_decile_dup_rate(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    """QUALITY × DUPLICATION interaction — the curation-analytics question
+    behind every filtering threshold: are low-quality documents also the
+    duplicated ones? Score each doc with t2's exact quality formula,
+    rank the corpus into quality deciles, and report the exact-dup rate
+    (e1's normalized-text multiplicity ≥ 2) per decile. A monotone
+    dup_bp column tells the curator one threshold removes both
+    pathologies at once; a flat one says dedup and quality filtering
+    are independent passes.
+
+    The decile comes from the round-7 window-free ranking primitive
+    (decile = (grk−1)·10 DIV n — a SINGLE-partition ntile would funnel
+    the corpus into one task), mirrored in the oracle by the
+    single-partition window it replaces. Ordering ties break on doc_id;
+    the quality double is bit-identical cross-engine (t2's fixed
+    evaluation order), so rank order is too.
+
+    100 TB: t2's map-side score + e1's hash-agg multiplicity + one
+    range shuffle for the ranking + a 10-row aggregate."""
+    from pyspark_ml_features_spark.functions.text import STOPWORDS
+    from pyspark_ml_features_spark.operators.relational import (
+        distributed_row_number,
+    )
+
+    d = table(spark, sf_dir, "documents")
+    toks = tokens("text")
+    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
+    n_tokens = F.size(toks).cast("double")
+    q = (F.lit(0.3) * (F.size(F.array_distinct(toks)).cast("double")
+                       / n_tokens)
+         + F.lit(0.3) * (F.lit(1.0) - F.size(
+             F.filter(toks, lambda t: F.array_contains(stop_arr, t))
+         ).cast("double") / n_tokens)
+         + F.lit(0.4) * F.least(
+             F.aggregate(toks, F.lit(0).cast("bigint"),
+                         lambda a, t: a + F.length(t)).cast("double")
+             / n_tokens / 10.0, F.lit(1.0)))
+    m = d.select("doc_id", F.lower(F.trim("text")).alias("k"),
+                 q.alias("q"))
+    dup = m.groupBy("k").agg(F.count(F.lit(1)).alias("members"))
+    scored = m.join(dup, "k").select("doc_id", "q", "members")
+    ranked = distributed_row_number(scored, ["q", "doc_id"], 16)
+    n = scored.count()
+    return (ranked
+            .withColumn("decile",
+                        F.expr(f"CAST((grk - 1) * 10 DIV {n} AS BIGINT)"))
+            .groupBy("decile")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                 F.count_if(F.col("members") >= 2).cast("bigint")
+                 .alias("n_dup_docs"))
+            .select("decile", "n_docs", "n_dup_docs",
+                    F.expr("CAST(10000L * n_dup_docs DIV n_docs AS BIGINT)")
+                    .alias("dup_bp")))
+
+
+QA_PACK_PER_CELL = 3
+
+
+@register(
+    "e97_qa_sample_pack",
+    oracle=f"""
+WITH m AS (
+    SELECT doc_id, lang,
+           len(str_split(text, ' '))::DOUBLE AS n_tokens,
+           len(list_distinct(str_split(text, ' ')))::DOUBLE AS n_distinct,
+           len(list_filter(str_split(text, ' '),
+               t -> list_contains({list(STOPWORDS)}, t)
+               ))::DOUBLE AS n_stop,
+           list_sum(list_transform(str_split(text, ' '),
+                                   t -> length(t)))::DOUBLE AS total_chars
+    FROM documents
+), scored AS (
+    SELECT doc_id, lang,
+           0.3 * (n_distinct / n_tokens)
+             + 0.3 * (1.0 - n_stop / n_tokens)
+             + 0.4 * least((total_chars / n_tokens) / 10.0, 1.0)
+               AS quality_score
+    FROM m
+), banded AS (
+    SELECT doc_id, lang, quality_score,
+           CAST(least(floor(quality_score * 5), 4) AS BIGINT) AS band
+    FROM scored
+), ranked AS (
+    SELECT doc_id, lang, band, quality_score,
+           row_number() OVER (
+               PARTITION BY lang, band
+               ORDER BY ((doc_id % 2147483648) * 1103515245 + 12345)
+                        % 2147483648, doc_id) AS rn
+    FROM banded
+)
+SELECT doc_id, lang, band, quality_score
+FROM ranked WHERE rn <= {QA_PACK_PER_CELL}
+""",
+    tags=("north-star", "llm-pipeline", "stewardship", "sampling"),
+)
+def e97_qa_sample_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HUMAN-QA SAMPLE PACK: a deterministic {QA_PACK_PER_CELL}-doc
+    sample from every (language × quality band) cell — what a data
+    steward actually reads before shipping a corpus revision. Quality
+    is t2's exact score; bands are FIXED arithmetic thresholds
+    (floor(score×5), clamped) rather than ntile deciles, so band
+    assignment is scan-side per-row work with no global sort (e93's
+    ranking primitive covers the decile form); the in-cell sample
+    order is the portable LCG, so the same doc_ids come back on every
+    engine and every run.
+
+    100 TB: one window per (lang, band) cell — Spark's WindowGroupLimit
+    pushes the rn <= k filter into the sort (d10's shape), so each
+    task keeps k rows per cell, never the cell's full contents."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", tokens("text").alias("__toks"))
+    toks = F.col("__toks")
+    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
+    n_tokens = F.size(toks).cast("double")
+    n_distinct = F.size(F.array_distinct(toks)).cast("double")
+    n_stop = F.size(F.filter(
+        toks, lambda t: F.array_contains(stop_arr, t))).cast("double")
+    total_chars = F.aggregate(
+        toks, F.lit(0).cast("bigint"),
+        lambda acc, t: acc + F.length(t)).cast("double")
+    score = (F.lit(0.3) * (n_distinct / n_tokens)
+             + F.lit(0.3) * (F.lit(1.0) - n_stop / n_tokens)
+             + F.lit(0.4) * F.least((total_chars / n_tokens) / F.lit(10.0),
+                                    F.lit(1.0)))
+    banded = d.select(
+        "doc_id", "lang", score.alias("quality_score"),
+        F.least(F.floor(score * 5), F.lit(4)).cast("bigint").alias("band"))
+    lcg = ((F.col("doc_id") % F.lit(2147483648)) * F.lit(1103515245)
+           + F.lit(12345)) % F.lit(2147483648)
+    w = Window.partitionBy("lang", "band").orderBy(lcg.asc(), "doc_id")
+    return (banded.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= QA_PACK_PER_CELL)
+            .select("doc_id", "lang", "band", "quality_score"))
+
+
+@register(
+    "d142_observed_quality_metrics",
+    oracle="""
+SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS price_cents
+FROM orders
+GROUP BY o_orderpriority
+""",
+    tags=("engine", "observability", "spark4"),
+)
+def d142_observed_quality_metrics(spark: SparkSession,
+                                  sf_dir: str) -> DataFrame:
+    """Observation API: data-quality counters (row count, null count,
+    total cents) piggybacked on the SAME job as the business aggregate
+    via ``df.observe`` — zero extra passes over the data, the
+    production alternative to running a second validation query (which
+    at 100 TB doubles the scan bill). The observe node is a pass-
+    through for the result (the oracle is the plain aggregate);
+    tests/test_invariants.py collects the observed metrics and pins
+    them against the result itself."""
+    import uuid
+
+    from pyspark.sql import Observation
+
+    o = table(spark, sf_dir, "orders")
+    # uuid suffix, not id(): CPython reuses id() values after GC, so two
+    # executions in one session could collide on the CollectMetrics name.
+    obs = Observation(f"d142_quality_{uuid.uuid4().hex}")
+    observed = o.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_if(F.col("o_totalprice").isNull()).alias("n_null_price"),
+        F.sum(F.floor(F.col("o_totalprice") * 100).cast("bigint"))
+        .alias("total_cents"))
+    return (observed.groupBy("o_orderpriority")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
+                 F.sum(F.floor(F.col("o_totalprice") * 100).cast("bigint"))
+                 .cast("bigint").alias("price_cents")))
+
+
+@register(
+    "e108_quality_filter_chain_audit",
+    oracle=f"""
+WITH d AS (
+    SELECT doc_id, lang, coalesce(text, '') AS text, n_chars
+    FROM documents
+), g AS (
+    SELECT doc_id, lang, text, n_chars,
+           CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens_raw,
+           CAST(len(list_filter(str_split(text, ' '), t -> t <> ''))
+                AS BIGINT) AS n_words,
+           CASE WHEN len(list_filter(str_split(text, ' '),
+                                     t -> t <> '')) >= 1 THEN
+               round(list_sum(list_transform(
+                         list_filter(str_split(text, ' '), t -> t <> ''),
+                         t -> length(t)))
+                     / len(list_filter(str_split(text, ' '),
+                                       t -> t <> '')), 6) END AS mwl,
+           CASE WHEN len(list_filter(str_split(text, ' '),
+                                     t -> t <> '')) >= 1 THEN
+               round(len(list_filter(str_split(text, ' '),
+                         t -> regexp_matches(t, '[a-z]')))
+                     / len(list_filter(str_split(text, ' '),
+                                       t -> t <> '')), 6) END AS fa,
+           CAST(len(list_intersect(
+                    list_distinct(list_filter(str_split(text, ' '),
+                                              t -> t <> '')),
+                    {_GOPHER_STOP_SQL}))
+                AS BIGINT) AS ns
+    FROM d
+), gk AS (
+    SELECT *, (n_words >= 50 AND n_words <= 100000
+               AND mwl >= 3 AND mwl <= 10
+               AND fa >= 0.8 AND ns >= 2) AS gopher_keep
+    FROM g
+), bands AS (
+    SELECT lang, quantile_cont(n_tokens_raw, 0.05) AS lo_p05,
+           quantile_cont(n_tokens_raw, 0.95) AS hi_p95
+    FROM gk WHERE gopher_keep GROUP BY lang
+), lk AS (
+    SELECT gk.*,
+           (gopher_keep AND coalesce(n_tokens_raw >= lo_p05
+                                     AND n_tokens_raw <= hi_p95, FALSE))
+               AS len_keep
+    FROM gk LEFT JOIN bands ON gk.lang = bands.lang
+), surv AS (
+    SELECT nt, doc_id AS surviving_doc FROM (
+        SELECT lower(trim(text)) AS nt, doc_id,
+               row_number() OVER (PARTITION BY lower(trim(text))
+                                  ORDER BY n_chars DESC, doc_id ASC)
+                   AS rk
+        FROM lk WHERE len_keep)
+    WHERE rk = 1
+)
+SELECT lk.doc_id,
+       CASE WHEN NOT gopher_keep THEN 'gopher_reject'
+            WHEN NOT len_keep THEN 'length_reject'
+            WHEN lk.doc_id = s.surviving_doc THEN 'kept'
+            ELSE 'dup_reject' END AS stage,
+       CAST(coalesce(CASE WHEN len_keep THEN s.surviving_doc END, -1)
+            AS BIGINT) AS surviving_doc
+FROM lk LEFT JOIN surv s ON lower(trim(lk.text)) = s.nt
+""",
+    tags=("north-star", "llm-pipeline", "quality", "dedup",
+          "integration"),
+)
+def e108_quality_filter_chain_audit(spark: SparkSession,
+                                    sf_dir: str) -> DataFrame:
+    """QUALITY-FILTER CHAIN with a full-corpus DISPOSITION AUDIT — the
+    three graded curation stages run as one pipeline, in pipeline order:
+
+    1. t16's Gopher rule bundle (word-count bounds, mean word length,
+       alpha-word fraction, stopword hits) rejects raw junk;
+    2. e86's per-language [p5, p95] length band — recomputed over the
+       GOPHER SURVIVORS, which is what makes this a true chain rather
+       than three independent flags: the band thresholds themselves
+       depend on stage 1's output;
+    3. e34's quality-aware exact dedup (keep longest, ties to lowest
+       doc_id) elects one survivor per normalized-text group among the
+       stage-2 survivors.
+
+    The output is the AUDIT every production curation run must be able
+    to produce: EVERY corpus document exactly once, labeled with the
+    first stage that rejected it ('gopher_reject' → 'length_reject' →
+    'dup_reject') or 'kept', plus the surviving doc of its content
+    group when it reached dedup (-1 sentinel otherwise, keeping the
+    column BIGINT across engines). The oracle replays the identical
+    chain in DuckDB, so the hash pins the corpus-partition property
+    (sum of stage counts == corpus count, no doc dropped or
+    double-counted) AND per-doc attribution — a band computed over the
+    wrong survivor set, a flag flipped by rounding drift, or a dedup
+    tie broken differently each moves at least one doc across stages
+    and breaks it. NULL text coalesces to '' on both sides (the e105
+    rule).
+
+    100 TB: stage 1 is per-row codegen, no shuffle; stage 2 is one
+    langs-sized aggregate (exact percentile here; approxQuantile at
+    corpus scale, b6→b6b's documented swap) broadcast back; stage 3
+    is ONE shuffle on the normalized-text key (or its fingerprint,
+    e34's note) plus the survivor join on the same key — the audit
+    costs the same two corpus shuffles the bare dedup does.
+
+    Cites: textops.py:t16_gopher_rules, quality.py:e86_length_band_trim,
+    dedup.py:e34_quality_dedup."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang",
+        F.coalesce(F.col("text"), F.lit("")).alias("text"), "n_chars")
+    toks = F.filter(tokens("text"), lambda t: t != "")
+    stop = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
+    g = d.select(
+        "doc_id", "lang", "text", "n_chars",
+        F.size(tokens("text")).cast("bigint").alias("n_tokens_raw"),
+        F.size(toks).cast("bigint").alias("n_words"),
+        F.when(F.size(toks) >= 1,
+               F.round(F.aggregate(toks, F.lit(0).cast("bigint"),
+                                   lambda a, t: a + F.length(t))
+                       / F.size(toks), 6)).alias("mwl"),
+        F.when(F.size(toks) >= 1,
+               F.round(F.size(F.filter(toks,
+                                       lambda t: t.rlike("[a-z]")))
+                       / F.size(toks), 6)).alias("fa"),
+        F.size(F.array_intersect(F.array_distinct(toks), stop))
+        .cast("bigint").alias("ns"))
+    gk = g.withColumn(
+        "gopher_keep",
+        (F.col("n_words") >= 50) & (F.col("n_words") <= 100000)
+        & (F.col("mwl") >= 3) & (F.col("mwl") <= 10)
+        & (F.col("fa") >= 0.8) & (F.col("ns") >= 2))
+    bands = (gk.filter("gopher_keep").groupBy("lang")
+             .agg(F.percentile("n_tokens_raw", F.lit(0.05))
+                  .alias("lo_p05"),
+                  F.percentile("n_tokens_raw", F.lit(0.95))
+                  .alias("hi_p95")))
+    # the band comparison coalesces to FALSE so len_keep is never NULL:
+    # a Gopher-passing doc whose lang has no band row (NULL lang, or a
+    # lang with zero survivors) is a LENGTH reject — without the
+    # coalesce, three-valued logic would skip the `WHEN NOT len_keep`
+    # arm and mislabel it 'dup_reject' (r11 review finding; both
+    # engines replay the same coalesce so the semantics, not just the
+    # hash, are right)
+    lk = (gk.join(F.broadcast(bands), "lang", "left")
+          .withColumn("len_keep",
+                      F.col("gopher_keep")
+                      & F.coalesce(
+                          (F.col("n_tokens_raw") >= F.col("lo_p05"))
+                          & (F.col("n_tokens_raw") <= F.col("hi_p95")),
+                          F.lit(False)))
+          .withColumn("nt", F.lower(F.trim(F.col("text")))))
+    # the flagged corpus feeds TWO branches (survivor election + the
+    # final disposition join) and AQE does not reuse cross-branch
+    # exchanges (the e81 finding) — materialize once; the
+    # pre-truncation lineage joins the fixpoint-internal plan ratchet
+    from pyspark_ml_features_spark.plans.audit import probe_checkpoint
+
+    lk = probe_checkpoint(lk, "e108.flags")
+    # e34's struct-max survivor election: argmax(n_chars, then min
+    # doc_id) in one map-side-combinable aggregate — no window
+    surv = (lk.filter("len_keep").groupBy("nt")
+            .agg(F.max(F.struct(F.col("n_chars"),
+                                (-F.col("doc_id")).alias("neg")))
+                 .alias("best"))
+            .select("nt", (-F.col("best.neg")).alias("surviving_doc")))
+    out = lk.join(surv, "nt", "left")
+    return out.select(
+        "doc_id",
+        F.when(~F.col("gopher_keep"), F.lit("gopher_reject"))
+        .when(~F.col("len_keep"), F.lit("length_reject"))
+        .when(F.col("doc_id") == F.col("surviving_doc"), F.lit("kept"))
+        .otherwise(F.lit("dup_reject")).alias("stage"),
+        F.coalesce(F.when(F.col("len_keep"), F.col("surviving_doc")),
+                   F.lit(-1)).cast("bigint").alias("surviving_doc"))
+
+
+def _e110_oracle() -> str:
+    from pyspark_ml_features_spark.functions.text import duckdb_rolling_hash
+    from pyspark_ml_features_spark.operators.packing import GREEDY_PACK_CAP
+
+    h = duckdb_rolling_hash("coalesce(text, '')")
+    pos_rows = "\n    UNION ALL\n".join(
+        f"    SELECT doc_id, (h * {p} + {q}) % {BLOOM_M} AS pos FROM hashed"
+        for p, q in BLOOM_FNS)
+    return f"""
+WITH RECURSIVE hashed AS (
+    SELECT doc_id, text, {h} AS h FROM documents
+), pos AS (
+{pos_rows}
+), bloom AS (
+    SELECT DISTINCT pos FROM pos WHERE doc_id % 5 = 0
+), corpus_pos AS (
+    SELECT DISTINCT doc_id, pos FROM pos WHERE doc_id % 5 <> 0
+), hits AS (
+    SELECT c.doc_id, count(*) AS n_pos, count(b.pos) AS n_hit
+    FROM corpus_pos c LEFT JOIN bloom b ON c.pos = b.pos
+    GROUP BY c.doc_id
+), flags AS (
+    SELECT d.doc_id, d.lang, d.doc_id % 4 AS shard,
+           CAST(len(string_split(coalesce(d.text, ''), ' ')) AS BIGINT)
+               AS n_tokens,
+           CAST(h.n_hit = h.n_pos AS BIGINT) AS contaminated
+    FROM documents d JOIN hits h ON d.doc_id = h.doc_id
+    WHERE d.doc_id % 5 <> 0
+), docs AS (
+    SELECT lang, shard, doc_id, n_tokens,
+           row_number() OVER (PARTITION BY lang, shard
+                              ORDER BY doc_id) AS rn
+    FROM flags WHERE contaminated = 0
+), pack AS (
+    SELECT lang, shard, doc_id, n_tokens, rn,
+           CAST(1 AS BIGINT) AS bin_id, n_tokens AS fill
+    FROM docs WHERE rn = 1
+    UNION ALL
+    SELECT d.lang, d.shard, d.doc_id, d.n_tokens, d.rn,
+           CASE WHEN p.fill + d.n_tokens > {GREEDY_PACK_CAP}
+                THEN p.bin_id + 1 ELSE p.bin_id END,
+           CASE WHEN p.fill + d.n_tokens > {GREEDY_PACK_CAP}
+                THEN d.n_tokens ELSE p.fill + d.n_tokens END
+    FROM pack p JOIN docs d ON d.lang = p.lang AND d.shard = p.shard
+                           AND d.rn = p.rn + 1
+)
+SELECT f.doc_id, f.lang, f.shard, f.n_tokens, f.contaminated,
+       CAST(coalesce(p.bin_id, -1) AS BIGINT) AS bin_id
+FROM flags f LEFT JOIN pack p ON f.doc_id = p.doc_id
+"""
+
+
+@register(
+    "e110_decontam_pack_audit",
+    oracle=_e110_oracle(),
+    tags=("north-star", "llm-pipeline", "decontamination", "packing",
+          "integration"),
+)
+def e110_decontam_pack_audit(spark: SparkSession,
+                             sf_dir: str) -> DataFrame:
+    """DECONTAMINATE → PACK chain with a full-corpus audit (the r12-plan
+    composition pulled forward): e52's Bloom decontamination flags every
+    corpus document against the benchmark slice (doc_id % 5 = 0, the e27
+    convention), and ONLY the clean survivors flow into e51's
+    capacity-respecting greedy packing fold — the two steps every
+    training-data build runs back to back, chained so the packing's
+    per-(lang, shard) walk order depends on stage 1's output (drop one
+    more doc and every later bin assignment in its shard shifts). The
+    output is one row per corpus doc — contaminated docs carry
+    bin_id = -1, clean docs their real bin — so the hash pins, at once:
+    the Bloom membership arithmetic (e52), the first-fit fold with
+    capacity resets (e51), AND the partition property (no doc dropped or
+    packed twice; a contaminated doc leaking into packing renumbers its
+    whole shard). The DuckDB oracle replays the chain with the same
+    bloom CTE and the recursive first-fit fold over the FILTERED doc
+    set.
+
+    100 TB: stage 1 is one corpus scan + broadcast m-bit membership
+    (zero corpus-text shuffles, e52's economics); stage 2 shuffles only
+    (lang, shard, doc_id, n_tokens) — text never crosses the Arrow
+    boundary, and the shard knob bounds per-task state (e51's measured
+    ladder). The flags table feeds two branches (the pack input and the
+    final audit join) and is checkpointed once (the e81 rule).
+
+    Cites: quality.py:e52_bloom_decontaminate, packing.py:greedy_pack."""
+    from pyspark_ml_features_spark.functions.text import rolling_hash
+    from pyspark_ml_features_spark.operators.packing import (
+        GREEDY_PACK_CAP,
+        greedy_pack,
+    )
+    from pyspark_ml_features_spark.plans.audit import probe_checkpoint
+
+    d = table(spark, sf_dir, "documents")
+    # NULL text coalesces to '' on BOTH sides (the e105/e108 rule): a NULL
+    # doc otherwise yields NULL n_tokens, which would reach greedy_pack's
+    # bigint Arrow schema as NaN — an engine-only failure the SQL oracle
+    # would not reproduce.
+    text = F.coalesce(F.col("text"), F.lit(""))
+    hashed = d.select("doc_id", rolling_hash(text).alias("h"))
+    pos = hashed.select(
+        "doc_id",
+        F.explode(F.array(*[
+            ((F.col("h") * p + q) % BLOOM_M).alias(f"p{i}")
+            for i, (p, q) in enumerate(BLOOM_FNS)])).alias("pos"))
+    bloom = (pos.filter(F.col("doc_id") % 5 == 0)
+             .select("pos").distinct())
+    corpus_pos = (pos.filter(F.col("doc_id") % 5 != 0)
+                  .select("doc_id", "pos").distinct())
+    hits = (corpus_pos.join(F.broadcast(bloom.withColumn("hit", F.lit(1))),
+                            "pos", "left")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_pos"),
+                 F.count("hit").alias("n_hit")))
+    flags = (d.filter(F.col("doc_id") % 5 != 0)
+             .select("doc_id", "lang",
+                     (F.col("doc_id") % 4).alias("shard"),
+                     F.size(tokens(text)).cast("bigint")
+                     .alias("n_tokens"))
+             .join(hits, "doc_id")
+             .withColumn("contaminated",
+                         (F.col("n_hit") == F.col("n_pos"))
+                         .cast("bigint"))
+             .drop("n_pos", "n_hit"))
+    flags = probe_checkpoint(flags, "e110.flags")
+    packed = greedy_pack(
+        flags.filter(F.col("contaminated") == 0)
+        .select("lang", "shard", "doc_id", "n_tokens"),
+        GREEDY_PACK_CAP).select("doc_id", "bin_id")
+    return (flags.join(packed, "doc_id", "left")
+            .select("doc_id", "lang", "shard", "n_tokens", "contaminated",
+                    F.coalesce("bin_id", F.lit(-1)).cast("bigint")
+                    .alias("bin_id")))

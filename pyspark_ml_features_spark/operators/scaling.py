@@ -1,4 +1,5 @@
-"""Robust scaling (SURVEY §2-B B6): ``(x - median) / IQR`` per column.
+"""Robust scaling family (SURVEY §2-B B6, E11): ``(x - median) / IQR`` per
+column, and per dimension of an ``array<double>`` embedding column.
 
 Reference behavior (/root/reference/spark_ml_features.py:130-159): loop over
 columns, one eager ``approxQuantile`` job per column, append ``{col}_scaled``,
@@ -14,6 +15,13 @@ Scale fixes versus the reference:
    DuckDB ``quantile_cont``) for oracle checking, and an approx path
    (Greenwald-Khanna ``approxQuantile``) as the 100 TB default, since exact
    percentile materializes per-partition value buffers.
+
+Per-dimension (E11) plan shape: posexplode (one shuffle-free flatMap) →
+exact percentiles per dimension in ONE aggregate grouped by dim (tiny
+shuffle) → broadcast the dim-row stats table back over the exploded rows.
+The output stays in the exploded (vec_id, dim, value, scaled) form so the
+oracle needs no list-ordering guarantees; the approx path swaps percentile
+for percentile_approx per dimension.
 """
 
 from __future__ import annotations
@@ -23,6 +31,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from pyspark_ml_features_spark.functions.arrays import to_double_array
 from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import table
 
@@ -286,3 +295,66 @@ def b6_robust_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[col.alias(f"{c}_scaled")
           for c, col in zip(_SCALE_COLS, scaled_cols)],
     )
+
+
+@register(
+    "e11_robust_scale_array",
+    oracle=f"""
+WITH exploded AS (
+    SELECT vec_id, i - 1 AS dim, (embedding::DOUBLE[])[i] AS value
+    FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
+), stats AS (
+    SELECT dim,
+           quantile_cont(value, 0.25) AS q1,
+           quantile_cont(value, 0.5)  AS med,
+           quantile_cont(value, 0.75) AS q3
+    FROM exploded GROUP BY dim
+)
+SELECT e.vec_id, e.dim, e.value,
+       CASE WHEN s.q3 - s.q1 > {IQR_EPS}
+            THEN (e.value - s.med) / (s.q3 - s.q1) END AS scaled
+FROM exploded e JOIN stats s USING (dim)
+""",
+    tags=("north-star", "E11"),
+)
+def e11_robust_scale_array(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-dimension robust scaling of the embedding column: exact
+    percentiles per dim (one aggregate), broadcast-joined back."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("emb"))
+    exploded = e.select(
+        "vec_id", F.posexplode("emb").alias("dim", "value"))
+    stats = exploded.groupBy("dim").agg(
+        F.percentile("value", F.lit(0.25)).alias("q1"),
+        F.percentile("value", F.lit(0.5)).alias("med"),
+        F.percentile("value", F.lit(0.75)).alias("q3"))
+    iqr = F.col("q3") - F.col("q1")
+    return (exploded.join(F.broadcast(stats), "dim")
+            .select("vec_id", "dim", "value",
+                    F.when(iqr > IQR_EPS,
+                           (F.col("value") - F.col("med")) / iqr).alias("scaled")))
+
+
+@register("e11b_robust_scale_array_approx", tags=("north-star", "E11", "approx"))
+def e11b_robust_scale_array_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """E11 scale path: per-dimension ``percentile_approx`` (KLL-style sketch,
+    bounded memory per group) instead of exact ``percentile`` (which buffers
+    every value of a dimension in its aggregation state — the 100 TB hazard).
+    Same plan shape otherwise: one 64-group aggregate, stats broadcast back
+    over the exploded rows. Approx quantiles are engine-specific → rows-only;
+    agreement with the exact e11 within tolerance is asserted in
+    tests/test_invariants.py."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("emb"))
+    exploded = e.select(
+        "vec_id", F.posexplode("emb").alias("dim", "value"))
+    acc = 10_000  # 1/accuracy relative-error bound ⇒ ~1e-4
+    stats = exploded.groupBy("dim").agg(
+        F.percentile_approx("value", F.lit(0.25), F.lit(acc)).alias("q1"),
+        F.percentile_approx("value", F.lit(0.5), F.lit(acc)).alias("med"),
+        F.percentile_approx("value", F.lit(0.75), F.lit(acc)).alias("q3"))
+    iqr = F.col("q3") - F.col("q1")
+    return (exploded.join(F.broadcast(stats), "dim")
+            .select("vec_id", "dim", "value",
+                    F.when(iqr > IQR_EPS,
+                           (F.col("value") - F.col("med")) / iqr).alias("scaled")))

@@ -1,7 +1,8 @@
-"""Similarity search over the embeddings table (SURVEY §2-E E4/E5):
+"""Similarity family over the embeddings table (SURVEY §2-E E4/E5):
 brute-force cosine top-k (exact baseline), deterministic random-hyperplane
-LSH (scale path with an exact oracle), embedding near-duplicate pairs, and
-unit normalization.
+LSH (scale path with an exact oracle) with its multi-probe and OR-banding
+recall pins, embedding near-duplicate pairs, the semantic-dedup chains
+(batch and incremental), unit normalization and per-dimension scaling.
 
 Floating-point discipline: every dot product / norm is an explicit LEFT fold
 (functions/arrays.py) so Spark and DuckDB produce bit-identical doubles; the
@@ -53,9 +54,9 @@ def _bucketize(e: DataFrame, planes=None,
     definition of the hyperplane bucketing and norm, shared by e4b, e112,
     e114, e115, e116, and the replication ladder so the graded batch and
     incremental twins cannot drift (the oracle side is likewise shared via
-    the _duckdb_bucket literal builder / surface12._semantic_cc_ctes).
-    Moved here from surface12.py (ADVICE r12): one definition next to
-    _lsh_planes instead of per-query copies of the bucket loop.
+    the _duckdb_bucket literal builder / similarity._semantic_cc_ctes).
+    One definition next to _lsh_planes instead of per-query copies of
+    the bucket loop.
 
     `planes`/`bucket_col` default to the single-band form every pre-r13
     caller uses (identical expressions — the graded plans are unchanged);
@@ -434,3 +435,619 @@ def e48_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (ex.join(F.broadcast(cent), ["label", "pos"])
             .groupBy("vec_id", "label")
             .agg(F.round(F.sum(diff * diff), 6).alias("dist2")))
+
+
+@register(
+    "e5b_dimension_minmax_scale",
+    oracle="""
+WITH x AS (
+    SELECT vec_id, i - 1 AS dim, (embedding::DOUBLE[])[i] AS v
+    FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
+), s AS (
+    SELECT dim, min(v) AS lo, max(v) AS hi FROM x GROUP BY dim
+)
+SELECT x.vec_id, CAST(x.dim AS BIGINT) AS dim,
+       (x.v - s.lo) / nullif(s.hi - s.lo, 0) AS scaled
+FROM x JOIN s USING (dim)
+""",
+    tags=("north-star", "E5", "similarity", "scaling"),
+)
+def e5b_dimension_minmax_scale(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """PER-DIMENSION min-max scaling of the embedding column to [0, 1]
+    (E5's second representative — e5 normalizes per VECTOR, this scales
+    per DIMENSION, the MinMaxScaler semantics without densifying
+    through an MLlib vector column). min/max are order-independent
+    exact aggregates, and the rescale is one subtract + divide per cell
+    — bit-exact on both engines with NO rounding, unlike mean/std
+    standardization whose cross-row float sum would need it.
+
+    100 TB: posexplode fans out rows ×dim but the per-dim aggregate is
+    map-side combinable down to `dim` rows (constant), which then
+    BROADCASTS back onto the exploded cells — no shuffle of the cells
+    themselves at any point."""
+    e = table(spark, sf_dir, "embeddings")
+    x = (e.select("vec_id", F.posexplode(
+            F.col("embedding").cast("array<double>")).alias("dim", "v"))
+         .select("vec_id", F.col("dim").cast("bigint").alias("dim"), "v"))
+    s = x.groupBy("dim").agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+    return (x.join(F.broadcast(s), "dim")
+            .select("vec_id", "dim",
+                    # try_divide: a constant dimension (hi == lo) yields
+                    # NULL on BOTH engines instead of an ANSI
+                    # DIVIDE_BY_ZERO on Spark only (review r8 finding)
+                    F.try_divide(F.col("v") - F.col("lo"),
+                                 F.col("hi") - F.col("lo"))
+                    .alias("scaled")))
+
+
+# Semantic near-dup threshold on the 6-dp-rounded cosine — e4c/e58's
+# 0.3, which the measured within-bucket distribution of the synthetic
+# embeddings confirms is the only sane choice: at sf0.01 the 7,821
+# same-bucket candidates (16x below the 124,750 all-pairs) carry 138
+# edges at 0.3, 9 at 0.4, and ZERO at >= 0.5 — the corpus has no
+# higher-cosine mass, so a "stricter" threshold would grade an empty
+# graph.
+SEMANTIC_DUP_COSINE = 0.3
+
+
+def _semantic_cc_ctes() -> str:
+    """The shared oracle body for the semantic-dedup family: bucket →
+    within-bucket rounded-cosine pairs → symmetric edges → recursive
+    transitive closure → cluster sizes. e112 (batch) and e114
+    (incremental engine side, batch oracle side) both grade against
+    THIS closure — one definition, so the two queries' oracles cannot
+    drift."""
+    from pyspark_ml_features_spark.functions.arrays import (
+        duckdb_dot,
+        duckdb_norm,
+    )
+
+    return f"""
+WITH RECURSIVE e AS (
+    SELECT vec_id, embedding::DOUBLE[] AS emb,
+           {duckdb_norm('(embedding::DOUBLE[])', DIM)} AS nrm,
+           ({_duckdb_bucket('(embedding::DOUBLE[])')}) AS bucket
+    FROM embeddings
+), pairs AS (
+    SELECT a.vec_id AS v1, b.vec_id AS v2
+    FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+    WHERE round({duckdb_dot('a.emb', 'b.emb', DIM)} / (a.nrm * b.nrm), 6)
+          >= {SEMANTIC_DUP_COSINE}
+), edges AS (
+    SELECT v1 AS src, v2 AS dst FROM pairs
+    UNION ALL
+    SELECT v2 AS src, v1 AS dst FROM pairs
+), reach(node, lbl) AS (
+    SELECT vec_id, vec_id FROM e
+    UNION
+    SELECT ed.dst, r.lbl FROM reach r JOIN edges ed ON ed.src = r.node
+), cc AS (
+    SELECT node AS vec_id, min(lbl) AS cluster_id FROM reach GROUP BY node
+), sz AS (
+    SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
+    FROM cc GROUP BY cluster_id
+)
+"""
+
+
+def _e112_oracle() -> str:
+    return _semantic_cc_ctes() + """
+SELECT e.vec_id, CAST(e.bucket AS BIGINT) AS bucket,
+       cc.cluster_id, sz.cluster_size,
+       CASE WHEN e.vec_id = cc.cluster_id THEN 'kept'
+            ELSE 'dup_reject' END AS stage
+FROM e JOIN cc ON e.vec_id = cc.vec_id
+       JOIN sz ON cc.cluster_id = sz.cluster_id
+"""
+
+
+@register(
+    "e112_semantic_dedup_chain",
+    oracle=_e112_oracle(),
+    tags=("north-star", "similarity", "dedup", "graph", "iterative",
+          "integration"),
+)
+def e112_semantic_dedup_chain(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """ANN → DEDUP chain with a full-corpus disposition audit (the
+    SemDeDup production shape, Abbas et al. 2023) — the SCALE PATH that
+    e58_semantic_dup_clusters' docstring has promised since r5, now
+    implemented and graded: where e58 builds its pair graph with the
+    documented all-pairs exact baseline over a 20% sample, e112 buckets
+    the WHOLE embedding corpus with e4b's deterministic
+    random-hyperplane LSH, computes exact cosine only INSIDE each
+    bucket (e4c's arithmetic), feeds the pair graph to e45's min-label
+    connected components, and emits a disposition for every vector —
+    'kept' for each cluster's min vec_id, 'dup_reject' otherwise.
+    The chain is load-bearing end to end: one flipped bucket bit moves
+    a vector's candidate set, one last-ulp cosine flip adds/removes an
+    edge, and one wrong CC label renames a whole cluster — the hash
+    pins bucketing, pair arithmetic, the iterative fixpoint, AND the
+    partition property (every vec_id exactly once) at once. The DuckDB
+    oracle replays the identical plane literals, fold arithmetic, and a
+    recursive-CTE transitive closure (the e45/e109 grading pattern).
+
+    100 TB: the bucket join replaces the all-pairs O(n²) with
+    O(n²/2^p) per bucket (2^20 buckets on a real deployment — e4b's
+    economics; the corpus shuffles ONCE on the bucket key); CC rounds
+    are bounded by near-dup-cluster diameter (tiny stars/cliques — the
+    e45 adjudication), each round an equi-join on node id; the
+    disposition is one broadcast-size join of labels back to vectors.
+    No text/embedding payload ever enters the iteration: edges are
+    16-byte id pairs.
+
+    Cites: similarity.py:e4b_lsh_bucket_knn (bucketing),
+    similarity.py:e4c_embedding_near_dup (pair arithmetic),
+    graph.py:connected_components (fixpoint), graph.py:e109 (the
+    disposition-audit doctrine)."""
+    from pyspark_ml_features_spark.functions.arrays import to_double_array
+
+    # fan_out (r14, VERDICT r13 item 7): _bucketize's 5 64-element folds
+    # per row AND the within-bucket cosine folds downstream of the
+    # broadcast bucket join all inherit the unsplittable scan's ONE
+    # partition; spread it first (no-op on a multi-split cluster scan).
+    e = fan_out(table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("emb")), "vec_id")
+    return semantic_dedup_disposition(e)
+
+
+def _pair_sides(eb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two join sides of the within-bucket pair build, over a
+    _bucketize()d frame."""
+    a = eb.select(F.col("vec_id").alias("v1"), F.col("emb").alias("e1"),
+                  F.col("nrm").alias("n1"), "bucket")
+    b = eb.select(F.col("vec_id").alias("v2"), F.col("emb").alias("e2"),
+                  F.col("nrm").alias("n2"), "bucket")
+    return a, b
+
+
+def _cluster_bucketized(eb: DataFrame) -> DataFrame:
+    """Disposition over an already-_bucketize()d frame: within-bucket
+    rounded-cosine pairs -> min-label CC -> (vec_id, bucket, cluster_id,
+    cluster_size, stage)."""
+    from pyspark_ml_features_spark.operators.graph import (
+        connected_components,
+    )
+
+    a, b = _pair_sides(eb)
+    pairs = (a.join(b, "bucket")
+             .filter(F.col("v1") < F.col("v2"))
+             .filter(_pair_cos() >= SEMANTIC_DUP_COSINE)
+             .select("v1", "v2"))
+    edges = (pairs.select(F.col("v1").alias("src"), F.col("v2").alias("dst"))
+             .unionByName(pairs.select(F.col("v2").alias("src"),
+                                       F.col("v1").alias("dst"))))
+    nodes = eb.select(F.col("vec_id").alias("node"))
+    cc = connected_components(nodes, edges)
+    sizes = (cc.groupBy("cluster_id")
+             .agg(F.count(F.lit(1)).cast("bigint").alias("cluster_size")))
+    return (eb.select("vec_id", "bucket")
+            .join(cc.withColumnRenamed("node", "vec_id"), "vec_id")
+            .join(sizes, "cluster_id")
+            .select("vec_id", "bucket", "cluster_id", "cluster_size",
+                    F.when(F.col("vec_id") == F.col("cluster_id"), "kept")
+                    .otherwise("dup_reject").alias("stage")))
+
+
+def semantic_dedup_disposition(e: DataFrame) -> DataFrame:
+    """The e112 pipeline over any (vec_id, emb: array<double>) DataFrame —
+    ONE definition shared by the graded query and the replication ladder
+    (scripts/stress_semantic_dedup.py), so the ladder exercises exactly
+    the graded plan (the dup_cluster_assignment pattern, graph.py)."""
+    return _cluster_bucketized(_bucketize(e))
+
+
+def _e114_oracle() -> str:
+    return _semantic_cc_ctes() + """
+SELECT e.vec_id, CAST(e.bucket AS BIGINT) AS bucket,
+       cc.cluster_id, sz.cluster_size,
+       CASE WHEN e.vec_id = cc.cluster_id THEN 'kept'
+            ELSE 'dup_reject' END AS stage,
+       CAST(e.vec_id % 4 = 0 AS BIGINT) AS is_new
+FROM e JOIN cc ON e.vec_id = cc.vec_id
+       JOIN sz ON cc.cluster_id = sz.cluster_id
+"""
+
+
+@register(
+    "e114_incremental_semantic_dedup",
+    oracle=_e114_oracle(),
+    tags=("north-star", "similarity", "dedup", "graph", "iterative",
+          "incremental", "integration"),
+)
+def e114_incremental_semantic_dedup(spark: SparkSession,
+                                    sf_dir: str) -> DataFrame:
+    """INCREMENTAL semantic dedup == from-scratch batch — the one dedup
+    family that had no incremental==batch pin (e107 grades exact dedup,
+    e47 lexical near-dup; this closes the similarity family, per the
+    §8m-next plan pulled forward). The nightly-ingest shape: the base
+    corpus (vec_id % 4 != 0) is already clustered; a delta batch
+    (vec_id % 4 == 0) arrives, and the engine must produce the
+    full-corpus disposition incrementally:
+
+    - base clusters enter the fixpoint as STAR EDGES (node ↔ its stored
+      label — sound because the label, the cluster-min, IS a member, so
+      the star has exactly the base cluster's connectivity in 2·|base|
+      16-byte edges);
+    - only delta×union candidate pairs are computed (the LSH bucket
+      join restricted to pairs touching a new vector);
+    - the min-label fixpoint warm-starts from the stored base labels
+      (subset-component minima — the connected_components init_labels
+      contract, e47's soundness argument).
+
+    A base cluster that the delta BRIDGES to another must renumber all
+    its members via star→delta→star propagation, so the hash pins the
+    bridge semantics, not just new-vector attachment. The DuckDB oracle
+    is deliberately NOT incremental: it replays e112's from-scratch
+    closure over the union (the shared _semantic_cc_ctes definition),
+    so a green hash is a driver-verified proof that incremental ==
+    batch for the bucketed semantic pair graph.
+
+    Cost honesty: the GRADED query synthesizes the "stored" base labels
+    inline (stage 1 runs e112's pipeline on the base slice — the test
+    fixture has no label store), so as written it does the batch work
+    PLUS the delta work; the incremental ECONOMICS belong to the
+    deployment shape, where stage 1 is one scan of a stored
+    (vec_id, label) table. What the hash pins is the incremental
+    ALGORITHM's equivalence: given correct base labels, star edges +
+    delta×union pairs + a warm-started fixpoint reproduce the
+    from-scratch closure exactly.
+
+    100 TB (deployment shape): the base corpus contributes stored
+    labels (16 bytes/vector, one table scan) and star edges — its
+    embeddings are not re-read; the delta bucket join costs
+    |delta|·(bucket occupancy), not corpus²; fixpoint rounds are
+    bounded by the delta's attachment depth (warm labels are already
+    collapsed).
+
+    Cites: similarity.py:e112_semantic_dedup_chain (the batch twin),
+    graph.py:e47_incremental_cc (warm-start soundness),
+    dedup.py:e107 (the incremental==batch doctrine)."""
+    from pyspark_ml_features_spark.functions.arrays import to_double_array
+
+    # fan_out (r14): same unsplittable-scan + compute-dense shape as e112
+    # — bucketize folds and the post-broadcast-join cosine folds were
+    # single-task otherwise (no-op on a multi-split cluster scan).
+    eb = _bucketize(fan_out(table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("emb")), "vec_id"))
+
+    is_delta = F.col("vec_id") % 4 == 0
+    # stage 1 (the "stored" state): base-only disposition — exactly
+    # e112's pipeline (_cluster_bucketized) on the base slice; in
+    # deployment this is a scan of the stored label table instead
+    base_labels = (_cluster_bucketized(eb.filter(~is_delta))
+                   .select(F.col("vec_id").alias("node"),
+                           F.col("cluster_id").alias("lbl")))
+    return incremental_semantic_disposition(eb, base_labels)
+
+
+def incremental_semantic_disposition(eb: DataFrame,
+                                     base_labels: DataFrame) -> DataFrame:
+    """Stage 2 of e114 — ONE definition shared by the graded query and
+    the delta-ingest ladder tier (scripts/stress_semantic_dedup.py), so
+    the ladder's incremental economics are measured on exactly the
+    graded plan. Inputs: a _bucketize()d union frame (vec_id, emb, nrm,
+    bucket) where delta = vec_id % 4 == 0 (the fixture's ingest split —
+    stable under the ladder's replica shift, which is a multiple of 4),
+    and the stored base labels (node, lbl). Only delta×union candidate
+    pairs are computed; base connectivity enters as star edges; the
+    min-label fixpoint warm-starts from the stored labels."""
+    from pyspark_ml_features_spark.operators.graph import (
+        connected_components,
+    )
+
+    # delta×union pairs only (every candidate touches a new vector);
+    # base-base candidates never enter this join. The v1 side is always
+    # delta, so delta-base candidates appear exactly once; the ordering
+    # guard keeps delta-delta candidates once too (ADVICE r12: without
+    # it each delta-delta pair evaluated the 64-element fold twice and
+    # needed a .distinct() shuffle afterwards).
+    a, b = _pair_sides(eb)
+    pairs = (a.filter(F.col("v1") % 4 == 0)
+             .join(b, "bucket")
+             .filter((F.col("v1") < F.col("v2"))
+                     | (F.col("v2") % 4 != 0))
+             .filter(_pair_cos() >= SEMANTIC_DUP_COSINE)
+             .select("v1", "v2"))
+    delta_edges = (pairs.select(F.col("v1").alias("src"),
+                                F.col("v2").alias("dst"))
+                   .unionByName(pairs.select(F.col("v2").alias("src"),
+                                             F.col("v1").alias("dst"))))
+    star_edges = (base_labels.select(F.col("node").alias("src"),
+                                     F.col("lbl").alias("dst"))
+                  .unionByName(
+                      base_labels.select(F.col("lbl").alias("src"),
+                                         F.col("node").alias("dst"))))
+    nodes = eb.select(F.col("vec_id").alias("node"))
+    cc = connected_components(
+        nodes, delta_edges.unionByName(star_edges),
+        init_labels=base_labels)
+    sizes = (cc.groupBy("cluster_id")
+             .agg(F.count(F.lit(1)).cast("bigint").alias("cluster_size")))
+    return (eb.select("vec_id", "bucket")
+            .join(cc.withColumnRenamed("node", "vec_id"), "vec_id")
+            .join(sizes, "cluster_id")
+            .select("vec_id", "bucket", "cluster_id", "cluster_size",
+                    F.when(F.col("vec_id") == F.col("cluster_id"), "kept")
+                    .otherwise("dup_reject").alias("stage"),
+                    (F.col("vec_id") % 4 == 0).cast("bigint")
+                    .alias("is_new")))
+
+
+# own bucket + one probe per hyperplane, in plane order
+N_PROBE_DEPTHS = 5
+
+
+def multiprobe_candidates(eb: DataFrame) -> DataFrame:
+    """Candidate pairs of a _bucketize()d (vec_id, emb, nrm, bucket)
+    frame under Hamming-1 multi-probe, tagged with the FIRST probe depth
+    that discovers each pair. One bucket-key equi-join per probe depth —
+    the scale shape: candidates per probe are Σ_b |bucket ∩ probed|, not
+    all-pairs, and each unordered pair lands in exactly one depth's join
+    (XOR of two buckets is unique), so no dedup shuffle is needed.
+    Shared by the graded query and the recall invariant test."""
+    a = eb.select(F.col("vec_id").alias("v1"), F.col("emb").alias("e1"),
+                  F.col("nrm").alias("n1"), F.col("bucket").alias("b1"))
+    b = eb.select(F.col("vec_id").alias("v2"), F.col("emb").alias("e2"),
+                  F.col("nrm").alias("n2"), F.col("bucket").alias("b2"))
+    sets = []
+    for depth in range(N_PROBE_DEPTHS):
+        key = (F.col("b1") if depth == 0
+               else F.col("b1").bitwiseXOR(F.lit(1 << (depth - 1))))
+        sets.append(
+            a.withColumn("pb", key.cast("bigint"))
+            .join(b, F.col("pb") == F.col("b2"))
+            .filter(F.col("v1") < F.col("v2"))
+            .select("v1", "v2", "e1", "e2", "n1", "n2",
+                    F.lit(depth).cast("bigint").alias("first_depth")))
+    cand = sets[0]
+    for s in sets[1:]:
+        cand = cand.unionByName(s)
+    return cand
+
+
+_E115_ORACLE = f"""
+WITH e AS (
+    SELECT vec_id, embedding::DOUBLE[] AS emb,
+           {duckdb_norm('(embedding::DOUBLE[])', DIM)} AS nrm,
+           ({_duckdb_bucket('(embedding::DOUBLE[])')}) AS bucket
+    FROM embeddings WHERE vec_id % 5 = 0
+), pr AS (
+    SELECT a.vec_id AS v1, b.vec_id AS v2,
+           CASE WHEN a.bucket = b.bucket THEN 0
+                WHEN xor(a.bucket, b.bucket) = 1 THEN 1
+                WHEN xor(a.bucket, b.bucket) = 2 THEN 2
+                WHEN xor(a.bucket, b.bucket) = 4 THEN 3
+                WHEN xor(a.bucket, b.bucket) = 8 THEN 4
+                ELSE NULL END AS first_depth,
+           (round({duckdb_dot('a.emb', 'b.emb', DIM)} / (a.nrm * b.nrm), 6)
+            >= {SEMANTIC_DUP_COSINE}) AS is_dup
+    FROM e a JOIN e b ON a.vec_id < b.vec_id
+), d AS (
+    SELECT unnest(range(0, {N_PROBE_DEPTHS})) AS probe_depth
+)
+SELECT d.probe_depth AS probe_depth,
+       CAST(sum(CASE WHEN pr.first_depth IS NOT NULL
+                      AND pr.first_depth <= d.probe_depth
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_candidates,
+       CAST(sum(CASE WHEN pr.first_depth IS NOT NULL
+                      AND pr.first_depth <= d.probe_depth
+                      AND pr.is_dup THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_dup_pairs,
+       CAST(sum(CASE WHEN pr.is_dup THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_true_pairs
+FROM d CROSS JOIN pr
+GROUP BY d.probe_depth
+"""
+
+
+@register("e115_multiprobe_lsh_recall", oracle=_E115_ORACLE,
+          tags=("north-star", "similarity", "dedup", "lsh"))
+def e115_multiprobe_lsh_recall(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """Multi-probe LSH recall buy-back, pinned exactly: one row per probe
+    depth q ∈ [0, 5) with the CUMULATIVE candidate-pair count, the
+    cumulative semantic-dup pairs found (rounded cosine ≥ 0.3, e112's
+    threshold), and the all-pairs ground-truth dup count on the same
+    deterministic 20% sample (e4c's vec_id % 5 = 0) — so
+    n_dup_pairs/n_true_pairs is the measured recall and n_candidates the
+    price paid for it, both monotone in q by construction (counts are
+    cumulative over each pair's unique first-discovery depth; the SET
+    containment pairs(q) ⊇ pairs(q-1) is pinned in
+    tests/test_invariants.py).
+
+    100 TB: each probe depth is one more bucket-key equi-join — cost
+    grows linearly in probes while recall buys back the bucket-boundary
+    loss that fixed single-probe LSH (e4b/e112) pays; the deployment
+    knob is (p planes, q probes) with candidates ~ q·n²/2^p, all
+    shuffle-on-bucket, never all-pairs. The all-pairs truth join exists
+    only on the bounded sample as the recall denominator (e4c
+    precedent, BNLJ_ALLOWED).
+
+    Cites: similarity.py:_bucketize/_lsh_planes (the shared bucketing),
+    similarity.py:e112 (the single-probe consumer this de-risks),
+    DESIGN_SCALE.md "Round-12 additions" (the mitigation this grades)."""
+    # fan_out (r14): the probe-join cosine folds AND the all-pairs truth
+    # BNLJ (~80k 64-element folds at sf0.1) run on the stream side's
+    # partitioning — ONE task over the unsplittable scan otherwise
+    # (no-op on a multi-split cluster scan).
+    eb = _bucketize(fan_out(table(spark, sf_dir, "embeddings")
+                            .filter(F.col("vec_id") % 5 == 0)
+                            .select("vec_id",
+                                    to_double_array("embedding")
+                                    .alias("emb")), "vec_id"))
+    cand = multiprobe_candidates(eb)
+    per_depth = (cand.select(
+        "first_depth",
+        (_pair_cos() >= SEMANTIC_DUP_COSINE).cast("bigint").alias("is_dup"))
+        .groupBy("first_depth")
+        .agg(F.count(F.lit(1)).alias("n_cand_d"),
+             F.sum("is_dup").alias("n_dup_d")))
+    spine = (spark.range(N_PROBE_DEPTHS)
+             .select(F.col("id").cast("bigint").alias("probe_depth")))
+    w = (Window.orderBy("probe_depth")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cum = (spine.join(per_depth,
+                      spine.probe_depth == per_depth.first_depth, "left")
+           .select("probe_depth",
+                   F.coalesce("n_cand_d", F.lit(0)).alias("c"),
+                   F.coalesce("n_dup_d", F.lit(0)).alias("p"))
+           .select("probe_depth",
+                   F.sum("c").over(w).cast("bigint").alias("n_candidates"),
+                   F.sum("p").over(w).cast("bigint").alias("n_dup_pairs")))
+    # all-pairs ground truth on the bounded sample — the recall
+    # denominator (e4c's shape; the only non-bucketed join here)
+    a = eb.select(F.col("vec_id").alias("v1"), F.col("emb").alias("e1"),
+                  F.col("nrm").alias("n1"))
+    b = eb.select(F.col("vec_id").alias("v2"), F.col("emb").alias("e2"),
+                  F.col("nrm").alias("n2"))
+    truth = (a.join(F.broadcast(b), F.col("v1") < F.col("v2"))
+             .filter(_pair_cos() >= SEMANTIC_DUP_COSINE)
+             .agg(F.count(F.lit(1)).cast("bigint").alias("n_true_pairs")))
+    return cum.crossJoin(F.broadcast(truth))
+
+
+# ---------------------------------------------------------------------------
+# e116: OR-banding — the OTHER recall mitigation DESIGN_SCALE names.
+# Multi-probe (e115) buys recall by probing NEIGHBOR buckets of one plane
+# set; OR-banding buys it with multiple INDEPENDENT plane sets (bands) and
+# unions the single-probe collisions. Band 0 reuses THE e112/e4b planes
+# (seed = LSH_SEED), so e116's band-0 row must equal e115's depth-0 row —
+# pinned in tests/test_invariants.py as a cross-query exactness check.
+# ---------------------------------------------------------------------------
+
+N_BANDS = 4  # independent 4-plane sets; seeds LSH_SEED + band
+
+
+def _band_planes(band: int):
+    """Plane set for one band — band 0 is THE single-band set every graded
+    LSH query uses (same seed), bands 1+ are fresh independent draws."""
+    return _lsh_planes(seed=LSH_SEED + band)
+
+
+def or_band_candidates(eb: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
+    """Candidate pairs under OR-banding, tagged with the FIRST band whose
+    buckets collide. One bucket-key equi-join per band; a pair that
+    collides in band b is emitted by band b's join ONLY if every earlier
+    band's buckets differ — bands are therefore disjoint by construction
+    and the union needs no dedup shuffle (e115's first-depth trick, with
+    'earlier band mismatch' standing in for XOR uniqueness). Shared by the
+    graded query and the invariant tests."""
+    a_cols = [F.col("vec_id").alias("v1"), F.col("emb").alias("e1"),
+              F.col("nrm").alias("n1")] + [
+        F.col(f"bucket_{b}").alias(f"ab{b}") for b in range(n_bands)]
+    b_cols = [F.col("vec_id").alias("v2"), F.col("emb").alias("e2"),
+              F.col("nrm").alias("n2")] + [
+        F.col(f"bucket_{b}").alias(f"bb{b}") for b in range(n_bands)]
+    a, b = eb.select(*a_cols), eb.select(*b_cols)
+    sets = []
+    for band in range(n_bands):
+        j = (a.join(b, F.col(f"ab{band}") == F.col(f"bb{band}"))
+             .filter(F.col("v1") < F.col("v2")))
+        for prev in range(band):
+            j = j.filter(F.col(f"ab{prev}") != F.col(f"bb{prev}"))
+        sets.append(j.select(
+            "v1", "v2", "e1", "e2", "n1", "n2",
+            F.lit(band).cast("bigint").alias("first_band")))
+    cand = sets[0]
+    for s in sets[1:]:
+        cand = cand.unionByName(s)
+    return cand
+
+
+def _e116_oracle() -> str:
+    bucket_cols = ",\n           ".join(
+        f"({_duckdb_bucket('(embedding::DOUBLE[])', _band_planes(b))})"
+        f" AS bucket_{b}" for b in range(N_BANDS))
+    first_band = " ".join(
+        f"WHEN a.bucket_{b} = b.bucket_{b} THEN {b}"
+        for b in range(N_BANDS))
+    return f"""
+WITH e AS (
+    SELECT vec_id, embedding::DOUBLE[] AS emb,
+           {duckdb_norm('(embedding::DOUBLE[])', DIM)} AS nrm,
+           {bucket_cols}
+    FROM embeddings WHERE vec_id % 5 = 0
+), pr AS (
+    SELECT a.vec_id AS v1, b.vec_id AS v2,
+           CASE {first_band} ELSE NULL END AS first_band,
+           (round({duckdb_dot('a.emb', 'b.emb', DIM)} / (a.nrm * b.nrm), 6)
+            >= {SEMANTIC_DUP_COSINE}) AS is_dup
+    FROM e a JOIN e b ON a.vec_id < b.vec_id
+), d AS (
+    SELECT unnest(range(0, {N_BANDS})) AS band
+)
+SELECT d.band AS band,
+       CAST(sum(CASE WHEN pr.first_band IS NOT NULL
+                      AND pr.first_band <= d.band
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_candidates,
+       CAST(sum(CASE WHEN pr.first_band IS NOT NULL
+                      AND pr.first_band <= d.band
+                      AND pr.is_dup THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_dup_pairs,
+       CAST(sum(CASE WHEN pr.is_dup THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_true_pairs
+FROM d CROSS JOIN pr
+GROUP BY d.band
+"""
+
+
+@register("e116_or_banding_recall", oracle=_e116_oracle(),
+          tags=("north-star", "similarity", "dedup", "lsh"))
+def e116_or_banding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OR-banding recall buy-back, pinned exactly: one row per band count
+    b ∈ [0, 4) with the CUMULATIVE candidate-pair count using bands 0..b,
+    the cumulative semantic-dup pairs found (rounded cosine ≥ e112's
+    threshold), and the all-pairs truth on the same deterministic 20%
+    sample (vec_id % 5 = 0 — e115's sample, so the two mitigations'
+    recall-vs-candidates columns are directly comparable row-for-row and
+    the band-0 row IS e115's depth-0 row).
+
+    100 TB: each extra band is one more shuffle-on-bucket equi-join over
+    independent planes — candidates grow ~B·n²/2^p minus overlaps while
+    recall compounds as 1-(1-hit)^B; versus multi-probe, OR-banding pays
+    B bucketize passes but probes no neighbor buckets (better when bucket
+    occupancy is skewed). The only non-bucketed join is the bounded-sample
+    truth denominator (BNLJ_ALLOWED, e4c/e115 precedent).
+
+    Cites: similarity.py:_bucketize/_duckdb_bucket (now band-parameterized,
+    still the single shared definition), similarity.py:e115 (the sibling
+    mitigation this is graded against), DESIGN_SCALE.md Round-12/13
+    sections (the trade stress_ann measured, now an exactness pin)."""
+    # fan_out (r14): e115's shape with 4 independent band bucketizations
+    # (20 folds/row) plus the same truth BNLJ — all single-task on the
+    # unsplittable scan otherwise (no-op on a multi-split cluster scan).
+    eb = fan_out(table(spark, sf_dir, "embeddings")
+                 .filter(F.col("vec_id") % 5 == 0)
+                 .select("vec_id", to_double_array("embedding").alias("emb")),
+                 "vec_id")
+    for band in range(N_BANDS):
+        eb = _bucketize(eb, planes=_band_planes(band),
+                        bucket_col=f"bucket_{band}")
+    cand = or_band_candidates(eb)
+    per_band = (cand.select(
+        "first_band",
+        (_pair_cos() >= SEMANTIC_DUP_COSINE).cast("bigint").alias("is_dup"))
+        .groupBy("first_band")
+        .agg(F.count(F.lit(1)).alias("n_cand_b"),
+             F.sum("is_dup").alias("n_dup_b")))
+    spine = (spark.range(N_BANDS)
+             .select(F.col("id").cast("bigint").alias("band")))
+    w = (Window.orderBy("band")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cum = (spine.join(per_band, spine.band == per_band.first_band, "left")
+           .select("band",
+                   F.coalesce("n_cand_b", F.lit(0)).alias("c"),
+                   F.coalesce("n_dup_b", F.lit(0)).alias("p"))
+           .select("band",
+                   F.sum("c").over(w).cast("bigint").alias("n_candidates"),
+                   F.sum("p").over(w).cast("bigint").alias("n_dup_pairs")))
+    a = eb.select(F.col("vec_id").alias("v1"), F.col("emb").alias("e1"),
+                  F.col("nrm").alias("n1"))
+    b = eb.select(F.col("vec_id").alias("v2"), F.col("emb").alias("e2"),
+                  F.col("nrm").alias("n2"))
+    truth = (a.join(F.broadcast(b), F.col("v1") < F.col("v2"))
+             .filter(_pair_cos() >= SEMANTIC_DUP_COSINE)
+             .agg(F.count(F.lit(1)).cast("bigint").alias("n_true_pairs")))
+    return cum.crossJoin(F.broadcast(truth))

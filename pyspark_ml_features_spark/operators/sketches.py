@@ -1,4 +1,4 @@
-"""Mergeable-sketch operators (SURVEY §2-D approximate-aggregation family).
+"""Mergeable-sketch family (SURVEY §2-D approximate-aggregation family).
 
 At 100 TB the only viable distinct-count / frequency architecture is a
 MERGEABLE summary: each partition builds a small sketch, partial combine
@@ -258,3 +258,49 @@ def d118_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "cms_est",
                     (F.col("cms_est") - F.col("true_cnt")).cast("bigint")
                     .alias("overcount")))
+
+
+@register(
+    "d140_bitmap_distinct",
+    oracle="""
+SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+FROM events
+GROUP BY event_type
+""",
+    tags=("engine", "D5", "bitmap", "spark4", "scale"),
+)
+def d140_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT distinct counting via bitmap aggregates (Spark 3.5+
+    bitmap_bucket_number / bitmap_bit_position / bitmap_construct_agg /
+    bitmap_or_agg / bitmap_count) — the D5/D6 family's third point on
+    the exactness-vs-state curve: exact like count(DISTINCT) but with
+    MERGEABLE fixed-size state (one ≤4 KB bitmap per 32768-id bucket)
+    instead of a per-key hash set, and rollup-able like HLL (d38) but
+    with zero error. The three-level shape is the real rollup pattern:
+    per-(type, day, bucket) bitmaps built once from raw ids, OR-merged
+    across days WITHOUT re-reading raw ids (what HLL can only do
+    approximately), then counted — shuffle carries bitmaps, never ids.
+    (Nesting construct_agg inside or_agg in ONE select is an analysis
+    error, NESTED_AGGREGATE_FUNCTION — each level is its own GROUP BY.)
+    The oracle is the plain count(DISTINCT), which is the point: same
+    answer, bounded mergeable state."""
+    e = table(spark, sf_dir, "events")
+    e.createOrReplaceTempView("ev_bmp8")
+    return spark.sql("""
+        SELECT event_type,
+               CAST(sum(bitmap_count(b)) AS BIGINT) AS n_users
+        FROM (
+            SELECT event_type, bkt, bitmap_or_agg(day_b) AS b
+            FROM (
+                SELECT event_type, date(ts) AS day,
+                       bitmap_bucket_number(user_id) AS bkt,
+                       bitmap_construct_agg(
+                           bitmap_bit_position(user_id)) AS day_b
+                FROM ev_bmp8
+                GROUP BY event_type, date(ts),
+                         bitmap_bucket_number(user_id)
+            )
+            GROUP BY event_type, bkt
+        )
+        GROUP BY event_type
+    """)

@@ -81,7 +81,7 @@ def advise(df: DataFrame, executed: bool = False) -> list[Finding]:
                 "Window with empty PARTITION BY: every row flows through "
                 "one task - stops existing at scale. For global ranks use "
                 "distributed_row_number/distributed_prefix_sum "
-                "(operators/relational6.py); for quantiles use "
+                "(operators/relational.py); for quantiles use "
                 "exact_quantiles_banded (operators/scaling.py) or "
                 "approx_percentile."))
             break

@@ -1,259 +1,25 @@
 """Assemble the engine's declared-query registry.
 
-Importing this module imports every operator module for its registration
-side effects, then reorders the registry: the driver grades a bounded
-prefix (50 entries in round 1) of the declared queries, so the prefix must
-carry the queries whose CORRECTNESS rows matter most this round.
+Importing this module imports every operator family for its registration
+side effects; registry order is import order and carries no meaning.
 """
 
-from pyspark_ml_features_spark import registry
-from pyspark_ml_features_spark.operators import (  # noqa: F401
-    advanced_sql,
-    array_scaling,
-    basic,
-    dedup,
-    experiments,
-    features,
-    graph,
-    ml,
-    multimodal,
-    packing,
-    python_udfs,
-    quality,
-    relational,
-    relational2,
-    relational3,
-    relational4,
-    relational5,
-    relational6,
-    scaling,
-    sessionize,
-    similarity,
-    sketches,
-    textops,
-)
-from pyspark_ml_features_spark.streaming import events, stateful  # noqa: F401
-
-# pipeline registers e76 (rows-only integration funnel) AFTER the
-# streaming modules on purpose: fresh never-driver-run queries fill the
-# FRESH_SLOTS-reserved window tail in registration order, and the r5
-# window promises s8-s12 their first driver rows (VERDICT r4 task 3) —
-# e76 queues behind them and grades in r6.
-from pyspark_ml_features_spark import pipeline  # noqa: F401, E402
-
-# Imported LAST on purpose (round 6): stewardship's four oracle queries
-# must register at the TAIL of the ungraded backlog so they defer to the
-# r7 window without displacing any of the 49 backlog + e76 slots the r6
-# window already promises (simulated against the landed r05 grades —
-# adding them to any earlier module would jump the registration-order
-# queue and evict a promised slot).
-from pyspark_ml_features_spark.operators import stewardship  # noqa: F401, E402
-
-# Round-7 batch, imported after stewardship so the seven promised
-# stewardship slots stay at the backlog head; 7 + 8 = 15 backlog entries
-# all fit the r7 window (post-saturation same-round grading, SURVEY §8f
-# item 3 — simulated against the landed r6 grades before registration).
-from pyspark_ml_features_spark.operators import curation7  # noqa: F401, E402
-
-# Round-8 batch, imported after curation7: post-r07 the backlog is
-# EMPTY (every declared query has a driver grade), so these register as
-# the r8 window's backlog head and grade same-round — simulated against
-# the landed r07 grades before registration.
-from pyspark_ml_features_spark.operators import surface8  # noqa: F401, E402
-
-# Round-9 batch, imported after surface8: post-r08 the backlog is again
-# EMPTY, so these register as the r9 window's backlog head and grade
-# same-round — simulated against the landed r08 grades before
-# registration.
-from pyspark_ml_features_spark.operators import surface9  # noqa: F401, E402
-
-# Round-10 batch, imported after surface9: post-r09 the backlog is again
-# EMPTY (349/349 graded), so these register as the r10 window's backlog
-# head and grade same-round — simulated against the landed r09 grades
-# before registration.
-from pyspark_ml_features_spark.operators import surface10  # noqa: F401, E402
-
-# Round-11 batch, imported after surface10: post-r10 the backlog is again
-# EMPTY (358/358 graded), so these register as the r11 window's backlog
-# head and grade same-round — simulated against the landed r10 grades
-# before registration. (s17/s18 register earlier via streaming.events,
-# adjacent to the s14-s16 family they extend — same-round grading holds
-# for them too with the backlog empty.)
-from pyspark_ml_features_spark.operators import surface11  # noqa: F401, E402
-
-# Round-12 batch, imported after surface11: post-r11 the backlog is again
-# EMPTY (365/365 graded), so these register as the r12 window's backlog
-# head and grade same-round — simulated against the landed r11 grades
-# before registration.
-from pyspark_ml_features_spark.operators import surface12  # noqa: F401, E402
-
-# Round-13 tail: post-r12 the backlog is EMPTY again (368/368 graded), so
-# e115 registers as the r13 window's backlog head and grades same-round —
-# window simulated against the landed r12 grades before registration.
-from pyspark_ml_features_spark.operators import surface13  # noqa: F401, E402
-
-# Round-4 grading window (the driver grades the first 50 registered
-# queries). Composition (VERDICT r3 task 1): the 25 locally hash-verified
-# oracle queries that landed after the round-3 window filled (the
-# DEFERRED_ORACLES backlog — TPC-H Q4/Q6/Q9/Q13/Q14/Q15/Q17/Q19/Q22,
-# percentiles/histogram/OLS/try-arithmetic, quality/fingerprint dedup,
-# int8 kNN, sink round-trips, SCD2/lateral), the 4 rows-only queries that
-# have never run under the driver, then 21 oracle queries NEW this round
-# (VERDICT r3 task 3: batch session_window at a second gap, rollup MERGE
-# parity, grouped lateral top-k, aggregate/array/interval families, text
-# profiling, containment/top-k dedup). With this rotation every declared
-# query has a driver CORRECTNESS row across r1-r4. Deferred: the 145
-# queries already graded green (or rows-only clean) in r1-r3 —
-# re-grading them wastes slots.
-MANUAL_WINDOW_R4 = [
-    # -- oracle queries never graded by the driver (r1-r3 windows full)
-    "d51_percentiles_exact",
-    "d52_width_bucket_histogram",
-    "d53_tpch_q4",
-    "d54_tpch_q6",
-    "e34_quality_dedup",
-    "d31b_regression_exact",
-    "d55_tpch_q19",
-    "d56_tpch_q22",
-    "d57_tpch_q14",
-    "e4e_int8_knn",
-    "a15_csv_sink_roundtrip",
-    "d58_market_share",
-    "e35_near_dup_by_source",
-    "d59_map_in_arrow",
-    "e36_fingerprint_dedup",
-    "d60_try_arithmetic",
-    "d61_tpch_q13",
-    "d62_tpch_q15",
-    "d63_tpch_q17",
-    "d64_tpch_q9",
-    "e37_retention_cohorts",
-    "a16_merge_schema",
-    "d65_lateral_topk",
-    "d66_scd2_history",
-    "a17_json_sink_roundtrip",
-    # -- rows-only queries that have never run under the driver
-    "d30_moment_stats",
-    "d46_kmv_setops",
-    "e11b_robust_scale_array_approx",
-    "s6_streaming_materialized_rollup",
-    # -- new oracle queries this round (locally hash-verified)
-    "d67_session_window_batch",
-    "d68_grouped_topk_lateral",
-    "d69_string_agg",
-    "d70_bitwise_agg",
-    "d71_filtered_agg",
-    "d72_posexplode_tokens",
-    "d73_sequence_fold",
-    "d74_interval_arithmetic",
-    "d75_mode_per_group",
-    "d76_arg_min_max",
-    "d77_robust_mad",
-    "d78_inline_lookup_join",
-    "d79_asof_nearest",
-    "a18_zstd_roundtrip",
-    "t11_word_length_profile",
-    "t12_charclass_profile",
-    "e38_rollup_merge_upsert",
-    "e39_overlap_pairs",
-    "e40_nearest_doc_topk",
-    "e41_bigram_topk_per_lang",
-    "e42_dup_cluster_stats",
-]
-
-def _driver_grades() -> tuple[set[str], set[str]]:
-    """(hash-green names, all names ever graded) across CORRECTNESS_r*.json.
-
-    The glob is anchored on the repo checkout root (two levels above this
-    file). From an installed/zipped package that directory has no
-    CORRECTNESS files; override with SPARK_GRAFT_REPO_ROOT, and in either
-    case a missing-file situation is logged (not silent) so the fallback
-    to the curated round-4 window is visible (ADVICE r4)."""
-    import json
-    import os
-    from pathlib import Path
-
-    green: set[str] = set()
-    seen: set[str] = set()
-    repo = Path(os.environ.get("SPARK_GRAFT_REPO_ROOT",
-                               Path(__file__).resolve().parent.parent))
-    paths = sorted(repo.glob("CORRECTNESS_r*.json"))
-    if not paths:
-        import logging
-        logging.getLogger(__name__).warning(
-            "no CORRECTNESS_r*.json under %s — driver window falls back to "
-            "the curated round-4 list (set SPARK_GRAFT_REPO_ROOT to the "
-            "repo checkout if this is an installed package)", repo)
-    for path in paths:
-        for name, row in json.loads(path.read_text()).items():
-            seen.add(name)
-            if row.get("err") is None and row.get("hash_match"):
-                green.add(name)
-    return green, seen
-
-
-# Ungraded oracle queries promoted to the FRONT of the recomposed window
-# (VERDICT r4 task 5): components this brief grades as first-class that
-# registration order would otherwise push past the 50-slot boundary.
-PRIORITY_BACKLOG = [
-    "d106_quantile_normalize",
-]
-
-# Slots reserved for queries that have NEVER produced a driver row
-# (VERDICT r4 task 3): a rows-only query with zero driver executions
-# outranks an oracle query that is at least locally hash-verified.
-FRESH_SLOTS = 5
-
-
-def _compute_window(green: set[str], seen: set[str]) -> list[str]:
-    """SELF-ROTATING grading window (automates what rounds 3→4 did by
-    hand, and un-trips test_window_has_no_already_green_oracle_queries
-    the moment new grades land).
-
-    While the curated round-4 window above is still ungraded, return it
-    verbatim — the composition a round promises must stay stable while
-    that round is in flight. Once ANY of its oracle entries has a
-    hash-green row in a CORRECTNESS_r*.json (i.e. the round's grades
-    landed), recompose for the next round: every oracle query with no
-    green row yet (registration order — this also auto-RETRIES queries
-    the driver errored or mismatched), then rows-only queries never yet
-    run under a driver, then rows-only re-runs as padding (their weak
-    check re-runs for free), then — only at full saturation — green
-    oracles. First 50.
-
-    Registration order is module-import order, not historical addition
-    order, so a late addition to an early module can jump the queue —
-    acceptable: the guarantee is determinism and no wasted slots, not
-    FIFO fairness. Two adjustments (VERDICT r4 tasks 3+5): PRIORITY_BACKLOG
-    entries float to the backlog head, and up to FRESH_SLOTS slots are
-    reserved for never-driver-run rows-only queries ahead of the backlog
-    tail — a query with zero driver executions beats one that is at least
-    locally hash-verified."""
-    reg = registry.all_queries()
-    manual_oracles = [n for n in MANUAL_WINDOW_R4
-                      if n in reg and reg[n].oracle is not None]
-    if not any(n in green for n in manual_oracles):
-        return MANUAL_WINDOW_R4
-    backlog = [n for n in reg if reg[n].oracle is not None and n not in green]
-    priority = [n for n in PRIORITY_BACKLOG if n in backlog]
-    backlog = priority + [n for n in backlog if n not in priority]
-    fresh_rows = [n for n in reg if reg[n].oracle is None and n not in seen]
-    rerun_rows = [n for n in reg if reg[n].oracle is None and n in seen]
-    saturated = [n for n in reg if reg[n].oracle is not None and n in green]
-    n_fresh = min(len(fresh_rows), FRESH_SLOTS)
-    cut = max(0, 50 - n_fresh)
-    return (backlog[:cut] + fresh_rows + backlog[cut:]
-            + rerun_rows + saturated)[:50]
-
-
-DRIVER_WINDOW = _compute_window(*_driver_grades())
-
-# CORRECTNESS_r04 landed all-green, so _compute_window has recomposed for
-# round 5: PRIORITY_BACKLOG, then the ungraded-oracle backlog in
-# registration order (first ~45), then FRESH_SLOTS reserved for the
-# never-driver-run streaming queries s8–s12. The backlog remainder (plus
-# any r5-new surface, capped so it fits one window) carries to r6. All
-# backlog entries are locally hash-verified at sf0.01 AND sf0.1 by
-# drive_contract + the parity sweep.
-
-registry.reorder(DRIVER_WINDOW)
+from pyspark_ml_features_spark import pipeline  # noqa: F401
+from pyspark_ml_features_spark.operators import advanced_sql  # noqa: F401
+from pyspark_ml_features_spark.operators import basic  # noqa: F401
+from pyspark_ml_features_spark.operators import dedup  # noqa: F401
+from pyspark_ml_features_spark.operators import features  # noqa: F401
+from pyspark_ml_features_spark.operators import graph  # noqa: F401
+from pyspark_ml_features_spark.operators import ml  # noqa: F401
+from pyspark_ml_features_spark.operators import multimodal  # noqa: F401
+from pyspark_ml_features_spark.operators import packing  # noqa: F401
+from pyspark_ml_features_spark.operators import python_udfs  # noqa: F401
+from pyspark_ml_features_spark.operators import quality  # noqa: F401
+from pyspark_ml_features_spark.operators import relational  # noqa: F401
+from pyspark_ml_features_spark.operators import scaling  # noqa: F401
+from pyspark_ml_features_spark.operators import sessionize  # noqa: F401
+from pyspark_ml_features_spark.operators import similarity  # noqa: F401
+from pyspark_ml_features_spark.operators import sketches  # noqa: F401
+from pyspark_ml_features_spark.operators import textops  # noqa: F401
+from pyspark_ml_features_spark.streaming import events  # noqa: F401
+from pyspark_ml_features_spark.streaming import stateful  # noqa: F401

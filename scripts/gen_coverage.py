@@ -23,7 +23,7 @@ The check column carries the CUMULATIVE driver grade from CORRECTNESS_r*.json
 latest state): `driver-green rN` = hash match in round N; `ran clean rN` =
 rows-only query executed without error in round N (the strongest possible
 grade for ✗-oracle queries: iterative ML fits, RNG, approx sketches,
-streaming); `ungraded` = never inside a driver grading window yet (all such
+streaming); `ungraded` = no driver grade yet (all such
 queries are locally hash-verified by `scripts/drive_contract.py`).
 
 Regenerate with: `python scripts/gen_coverage.py`.

@@ -48,7 +48,7 @@ def long_form(spark: SparkSession, sf_dir: str, replicas: int = 1):
 
 
 def measure(spark: SparkSession, df, n_partitions: int) -> dict:
-    from pyspark_ml_features_spark.operators.relational6 import (
+    from pyspark_ml_features_spark.operators.relational import (
         distributed_row_number,
     )
     from pyspark_ml_features_spark.plans.audit import (
@@ -105,7 +105,7 @@ def main() -> None:
     # anti-pattern; it exists here only as the ground truth.
     from pyspark.sql import Window
 
-    from pyspark_ml_features_spark.operators.relational6 import (
+    from pyspark_ml_features_spark.operators.relational import (
         distributed_row_number,
     )
 

@@ -25,7 +25,7 @@ sys.path.insert(0, "/root/repo")
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession, Window  # noqa: E402
 
-from pyspark_ml_features_spark.operators.relational6 import (  # noqa: E402
+from pyspark_ml_features_spark.operators.relational import (  # noqa: E402
     distributed_prefix_sum,
 )
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Semantic-dedup chain blow-up ladder — the SCALE TIER r12 row for
 e112_semantic_dedup_chain (LSH bucket → within-bucket cosine pairs →
-min-label CC → per-vector disposition; operators/surface12.py).
+min-label CC → per-vector disposition; operators/similarity.py).
 
 Replication is a GRAPH BLOW-UP, not a disjoint copy: replica k shifts
 vec_id by k·10^7 but keeps the embedding IDENTICAL, so every vector's K
@@ -63,7 +63,7 @@ def vecs(spark: SparkSession, replicas: int):
 
 
 def run_tier(spark: SparkSession, k: int):
-    from pyspark_ml_features_spark.operators.surface12 import (
+    from pyspark_ml_features_spark.operators.similarity import (
         semantic_dedup_disposition,
     )
 
@@ -92,7 +92,7 @@ def run_incremental_tier(spark: SparkSession, k: int):
     (the bucketized base frame + its labels, written to parquet by an
     untimed prep stage standing in for the nightly label store). The
     timed incremental run is exactly e114's graded stage-2 plan
-    (surface12.incremental_semantic_disposition): bucketize the delta,
+    (similarity.incremental_semantic_disposition): bucketize the delta,
     delta×union candidate pairs, star edges, warm-started fixpoint.
     Returns the kept-cluster multiset (must equal the batch tier's), the
     candidate counts actually evaluated by each strategy (arithmetic
@@ -101,7 +101,7 @@ def run_incremental_tier(spark: SparkSession, k: int):
     import os
     import shutil
 
-    from pyspark_ml_features_spark.operators.surface12 import (
+    from pyspark_ml_features_spark.operators.similarity import (
         _bucketize,
         _cluster_bucketized,
         incremental_semantic_disposition,

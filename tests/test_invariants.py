@@ -826,7 +826,7 @@ def test_distributed_rank_monotone_on_real_data(spark):
     1..n permutation) and order agreement (sorting by grk yields a
     non-decreasing order key)."""
     from pyspark_ml_features_spark.operators.basic import table
-    from pyspark_ml_features_spark.operators.relational6 import (
+    from pyspark_ml_features_spark.operators.relational import (
         distributed_row_number,
     )
 
@@ -1141,9 +1141,9 @@ def test_e115_multiprobe_sets_nested_and_recall_monotone(spark):
     import pyspark.sql.functions as F
 
     from pyspark_ml_features_spark.functions.arrays import to_double_array
-    from pyspark_ml_features_spark.operators.similarity import _bucketize
-    from pyspark_ml_features_spark.operators.surface13 import (
+    from pyspark_ml_features_spark.operators.similarity import (
         N_PROBE_DEPTHS,
+        _bucketize,
         multiprobe_candidates,
     )
     from tests.conftest import SF_DIR
@@ -1231,10 +1231,10 @@ def test_e116_or_banding_disjoint_attribution_and_e115_crosspin(spark):
     import os
 
     from pyspark_ml_features_spark.functions.arrays import to_double_array
-    from pyspark_ml_features_spark.operators.similarity import _bucketize
-    from pyspark_ml_features_spark.operators.surface13 import (
+    from pyspark_ml_features_spark.operators.similarity import (
         N_BANDS,
         _band_planes,
+        _bucketize,
         or_band_candidates,
     )
 

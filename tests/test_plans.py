@@ -770,7 +770,7 @@ def test_distributed_rank_uses_range_partitioning(spark):
     regression this test pins out."""
     import pyspark.sql.functions as F
 
-    from pyspark_ml_features_spark.operators.relational6 import (
+    from pyspark_ml_features_spark.operators.relational import (
         distributed_row_number,
     )
     from pyspark_ml_features_spark.plans.audit import (

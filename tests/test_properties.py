@@ -129,7 +129,7 @@ def test_distributed_row_number_matches_sorted_order(spark, vals):
     equal a plain sorted-order index for ANY tie distribution — including
     the adversarial all-equal case, where determinism comes entirely from
     the unique tie-break column."""
-    from pyspark_ml_features_spark.operators.relational6 import (
+    from pyspark_ml_features_spark.operators.relational import (
         distributed_row_number,
     )
 
@@ -152,7 +152,7 @@ def test_distributed_prefix_sum_matches_window(spark, rows):
     single-partition running sum for ANY tie/weight distribution —
     ranks from the order, cumulative from the weights, offsets from the
     per-partition metadata pass."""
-    from pyspark_ml_features_spark.operators.relational6 import (
+    from pyspark_ml_features_spark.operators.relational import (
         distributed_prefix_sum,
     )
 
