@@ -17,6 +17,24 @@ from pyspark.sql import SparkSession
 DEFAULT_SEED = 42
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` if set, else min(16g, half the host's
+    MemTotal). A fixed 16g heap can exceed what a smaller host has to
+    spare; the JVM then grows until the kernel's OOM killer ends it."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    cap_mib = 16 * 1024
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mib, int(line.split()[1]) // 2048)}m"
+    except OSError:  # no /proc (macOS, Windows)
+        pass
+    return f"{cap_mib}m"
+
+
 def get_spark(app_name: str = "pyspark-ml-features-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -38,7 +56,7 @@ def get_spark(app_name: str = "pyspark-ml-features-spark",
                 str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", "32")))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         # keep catalog artifacts (bucketed-table tests) out of the repo
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/pmfs-warehouse"))

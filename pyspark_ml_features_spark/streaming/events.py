@@ -24,7 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark_ml_features_spark.registry import register
-from pyspark_ml_features_spark.sources import table
+from pyspark_ml_features_spark.sources import parquet_scan, table
 from pyspark_ml_features_spark.tmp_artifacts import register as _rm_at_exit
 
 _sink_counter = itertools.count()
@@ -56,12 +56,13 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stage_single_parquet(sf_dir, "events")
     # Match the batch reader's layout handling (sources/io.py:table): the
     # legacy nanos layout must be read as long and truncated; the round-3+
-    # timestamp[us] layout streams natively.
-    raw = spark.read.parquet(src)
+    # timestamp[us] layout streams natively. The conf is set before the
+    # schema read, as table() does, so both share one memoized schema.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = parquet_scan(spark, src)
     ts_raw = dict(raw.dtypes)["ts"]
     raw_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in raw.schema.fields)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stream = spark.readStream.schema(raw_schema).parquet(stage)
     if ts_raw == "bigint":  # legacy nanos layout
         return stream.withColumn(
@@ -771,7 +772,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stage_single_parquet(sf_dir, "documents")
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
-        for f in spark.read.parquet(src).schema.fields)
+        for f in parquet_scan(spark, src).schema.fields)
     return spark.readStream.schema(schema).parquet(stage)
 
 

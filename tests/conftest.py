@@ -26,6 +26,21 @@ def spark():
     s.stop()
 
 
+def _read_only(df, name: str):
+    """Shadow ``df``'s cache-state methods with ones that raise."""
+    def refuse(method: str):
+        def raise_(*args, **kwargs):
+            raise AssertionError(
+                f"{method}() on the shared built frame of {name!r}: built() "
+                "frames are read-only; build a private copy with "
+                "registry.all_queries()[name].fn(spark, sf_dir)")
+        return raise_
+
+    for method in ("persist", "cache", "unpersist"):
+        setattr(df, method, refuse(method))
+    return df
+
+
 @pytest.fixture(scope="session")
 def built(spark):
     """Session-scoped (query, sf_dir) -> (DataFrame, checkpoint captures)
@@ -37,6 +52,10 @@ def built(spark):
     wall (VERDICT r13 item 3: the suite outgrew the driver's pytest
     window). Consumers only READ the built frame (plan text, schema,
     toPandas), so one build per (query, scale) per session is exact.
+
+    The read-only contract is enforced: ``persist``, ``cache`` and
+    ``unpersist`` on a shared frame raise, because a consumer that changed
+    its cache state would change what every later consumer reads.
     """
     from pyspark_ml_features_spark import registry
     from pyspark_ml_features_spark.plans.audit import (
@@ -51,7 +70,7 @@ def built(spark):
         if key not in cache:
             with capture_checkpoint_plans() as captured:
                 df = qs[name].fn(spark, sf_dir)
-            cache[key] = (df, list(captured))
+            cache[key] = (_read_only(df, name), list(captured))
         return cache[key]
 
     return build

@@ -1,15 +1,105 @@
-"""Source/sink round-trips and the B4 plot utility."""
+"""Sources (the parquet schema memo included), sink round-trips and the B4
+plot utility."""
 
 from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql.types import BinaryType, StringType
 
-from pyspark_ml_features_spark.sources import table
+from pyspark_ml_features_spark.sources import parquet_scan, table
+from pyspark_ml_features_spark.sources.io import TABLES
 from pyspark_ml_features_spark.sources.sinks import write_csv, write_parquet
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SMOKE_SF_DIR
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted by the status
+    tracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"test-io-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_table_call_launches_no_job(spark, tmp_path):
+    # the counter sees inference jobs: a path read for the first time
+    path = str(tmp_path / "fresh.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    _, first = _jobs_launched(spark, lambda: parquet_scan(spark, path))
+    assert first >= 1, "the first read of a path must infer its schema"
+
+    table(spark, SMOKE_SF_DIR, "lineitem")
+    df, jobs = _jobs_launched(
+        spark, lambda: table(spark, SMOKE_SF_DIR, "lineitem"))
+    assert jobs == 0, f"a repeated table() call launched {jobs} jobs"
+    assert df.count() == table(spark, SMOKE_SF_DIR, "lineitem").count() > 0
+
+
+def test_memoized_schema_equals_inferred_schema(spark):
+    # events is read with nanosAsLong set, as table() reads it
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for name in TABLES:
+        path = os.path.join(SMOKE_SF_DIR, f"{name}.parquet")
+        parquet_scan(spark, path)
+        memo, jobs = _jobs_launched(spark, lambda: parquet_scan(spark, path))
+        assert jobs == 0, f"{name}: a memoized read launched {jobs} jobs"
+        assert memo.schema == spark.read.parquet(path).schema, name
+
+
+@pytest.mark.parametrize("layout", ["file", "directory"])
+def test_rewritten_file_is_inferred_afresh(spark, tmp_path, layout):
+    # a directory table: rewriting a file in place leaves the directory's
+    # own mtime unchanged, so the key must cover the files under it
+    path = str(tmp_path / "rewritten.parquet")
+    data = path
+    if layout == "directory":
+        os.makedirs(path)
+        data = os.path.join(path, "part-0.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), data)
+    assert parquet_scan(spark, path).dtypes == [("a", "bigint")]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), data)
+    df = parquet_scan(spark, path)
+    assert df.dtypes == [("b", "string"), ("c", "double")]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_inference_conf_is_part_of_the_key(spark, tmp_path):
+    path = str(tmp_path / "binary.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"ab"], pa.binary())}), path)
+    conf = "spark.sql.parquet.binaryAsString"
+    try:
+        spark.conf.set(conf, "false")
+        assert parquet_scan(spark, path).schema["b"].dataType == BinaryType()
+        spark.conf.set(conf, "true")
+        as_string = parquet_scan(spark, path)
+        assert as_string.schema["b"].dataType == StringType()
+        assert as_string.collect()[0]["b"] == "ab"
+        spark.conf.set(conf, "false")
+        assert parquet_scan(spark, path).schema["b"].dataType == BinaryType()
+    finally:
+        spark.conf.unset(conf)
+
+
+def test_two_scans_of_one_table_self_join(spark):
+    a = table(spark, SMOKE_SF_DIR, "nation")
+    b = table(spark, SMOKE_SF_DIR, "nation")
+    assert a.join(b, a.n_nationkey == b.n_nationkey).count() == 25
+    # five nations per region: 5 x C(5, 2) ordered-by-key pairs
+    pairs = a.join(b, (a.n_regionkey == b.n_regionkey)
+                   & (a.n_nationkey < b.n_nationkey))
+    assert pairs.count() == 50
 
 
 def test_parquet_sink_partitioned_roundtrip(spark):
@@ -57,8 +147,6 @@ def test_csv_sink_roundtrip(spark):
 
 
 def test_plot_validation_curves(tmp_path):
-    import pytest
-
     from pyspark_ml_features_spark.operators.ml import plot_validation_curves
 
     target = tmp_path / "curve.png"

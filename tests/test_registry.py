@@ -1,5 +1,6 @@
 """Registry hygiene: COVERAGE.md stays in step with the registry and the
-grade files, and no operator module silently rebinds a top-level name."""
+grade files, no operator module silently rebinds a top-level name, and the
+shared built frames stay read-only."""
 
 from __future__ import annotations
 
@@ -7,7 +8,10 @@ import ast
 import re
 from pathlib import Path
 
+import pytest
+
 from pyspark_ml_features_spark import registry
+from tests.conftest import SF_DIR
 
 REPO = Path(__file__).parent.parent
 OPERATORS = REPO / "pyspark_ml_features_spark" / "operators"
@@ -84,3 +88,13 @@ def test_no_operator_module_rebinds_a_top_level_name():
                                f"and {line})")
             seen.setdefault(name, line)
     assert not clashes, "top-level names bound twice:\n" + "\n".join(clashes)
+
+
+def test_built_frames_refuse_cache_state_changes(built):
+    """The shared ``built`` frames are read-only: a consumer that cached
+    or unpersisted one would change what every later consumer reads."""
+    df, _ = built("a3_parquet_scan", SF_DIR)
+    for method in ("persist", "cache", "unpersist"):
+        with pytest.raises(AssertionError, match="read-only"):
+            getattr(df, method)()
+    assert not df.is_cached
