@@ -6,6 +6,12 @@ partition coalescing + skew-join splitting), Arrow for any pandas boundary,
 and a shuffle-partition count sized for the local harness; on a real cluster
 these are overridden by spark-submit conf, so every knob here is a default,
 not a hard-coded assumption.
+
+On a ``local[...]`` master (the default) Python workers also start from
+``pyspark_ml_features_spark.worker``, which memoizes each zip archive's
+parsed directory so a UDF task stops re-reading ``pyspark.zip`` on every
+task. Other masters keep ``pyspark.worker``: their executors cannot see
+the driver's source tree.
 """
 
 from __future__ import annotations
@@ -42,12 +48,14 @@ def get_spark(app_name: str = "pyspark-ml-features-spark",
 
     Defaults target the test harness (``local[$SPARK_GRAFT_CPUS]``); on a
     cluster, pass ``master=None`` with an external conf and these become
-    no-ops for anything already set.
+    no-ops for anything already set. A ``local[...]`` master also starts
+    Python workers from ``pyspark_ml_features_spark.worker``, with the
+    package's parent directory on their PYTHONPATH.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -61,6 +69,15 @@ def get_spark(app_name: str = "pyspark-ml-features-spark",
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/pmfs-warehouse"))
     )
+    if master == "local" or master.startswith("local["):
+        # the daemon imports the worker module when it starts, before a
+        # task puts the addPyFile zip on sys.path
+        builder = (
+            builder.config("spark.python.worker.module",
+                           "pyspark_ml_features_spark.worker")
+            .config("spark.executorEnv.PYTHONPATH",
+                    os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -101,7 +118,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply engine runtime confs to an externally provided session.
 
     The driver hands us its own SparkSession; make sure the confs our
-    operators rely on (AQE, Arrow) are set without rebuilding it.
+    operators rely on (AQE, Arrow) are set without rebuilding it. The
+    worker module of ``get_spark`` is a static conf, so such a session
+    keeps ``pyspark.worker`` and re-reads each zip directory per task.
     """
     _ship_package(spark)
     for key, value in (

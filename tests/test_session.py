@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import os
+from types import SimpleNamespace
+
+import pytest
+
+from pyspark_ml_features_spark import session
 from pyspark_ml_features_spark.session import default_driver_memory
 
 
@@ -20,3 +26,46 @@ def test_driver_memory_is_half_the_host_capped_at_16g(monkeypatch):
 def test_explicit_driver_memory_wins(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert default_driver_memory() == "3g"
+
+
+class _Builder:
+    """Records what get_spark configures; starts no SparkContext."""
+
+    def __init__(self):
+        self.confs = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, master):
+        return self.config("spark.master", master)
+
+    def config(self, key, value):
+        self.confs[key] = value
+        return self
+
+    def getOrCreate(self):
+        return SimpleNamespace(confs=self.confs,
+                               sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+
+def _built_confs(monkeypatch, master):
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=_Builder()))
+    return session.get_spark(master=master).confs
+
+
+@pytest.mark.parametrize("master", [None, "local", "local[2]", "local[*]"])
+def test_local_masters_start_workers_from_the_engine_module(monkeypatch, master):
+    confs = _built_confs(monkeypatch, master)
+    assert confs["spark.python.worker.module"] == "pyspark_ml_features_spark.worker"
+    root = confs["spark.executorEnv.PYTHONPATH"]
+    assert os.path.isfile(os.path.join(root, "pyspark_ml_features_spark", "worker.py"))
+
+
+@pytest.mark.parametrize("master", ["spark://host:7077", "yarn", "k8s://https://host:443",
+                                    "local-cluster[2,1,1024]"])
+def test_other_masters_keep_the_pyspark_worker(monkeypatch, master):
+    confs = _built_confs(monkeypatch, master)
+    assert confs["spark.master"] == master
+    assert "spark.python.worker.module" not in confs
+    assert "spark.executorEnv.PYTHONPATH" not in confs
