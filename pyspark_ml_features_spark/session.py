@@ -7,6 +7,19 @@ and a shuffle-partition count sized for the local harness; on a real cluster
 these are overridden by spark-submit conf, so every knob here is a default,
 not a hard-coded assumption.
 
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+is off by default here. When it is on, every ``F.*`` and Column call
+captures the Python call site and sends it to the JVM, several Py4J round
+trips per call: about a third of the round trips of a query build. Off, a
+runtime error's DataFrame context no longer names the Python line that
+built the failing expression; analysis errors still raise at the builder
+line. To turn it back on, build the session with the conf set to ``true``
+before ``get_spark`` (it is a static conf, so ``getOrCreate`` keeps an
+existing session's value). PySpark latches the setting once per process
+(``pyspark.errors.utils._enable_debugging_cache``), on the first decorated
+call: a driver session that has already made such a call keeps debugging
+on, and ``tune_session`` cannot change it.
+
 On a ``local[...]`` master (the default) Python workers also start from
 ``pyspark_ml_features_spark.worker``, which memoizes each zip archive's
 parsed directory so a UDF task stops re-reading ``pyspark.zip`` on every
@@ -21,6 +34,20 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SEED = 42
+
+# Confs every engine session gets: set by get_spark's builder, and by
+# tune_session on a session built elsewhere (where static ones stay as the
+# session was built).
+ENGINE_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    # Driver tables store naive timestamps; align Spark's session-local
+    # interpretation with DuckDB's naive reading for oracle parity.
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.python.sql.dataFrameDebugging.enabled", "false"),
+)
 
 
 def default_driver_memory() -> str:
@@ -53,16 +80,12 @@ def get_spark(app_name: str = "pyspark-ml-features-spark",
     package's parent directory on their PYTHONPATH.
     """
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for key, value in ENGINE_CONFS:
+        builder = builder.config(key, value)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", "32")))
-        .config("spark.sql.session.timeZone", "UTC")
+        builder.config("spark.sql.shuffle.partitions",
+                       str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", "32")))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", default_driver_memory())
         # keep catalog artifacts (bucketed-table tests) out of the repo
@@ -119,21 +142,15 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The driver hands us its own SparkSession; make sure the confs our
     operators rely on (AQE, Arrow) are set without rebuilding it. The
-    worker module of ``get_spark`` is a static conf, so such a session
-    keeps ``pyspark.worker`` and re-reads each zip directory per task.
+    worker module of ``get_spark`` and the DataFrame debugging default are
+    static confs, so such a session keeps ``pyspark.worker`` (and re-reads
+    each zip directory per task) and keeps debugging as it was built.
     """
     _ship_package(spark)
-    for key, value in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        # Driver tables store naive timestamps; align Spark's session-local
-        # interpretation with DuckDB's naive reading for oracle parity.
-        ("spark.sql.session.timeZone", "UTC"),
-    ):
-        try:
+    for key, value in ENGINE_CONFS:
+        # every query build calls this: a set of a static conf would raise
+        # (and build a JVM exception) each time, so set only what differs
+        # and can change
+        if spark.conf.get(key) != value and spark.conf.isModifiable(key):
             spark.conf.set(key, value)
-        except Exception:  # immutable conf on some builds — fine, it's a default
-            pass
     return spark

@@ -6,14 +6,18 @@ plan stays declarative). CSV-with-inference is kept for parity with the
 reference's loader (spark_ml_features.py:27); on real deployments prefer an
 explicit schema so a 100 TB scan doesn't pay an inference pre-pass.
 
-Parquet schemas are inferred once per process. Inference reads the file
-footers in a Spark job, and every query build used to pay that job again
-for each table it scans. ``parquet_scan`` keeps each inferred ``StructType``
-in a memo and hands later reads the schema explicitly, which launches no
-job. The memo key is (resolved path, the size, mtime and inode of every
-file under it, the session confs that change parquet inference), so a
-rewritten file or a flipped conf is inferred afresh instead of being served
-a stale schema.
+Each parquet relation is resolved once per session. Resolving one looks up
+the data source, lists the files, copies the Hadoop conf and, on a first
+read, infers the schema in a Spark job; every query build used to pay that
+again for each table it scans. ``parquet_scan`` keeps each resolved
+relation's analyzed plan on the SparkSession object and hands later reads
+a new instance of it: the same relation with fresh attribute ids, so no job
+runs and nothing is listed or resolved again. The memo key is (resolved
+path, the size, mtime and inode of every file under it, the session confs
+that change parquet inference), so a rewritten file or a flipped conf is
+resolved afresh instead of being served a stale relation. A relation holds
+the session it was resolved in, so ``spark.newSession()`` starts an empty
+memo of its own.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -38,8 +43,6 @@ INFERENCE_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema",
 )
-
-_SCHEMAS: dict[tuple, StructType] = {}
 
 
 def _file_stats(path: str) -> tuple:
@@ -61,23 +64,30 @@ def parquet_scan(spark: SparkSession, path: str) -> DataFrame:
     """A3: parquet source. Filters/projections applied by callers reach the
     scan via Catalyst (verify with .explain: PushedFilters / ReadSchema).
 
-    The first read of a path infers its schema (one footer-reading Spark
-    job); later reads with the same memo key (resolved path, file stats,
-    ``INFERENCE_CONFS`` values) pass the memoized schema to the reader and
-    launch no job. Each call still returns a fresh relation, so two scans
-    of one table self-join with distinct attribute ids.
+    The first read of a path in a session resolves its relation (and infers
+    its schema in one footer-reading Spark job) and memoizes the analyzed
+    plan on ``spark`` under (resolved path, file stats, ``INFERENCE_CONFS``
+    values). A later read with the same key returns
+    ``Dataset.ofRows(session, plan.newInstance())``: the memoized relation
+    with fresh attribute ids, so two scans of one table self-join, and no
+    job, file listing or data source lookup.
     """
     resolved = os.path.realpath(path)
-    # Stat before inferring: a file rewritten in between leaves a key that
-    # no later stat matches, never a key paired with an older schema.
+    # Stat before resolving: a file rewritten in between leaves a key that
+    # no later stat matches, never a key paired with an older relation.
     key = (resolved, _file_stats(resolved),
            tuple(spark.conf.get(k) for k in INFERENCE_CONFS))
-    schema = _SCHEMAS.get(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = df.schema
-    return df
+    relations = getattr(spark, "_pmfs_relations", None)
+    if relations is None:
+        relations = spark._pmfs_relations = {}
+    plan = relations.get(key)
+    if plan is None:
+        df = spark.read.parquet(path)
+        relations[key] = df._jdf.queryExecution().analyzed()
+        return df
+    # built directly: spark._jvm.org.apache... costs a round trip per dot
+    dataset = JavaClass("org.apache.spark.sql.classic.Dataset", spark._jvm._gateway_client)
+    return DataFrame(dataset.ofRows(spark._jsparkSession, plan.newInstance()), spark)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -92,10 +102,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     legacy layout, and normalize TIMESTAMP_NTZ to session-local TIMESTAMP
     so downstream window/watermark code sees one type either way.
 
-    Reads go through ``parquet_scan``, so a table's schema is inferred once
-    per process and file version. The events branch sets ``nanosAsLong``
-    before the scan reads the memo key, so the key records the conf the
-    schema was inferred under.
+    Reads go through ``parquet_scan``, so a table's relation is resolved
+    once per session and file version, and each later call gets a new
+    instance of it. The events branch sets ``nanosAsLong`` before the scan
+    reads the memo key, so the key records the conf the relation was
+    resolved under.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")

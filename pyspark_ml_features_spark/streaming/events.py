@@ -57,7 +57,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Match the batch reader's layout handling (sources/io.py:table): the
     # legacy nanos layout must be read as long and truncated; the round-3+
     # timestamp[us] layout streams natively. The conf is set before the
-    # schema read, as table() does, so both share one memoized schema.
+    # schema read, as table() does, so both share one memoized relation.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = parquet_scan(spark, src)
     ts_raw = dict(raw.dtypes)["ts"]

@@ -1,4 +1,4 @@
-"""Sources (the parquet schema memo included), sink round-trips and the B4
+"""Sources (the parquet relation memo included), sink round-trips and the B4
 plot utility."""
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql.types import BinaryType, StringType
 
 from pyspark_ml_features_spark.sources import parquet_scan, table
-from pyspark_ml_features_spark.sources.io import TABLES
+from pyspark_ml_features_spark.sources.io import INFERENCE_CONFS, TABLES
 from pyspark_ml_features_spark.sources.sinks import write_csv, write_parquet
 from tests.conftest import SF_DIR, SMOKE_SF_DIR
 
@@ -100,6 +100,29 @@ def test_two_scans_of_one_table_self_join(spark):
     pairs = a.join(b, (a.n_regionkey == b.n_regionkey)
                    & (a.n_nationkey < b.n_nationkey))
     assert pairs.count() == 50
+
+
+def _relation_and_ids(df):
+    """(identity hash of the scan's HadoopFsRelation, output attribute ids)."""
+    plan = df._jdf.queryExecution().analyzed()
+    out = plan.output()
+    ids = [out.apply(i).exprId().id() for i in range(out.size())]
+    return df._sc._jvm.java.lang.System.identityHashCode(plan.relation()), ids
+
+
+def test_table_calls_share_one_relation_per_session(spark):
+    rel_a, ids_a = _relation_and_ids(table(spark, SMOKE_SF_DIR, "nation"))
+    rel_b, ids_b = _relation_and_ids(table(spark, SMOKE_SF_DIR, "nation"))
+    assert rel_a == rel_b, "a repeated table() call resolved its relation again"
+    assert not set(ids_a) & set(ids_b), "two table() calls share attribute ids"
+
+    other = spark.newSession()
+    for conf in INFERENCE_CONFS:  # the same key, so only the session differs
+        other.conf.set(conf, spark.conf.get(conf))
+    rel_c, _ = _relation_and_ids(table(other, SMOKE_SF_DIR, "nation"))
+    rel_d, _ = _relation_and_ids(table(other, SMOKE_SF_DIR, "nation"))
+    assert rel_c != rel_a, "a new session was handed the first session's relation"
+    assert rel_c == rel_d
 
 
 def test_parquet_sink_partitioned_roundtrip(spark):
