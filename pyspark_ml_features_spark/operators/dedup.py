@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspark_ml_features_spark.functions.skew import fan_out
 from pyspark_ml_features_spark.functions.text import tokens, word_ngrams
-from pyspark_ml_features_spark.plans.audit import probe_checkpoint
 from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import table
 
@@ -824,56 +823,30 @@ FROM reach GROUP BY node
 )
 def e21_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the J ≥ 0.8
-    similarity graph via iterative min-label propagation (the step that
-    turns pairwise dedup output into keep/drop decisions — one canonical
-    survivor per component). The oracle is a recursive-CTE transitive
-    closure: both converge to cluster_id = min reachable doc_id.
+    similarity graph (the step that turns pairwise dedup output into
+    keep/drop decisions — one canonical survivor per component). The
+    oracle is a recursive-CTE transitive closure: both converge to
+    cluster_id = min reachable doc_id, and ``is_kept`` marks each
+    component's minimum.
 
-    Scale shape: each iteration is ONE Spark job — the propagation join is
-    materialized by an eager localCheckpoint whose plan carries an
-    ``observe()`` metric counting changed labels, so convergence costs no
-    extra join/count job (round-1 ADVICE ran 2 jobs/round). Labels are
-    localCheckpoint'd each round to truncate lineage — the standard
-    large-graph CC pattern when a graph library isn't available. Raises if
-    the component diameter exceeds the round budget instead of silently
+    The fixpoint is graph.py's ``connected_components`` (imported
+    lazily: graph.py imports this module): pointer-jumped min-label
+    propagation, one Spark job per round — the eager localCheckpoint
+    that truncates lineage carries an ``observe()`` metric counting
+    changed labels, so convergence costs no extra job. Raises if the
+    component diameter exceeds the round budget instead of silently
     returning unconverged labels."""
-    from pyspark.sql import Observation
+    from pyspark_ml_features_spark.operators.graph import (
+        connected_components,
+        near_dup_edges,
+    )
 
-    max_rounds = 50
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    edges = (jaccard_pairs(d, tokens("text"), threshold=0.8)
-             .select("d1", "d2").cache())
-    sym = (edges.select(F.col("d1").alias("node"), F.col("d2").alias("nbr"))
-           .unionAll(edges.select(F.col("d2").alias("node"),
-                                  F.col("d1").alias("nbr"))))
-    labels = d.select("doc_id", F.col("doc_id").alias("cluster_id")).cache()
-    changed = None
-    for _ in range(max_rounds):
-        nbr_min = (sym.join(labels, sym.nbr == labels.doc_id)
-                   .groupBy("node").agg(F.min("cluster_id").alias("nbr_min")))
-        obs = Observation()
-        new_labels = (
-            labels.join(nbr_min, labels.doc_id == nbr_min.node, "left")
-            .select(labels.doc_id,
-                    F.least("cluster_id", "nbr_min").alias("cluster_id"),
-                    (F.col("nbr_min") < F.col("cluster_id")).alias("__chg"))
-            .observe(obs, F.sum(F.col("__chg").cast("int")).alias("n_changed")))
-        # eager: the one job per round (probe_checkpoint exposes the
-        # pre-truncation round plan to the registry-wide audit)
-        new_labels = probe_checkpoint(
-            new_labels, "e21_dedup_clusters.round").drop("__chg")
-        changed = obs.get["n_changed"] or 0
-        labels.unpersist()
-        labels = new_labels.cache()
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"e21_dedup_clusters did not converge in {max_rounds} rounds")
-    return labels.select(
-        "doc_id", "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_kept"))
+    cc = connected_components(d.select(F.col("doc_id").alias("node")),
+                              near_dup_edges(d, 0.8))
+    return cc.select(
+        F.col("node").alias("doc_id"), "cluster_id",
+        (F.col("node") == F.col("cluster_id")).alias("is_kept"))
 
 
 @register(

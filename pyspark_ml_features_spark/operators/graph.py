@@ -1,14 +1,32 @@
-"""Iterative graph operators: connected-component clustering of the
-near-duplicate pair graph — the step every production dedup pipeline runs
-AFTER pair generation (pairs alone don't say which documents form one
-duplicate GROUP; transitive closure does: A≈B, B≈C ⇒ {A,B,C} is one
-cluster and one representative survives).
+"""Iterative graph operators over the near-duplicate pair graph. This
+module owns every graph iteration in the engine; the registered queries,
+the other operator families and the ladder scripts call these functions
+instead of keeping loops of their own:
 
-This is the repo's only iterative-fixpoint operator, and it is exactly
-SQL-expressible: the DuckDB oracle computes the same transitive closure
-with a recursive CTE (min-label reachability), so the driver hash-checks
-an iterative Spark algorithm against recursive SQL — no rows-only
-weakening.
+- ``connected_components``: pointer-jumped min-label propagation to a
+  fixpoint, with an optional warm start. Every dedup CLUSTER query
+  (e21, e45, e47, e58, e66, e67, e103, e112, e114 and the curation
+  pipeline) runs it. Clustering is the step every production dedup
+  pipeline runs AFTER pair generation: pairs alone don't say which
+  documents form one duplicate GROUP; transitive closure does (A≈B,
+  B≈C ⇒ {A,B,C} is one cluster and one representative survives).
+- ``connected_components_star``: the large-star/small-star variant with
+  the proven O(log n) round bound (e109).
+- ``khop_reach``: bounded 3-hop BFS (e56).
+- ``pagerank``: fixed 5-round damped PageRank (e60).
+
+All four take an undirected edge list as ``(src, dst)`` rows with each
+edge given ONCE, in either direction (the two CC functions also accept
+duplicates and self-loops); ``_both_directions`` builds the directed
+adjacency the min-label, BFS and PageRank loops walk, so no caller
+writes a reverse copy.
+``with_cluster_size`` is the one cluster-size join behind every
+``cluster_size`` column.
+
+The fixpoints are exactly SQL-expressible: the DuckDB oracles compute
+the same transitive closure with a recursive CTE (min-label
+reachability), so the driver hash-checks an iterative Spark algorithm
+against recursive SQL — no rows-only weakening.
 
 Scale design (100 TB): min-label propagation converges in O(diameter)
 rounds; near-dup graphs are overwhelmingly tiny star/clique components
@@ -30,7 +48,7 @@ has no graph or dedup surface; this is SURVEY §2-E north-star scope.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from pyspark_ml_features_spark.functions.arrays import (
     duckdb_dot,
@@ -52,6 +70,28 @@ from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import table
 
 
+def near_dup_edges(docs: DataFrame, threshold: float) -> DataFrame:
+    """Token-set Jaccard >= ``threshold`` pairs of ``docs`` (doc_id,
+    text) as one-way (src, dst) edges, src < dst."""
+    return (jaccard_pairs(docs, tokens("text"), threshold=threshold)
+            .select(F.col("d1").alias("src"), F.col("d2").alias("dst")))
+
+
+def _both_directions(edges: DataFrame) -> DataFrame:
+    """The directed adjacency of an undirected (src, dst) edge list:
+    every edge plus its reverse."""
+    return edges.unionByName(edges.select(F.col("dst").alias("src"),
+                                          F.col("src").alias("dst")))
+
+
+def with_cluster_size(cc: DataFrame) -> DataFrame:
+    """``cc`` (node, cluster_id) with each row's ``cluster_size``: the
+    member count of its cluster."""
+    sizes = (cc.groupBy("cluster_id")
+             .agg(F.count(F.lit(1)).alias("cluster_size")))
+    return cc.join(sizes, "cluster_id")
+
+
 def connected_components(nodes: DataFrame, edges: DataFrame,
                          max_rounds: int = 25,
                          stats: dict | None = None,
@@ -59,15 +99,15 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     """Min-label propagation to a fixpoint.
 
     ``nodes``: one column ``node`` (BIGINT). ``edges``: columns
-    ``src``/``dst``, must already be SYMMETRIC (both directions present).
+    ``src``/``dst``, each undirected edge given once in either direction
+    (the reverse is added here; duplicates and self-loops are harmless).
     Returns (node, cluster_id) where cluster_id = min node id reachable.
 
-    Convergence is detected by the label-sum invariant: labels only ever
-    decrease, so sum(lbl) is strictly monotone until the fixpoint — one
-    scalar aggregate per round instead of a change-count join. The scalar
-    collect is O(1) driver traffic (CLAUDE.md's no-driver-data rule allows
-    scalar fixpoint tests; this is how GraphX/GraphFrames drive iteration
-    too).
+    Convergence: each round's eager checkpoint carries an ``observe()``
+    metric counting the labels the round lowered, so a round costs ONE
+    Spark job and no separate probe runs, before the loop or in it.
+    Labels only ever decrease, so zero changed labels is the fixpoint;
+    ``stats["rounds"]`` counts the final no-change confirmation round.
 
     ``init_labels`` (node, lbl) warm-starts the fixpoint — correct for any
     assignment where each label is the min node id of a SUBSET of its
@@ -75,27 +115,28 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     the fixpoint of min-propagation from such labels is still the
     component min. Nodes absent from ``init_labels`` start as themselves.
 
-    ``edges`` is materialized ONCE up front (probe_checkpoint): each
-    round runs as its own Spark job, and jobs do not reuse another job's
-    shuffle stages — an un-checkpointed edge lineage (scan + shingle +
-    candidate join) would re-execute EVERY round. The probe also hands
-    the edge-building plan (the place an all-pairs join could hide) to
-    the registry-wide audit exactly once (VERDICT r5 task 4)."""
-    edges = probe_checkpoint(edges, "connected_components.edges")
+    The symmetric edge list is materialized ONCE up front
+    (probe_checkpoint): each round runs as its own Spark job, and jobs do
+    not reuse another job's shuffle stages — an un-checkpointed edge
+    lineage (scan + shingle + candidate join) would re-execute EVERY
+    round. The probe also hands the edge-building plan (the place an
+    all-pairs join could hide) to the registry-wide audit exactly once
+    (VERDICT r5 task 4)."""
+    edges = probe_checkpoint(_both_directions(edges),
+                             "connected_components.edges")
     labels = nodes.select("node", F.col("node").alias("lbl"))
     if init_labels is not None:
         labels = (labels.join(init_labels.withColumnRenamed("lbl", "init"),
                               "node", "left")
                   .select("node", F.coalesce("init", "lbl").alias("lbl")))
     labels = probe_checkpoint(labels, "connected_components.init")
-    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
     rounds = 0
     for rounds in range(1, max_rounds + 1):
         neigh_min = (edges.join(labels, edges["src"] == labels["node"])
                      .groupBy(F.col("dst").alias("node"))
                      .agg(F.min("lbl").alias("nmin")))
         stepped = (labels.join(neigh_min, "node", "left")
-                   .select("node",
+                   .select("node", F.col("lbl").alias("prev"),
                            F.least(F.col("lbl"),
                                    F.coalesce("nmin", "lbl")).alias("lbl")))
         # Pointer jumping (round-10): lbl <- min(lbl, lbl[lbl]). Every
@@ -116,16 +157,19 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                              F.col("lbl").alias("plbl"))
         jumped = (stepped.join(ptr, stepped["lbl"] == ptr["pnode"],
                                "left")
-                  .select(stepped["node"],
+                  .select(stepped["node"], stepped["prev"],
                           F.least(stepped["lbl"],
                                   F.coalesce("plbl", stepped["lbl"]))
                           .alias("lbl")))
-        labels = probe_checkpoint(jumped, "connected_components.round")
-        cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-        if cur_sum == prev_sum:
+        changed = Observation()
+        labels = probe_checkpoint(
+            jumped.observe(changed, F.count_if(F.col("lbl") < F.col("prev"))
+                           .alias("n"))
+            .select("node", "lbl"),
+            "connected_components.round")
+        if changed.get["n"] == 0:
             converged = True
             break
-        prev_sum = cur_sum
     else:
         converged = False
     if stats is not None:
@@ -135,8 +179,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     if not converged:
         # Same contract as connected_components_star (ADVICE r11, extended
         # by the r12 review to the shared mechanism): labels read before
-        # the label-sum probe confirms a fixpoint can split one component
-        # into several, so a capped run must raise, never silently return.
+        # the changed-label probe confirms a fixpoint can split one
+        # component into several, so a capped run must raise, never
+        # silently return.
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_rounds} rounds "
             f"— labels would be unreliable; raise max_rounds (pointer "
@@ -152,10 +197,13 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
     Beyond", SoCC'14) — the published O(log n)-round algorithm the
     min-label fixpoint's docstring names as the adversarial-graph
     upgrade. Same contract as ``connected_components`` (``nodes``: one
-    BIGINT ``node`` column; ``edges``: symmetric src/dst; returns
+    BIGINT ``node`` column; ``edges``: src/dst, each undirected edge once
+    in either direction — the first step below canonicalizes every edge
+    to (hi, lo) and drops self-loops and duplicates; returns
     (node, cluster_id) with cluster_id = component-min node id), so the
-    two are drop-in interchangeable — equality is pinned on every CC
-    fixture in tests/test_graph_star.py and driver-graded via e109.
+    two are drop-in interchangeable on the same one-way pairs — equality
+    is pinned on every CC fixture in tests/test_graph_star.py and
+    driver-graded via e109.
 
     Per round (both steps are one groupBy + one equi-join — the exact
     shuffle shape of a min-label round, just two of them):
@@ -176,12 +224,12 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
     rounds on ANY graph; measured on long chains (scripts/stress_cc.py
     ladder) both variants land at ~log2(n)+1 — 4096-node path: 13 star
     rounds vs 13 jumped min-label rounds, with min-label ~2× faster per
-    round (one shuffle + a scalar-agg probe vs two shuffles + an exact
-    set-equality probe). What the star variant buys is therefore the
-    GUARANTEE, not a chain speedup: single-hop pointer jumping matches
-    it empirically on paths but carries no published worst-case bound,
-    so star is the documented fallback when a fixpoint run blows past
-    the expected round budget on unknown topology.
+    round (one shuffle and a probe that rides its checkpoint vs two
+    shuffles + an exact set-equality probe). What the star variant buys
+    is therefore the GUARANTEE, not a chain speedup: single-hop pointer
+    jumping matches it empirically on paths but carries no published
+    worst-case bound, so star is the documented fallback when a fixpoint
+    run blows past the expected round budget on unknown topology.
 
     100 TB: identical per-round economics to the min-label fixpoint
     (equi-join shuffles on node id, lineage truncated per round via
@@ -251,12 +299,15 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
                     .alias("cluster_id")))
 
 
-@register(
-    "e45_dup_clusters_cc",
-    oracle="""
+def _near_dup_edges_ctes(sample: str, threshold: float,
+                         sub_cols: str = "doc_id") -> str:
+    """Oracle twin of ``near_dup_edges`` over ``documents WHERE sample``:
+    opens a recursive WITH and ends at ``edges``, the pairs in both
+    directions."""
+    return f"""
 WITH RECURSIVE sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
+    SELECT {sub_cols}, list_distinct(str_split(text, ' ')) AS sh
+    FROM documents WHERE {sample}
 ), sizes AS (
     SELECT doc_id, len(sh) AS n_sh FROM sub
 ), inv AS (
@@ -269,24 +320,38 @@ WITH RECURSIVE sub AS (
     SELECT d1, d2 FROM shared
     JOIN sizes sa ON d1 = sa.doc_id
     JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= 0.5
+    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= {threshold}
 ), edges AS (
     SELECT d1 AS src, d2 AS dst FROM pairs
     UNION ALL
     SELECT d2 AS src, d1 AS dst FROM pairs
-), reach(node, lbl) AS (
+)"""
+
+
+# Oracle twin of connected_components: min-label reachability over
+# ``edges`` from every ``sub`` document, as ``cc`` (doc_id, cluster_id).
+_CC_CTES = """, reach(node, lbl) AS (
     SELECT doc_id, doc_id FROM sub
     UNION
     SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
 ), cc AS (
     SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node
-), sz AS (
+)"""
+
+# e45's (and e109's) oracle: cluster id and size per sampled document.
+_DUP_CLUSTERS_ORACLE = (
+    _near_dup_edges_ctes("doc_id % 5 = 0", 0.5) + _CC_CTES + """, sz AS (
     SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
     FROM cc GROUP BY cluster_id
 )
 SELECT cc.doc_id, cc.cluster_id, sz.cluster_size
 FROM cc JOIN sz USING (cluster_id)
-""",
+""")
+
+
+@register(
+    "e45_dup_clusters_cc",
+    oracle=_DUP_CLUSTERS_ORACLE,
     tags=("north-star", "E1", "E3", "dedup", "graph", "iterative"),
 )
 def e45_dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,63 +371,30 @@ def e45_dup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dup_cluster_assignment(spark: SparkSession, sf_dir: str,
                            cc_fn) -> DataFrame:
     """The e45 pipeline with the CC algorithm as a parameter — ONE
-    definition of the sample filter, pair threshold, edge
-    symmetrization, and cluster-size join shared by e45 (min-label) and
-    e109 (large-star/small-star, below), so the two graded
-    queries can never diverge in anything but the algorithm under test
-    (r11 review finding: the pipeline was copied verbatim)."""
+    definition of the sample filter, pair threshold and cluster-size
+    join shared by e45 (min-label) and e109 (large-star/small-star,
+    below), so the two graded queries can never diverge in anything
+    but the algorithm under test (r11 review finding: the pipeline was
+    copied verbatim). Both algorithms take the same one-way pairs."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    prs = jaccard_pairs(d, tokens("text"), threshold=0.5)
-    edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-             .unionByName(
-                 prs.select(F.col("d2").alias("src"),
-                            F.col("d1").alias("dst"))))
-    nodes = d.select(F.col("doc_id").alias("node"))
-    cc = cc_fn(nodes, edges)
-    sizes = (cc.groupBy("cluster_id")
-             .agg(F.count(F.lit(1)).alias("cluster_size")))
-    return (cc.join(sizes, "cluster_id")
+    cc = cc_fn(d.select(F.col("doc_id").alias("node")),
+               near_dup_edges(d, 0.5))
+    return (with_cluster_size(cc)
             .select(F.col("node").alias("doc_id"), "cluster_id",
                     "cluster_size"))
 
 
 @register(
     "e47_incremental_cc",
-    oracle="""
-WITH RECURSIVE sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 IN (0, 1)
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id
-    JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= 0.5
-), edges AS (
-    SELECT d1 AS src, d2 AS dst FROM pairs
-    UNION ALL
-    SELECT d2 AS src, d1 AS dst FROM pairs
-), reach(node, lbl) AS (
-    SELECT doc_id, doc_id FROM sub
-    UNION
-    SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-), cc AS (
-    SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node
-), sz AS (
+    oracle=(_near_dup_edges_ctes("doc_id % 5 IN (0, 1)", 0.5) + _CC_CTES
+            + """, sz AS (
     SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
     FROM cc GROUP BY cluster_id
 )
 SELECT cc.doc_id, cc.cluster_id, sz.cluster_size,
        cc.doc_id % 5 AS is_new
 FROM cc JOIN sz USING (cluster_id)
-""",
+"""),
     tags=("north-star", "E1", "dedup", "graph", "incremental"),
 )
 def e47_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -385,26 +417,13 @@ def e47_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.filter(F.col("doc_id") % 5 == 0)
     union = d.filter((F.col("doc_id") % 5).isin(0, 1))
 
-    base_pairs = jaccard_pairs(base, tokens("text"), threshold=0.5)
-    base_edges = (base_pairs.select(F.col("d1").alias("src"),
-                                    F.col("d2").alias("dst"))
-                  .unionByName(base_pairs.select(F.col("d2").alias("src"),
-                                                 F.col("d1").alias("dst"))))
     base_labels = connected_components(
-        base.select(F.col("doc_id").alias("node")), base_edges) \
-        .withColumnRenamed("cluster_id", "lbl")
-
-    union_pairs = jaccard_pairs(union, tokens("text"), threshold=0.5)
-    union_edges = (union_pairs.select(F.col("d1").alias("src"),
-                                      F.col("d2").alias("dst"))
-                   .unionByName(union_pairs.select(F.col("d2").alias("src"),
-                                                   F.col("d1").alias("dst"))))
+        base.select(F.col("doc_id").alias("node")),
+        near_dup_edges(base, 0.5)).withColumnRenamed("cluster_id", "lbl")
     cc = connected_components(
-        union.select(F.col("doc_id").alias("node")), union_edges,
-        init_labels=base_labels)
-    sizes = (cc.groupBy("cluster_id")
-             .agg(F.count(F.lit(1)).alias("cluster_size")))
-    return (cc.join(sizes, "cluster_id")
+        union.select(F.col("doc_id").alias("node")),
+        near_dup_edges(union, 0.5), init_labels=base_labels)
+    return (with_cluster_size(cc)
             .select(F.col("node").alias("doc_id"), "cluster_id",
                     "cluster_size",
                     (F.col("node") % 5).alias("is_new")))
@@ -412,28 +431,8 @@ def e47_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e56_khop_reach",
-    oracle="""
-WITH RECURSIVE sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id
-    JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= 0.9
-), edges AS (
-    SELECT d1 AS src, d2 AS dst FROM pairs
-    UNION ALL
-    SELECT d2 AS src, d1 AS dst FROM pairs
-), walk(src, node, d) AS (
+    oracle=_near_dup_edges_ctes("doc_id % 5 = 0", 0.9)
+    + """, walk(src, node, d) AS (
     SELECT src, dst, 1 FROM edges
     UNION
     SELECT w.src, e.dst, w.d + 1
@@ -470,7 +469,22 @@ def e56_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     halos), and the same bounded-BFS primitive powers "related document"
     expansion. Pure integer counting, so the iterative Spark BFS is
     hash-checked against a DuckDB recursive CTE computing min-distance
-    <= 3 over the identical edge set.
+    <= 3 over the identical edge set. The BFS is ``khop_reach``.
+
+    Reference: no graph surface in the reference repo (six ML
+    utilities, spark_ml_features.py:1); SURVEY section 2-E north-star
+    scope."""
+    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
+    return (khop_reach(d.select(F.col("doc_id").alias("node")),
+                       near_dup_edges(d, 0.9))
+            .withColumnRenamed("node", "doc_id"))
+
+
+def khop_reach(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Per node, how many nodes sit at shortest-path distance exactly
+    1, 2 and 3: (node, n1, n2, n3), zeros for isolated nodes. ``nodes``:
+    one BIGINT ``node`` column; ``edges``: src/dst, each undirected edge
+    exactly once in either direction, no self-loops.
 
     BFS frontier expansion: each round joins the frontier to the edge
     list, drops self-reaches, and anti-joins everything already seen at
@@ -482,18 +496,8 @@ def e56_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on node id -- the standard Pregel step. Near-dup graphs are
     tiny star/clique components, so frontiers collapse after 1-2 hops;
     the anti-join keeps re-expansion from ever re-visiting settled
-    nodes. Degree skew (a viral template) salts like any hot join key.
-    Reference: no graph surface in the reference repo (six ML
-    utilities, spark_ml_features.py:1); SURVEY section 2-E north-star
-    scope."""
-    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    prs = jaccard_pairs(d, tokens("text"), threshold=0.9)
-    edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-             .unionByName(
-                 prs.select(F.col("d2").alias("src"),
-                            F.col("d1").alias("dst"))))
-    edges = probe_checkpoint(edges, "e56_khop_reach.edges")
-
+    nodes. Degree skew (a viral template) salts like any hot join key."""
+    edges = probe_checkpoint(_both_directions(edges), "khop_reach.edges")
     frontier = edges.select("src", F.col("dst").alias("other"))
     dist = frontier.withColumn("d", F.lit(1))
     for k in (2, 3):
@@ -508,13 +512,12 @@ def e56_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "left_anti"))
         dist = dist.unionByName(nxt.withColumn("d", F.lit(k)))
         frontier = nxt
-    counts = dist.groupBy("src").agg(
+    counts = dist.groupBy(F.col("src").alias("node")).agg(
         F.count_if(F.col("d") == 1).cast("bigint").alias("n1"),
         F.count_if(F.col("d") == 2).cast("bigint").alias("n2"),
         F.count_if(F.col("d") == 3).cast("bigint").alias("n3"))
-    nodes = d.select(F.col("doc_id").alias("src"))
-    return (nodes.join(counts, "src", "left")
-            .select(F.col("src").alias("doc_id"),
+    return (nodes.join(counts, "node", "left")
+            .select("node",
                     F.coalesce("n1", F.lit(0)).cast("bigint").alias("n1"),
                     F.coalesce("n2", F.lit(0)).cast("bigint").alias("n2"),
                     F.coalesce("n3", F.lit(0)).cast("bigint").alias("n3")))
@@ -585,15 +588,10 @@ def e58_semantic_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     prs = (a.join(F.broadcast(b), F.col("v1") < F.col("v2"))
            .select("v1", "v2", _pair_cos().alias("cosine"))
            .filter(F.col("cosine") >= 0.3))
-    edges = (prs.select(F.col("v1").alias("src"), F.col("v2").alias("dst"))
-             .unionByName(
-                 prs.select(F.col("v2").alias("src"),
-                            F.col("v1").alias("dst"))))
-    nodes = e.select(F.col("vec_id").alias("node"))
-    cc = connected_components(nodes, edges)
-    sizes = (cc.groupBy("cluster_id")
-             .agg(F.count(F.lit(1)).alias("cluster_size")))
-    return (cc.join(sizes, "cluster_id")
+    cc = connected_components(
+        e.select(F.col("vec_id").alias("node")),
+        prs.select(F.col("v1").alias("src"), F.col("v2").alias("dst")))
+    return (with_cluster_size(cc)
             .select(F.col("node").alias("vec_id"), "cluster_id",
                     "cluster_size"))
 
@@ -733,7 +731,19 @@ def e60_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact through all 5 rounds. The oracle unrolls the iterations as
     chained CTEs because standard SQL forbids aggregates inside a
     recursive CTE member. Dangling nodes hold rank 0.15 (no
-    in-contributions) identically on both sides.
+    in-contributions) identically on both sides. The iteration is
+    ``pagerank``."""
+    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
+    rank = pagerank(d.select(F.col("doc_id").alias("node")),
+                    near_dup_edges(d, 0.9))
+    return rank.select(F.col("node").alias("doc_id"),
+                       F.col("r").alias("pagerank"))
+
+
+def pagerank(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Five damped PageRank rounds (0.85, no 1/N term, each round's rank
+    rounded to 6 dp): (node, r). ``nodes`` and ``edges`` as for
+    ``khop_reach`` — a duplicate edge would count twice in the degree.
 
     100 TB: each round is the Pregel join-aggregate (edges x ranks on
     src, sum by dst) — one shuffle per round, localCheckpoint truncating
@@ -741,14 +751,8 @@ def e60_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly n_iters x |edges| join work. Degree skew salts like any hot
     key; the deployment variant adds dangling-mass redistribution and a
     convergence-delta stop, neither of which changes the plan shape."""
-    d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    prs = jaccard_pairs(d, tokens("text"), threshold=0.9).select("d1", "d2")
-    edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-             .unionByName(prs.select(F.col("d2").alias("src"),
-                                     F.col("d1").alias("dst"))))
-    edges = probe_checkpoint(edges, "e60_pagerank.edges")
+    edges = probe_checkpoint(_both_directions(edges), "pagerank.edges")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = d.select(F.col("doc_id").alias("node"))
     rank = nodes.withColumn("r", F.lit(1.0))
     for _ in range(5):
         contrib = (edges.join(rank, edges["src"] == rank["node"])
@@ -761,9 +765,8 @@ def e60_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.round(F.lit(0.15)
                                 + F.lit(0.85) * F.coalesce("s", F.lit(0.0)),
                                 6).alias("r")))
-        rank = probe_checkpoint(rank, "e60_pagerank.round")
-    return rank.select(F.col("node").alias("doc_id"),
-                       F.col("r").alias("pagerank"))
+        rank = probe_checkpoint(rank, "pagerank.round")
+    return rank
 
 
 def _cluster_sig_oracle() -> str:
@@ -772,34 +775,8 @@ def _cluster_sig_oracle() -> str:
     sig_cols = ", ".join(
         f"min(({a} * x + {b}) % {MINHASH_P}) AS s{i}"
         for i, (a, b) in enumerate(MINHASH_AFFINE))
-    return f"""
-WITH RECURSIVE sub AS (
-    SELECT doc_id, text, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id
-    JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= 0.5
-), edges AS (
-    SELECT d1 AS src, d2 AS dst FROM pairs
-    UNION ALL
-    SELECT d2 AS src, d1 AS dst FROM pairs
-), reach(node, lbl) AS (
-    SELECT doc_id, doc_id FROM sub
-    UNION
-    SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-), cc AS (
-    SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node
-), th AS (
+    return (_near_dup_edges_ctes("doc_id % 5 = 0", 0.5, "doc_id, text")
+            + _CC_CTES + f""", th AS (
     SELECT doc_id,
            list_transform(str_split(text, ' '),
                           tok -> {duckdb_rolling_hash('tok')}) AS th
@@ -819,7 +796,7 @@ SELECT cluster_id,
        CAST(count(DISTINCT doc_id) AS BIGINT) AS n_members,
        {sig_cols}
 FROM cx GROUP BY cluster_id
-"""
+""")
 
 
 @register(
@@ -849,12 +826,8 @@ def e67_cluster_minhash_signatures(spark: SparkSession,
     these signatures prices CROSS-CLUSTER merges without touching
     documents."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    prs = jaccard_pairs(d, tokens("text"), threshold=0.5).select("d1", "d2")
-    edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-             .unionByName(prs.select(F.col("d2").alias("src"),
-                                     F.col("d1").alias("dst"))))
     cc = connected_components(d.select(F.col("doc_id").alias("node")),
-                              edges) \
+                              near_dup_edges(d, 0.5)) \
         .select(F.col("node").alias("doc_id"), "cluster_id")
     sigs = minhash_signatures(d.select("doc_id", "text"))
     k = len(MINHASH_AFFINE)
@@ -924,40 +897,7 @@ def e68_cluster_pair_similarity(spark: SparkSession,
 
 @register(
     "e109_dup_clusters_cc_star",
-    oracle="""
-WITH RECURSIVE sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id
-    JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= 0.5
-), edges AS (
-    SELECT d1 AS src, d2 AS dst FROM pairs
-    UNION ALL
-    SELECT d2 AS src, d1 AS dst FROM pairs
-), reach(node, lbl) AS (
-    SELECT doc_id, doc_id FROM sub
-    UNION
-    SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-), cc AS (
-    SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node
-), sz AS (
-    SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
-    FROM cc GROUP BY cluster_id
-)
-SELECT cc.doc_id, cc.cluster_id, sz.cluster_size
-FROM cc JOIN sz USING (cluster_id)
-""",
+    oracle=_DUP_CLUSTERS_ORACLE,
     tags=("north-star", "E1", "dedup", "graph", "iterative"),
 )
 def e109_dup_clusters_cc_star(spark: SparkSession,

@@ -1582,10 +1582,8 @@ def e103_image_neardup_clusters(spark: SparkSession,
     b_ids = ids.select(F.col("hash_hi").alias("b_hi"),
                        F.col("hash_lo").alias("b_lo"),
                        F.col("node").alias("dst"))
-    pair_ids = prs.join(a_ids, ["a_hi", "a_lo"]).join(b_ids, ["b_hi", "b_lo"])
-    edges = (pair_ids.select("src", "dst")
-             .unionByName(pair_ids.select(F.col("dst").alias("src"),
-                                          F.col("src").alias("dst"))))
+    edges = (prs.join(a_ids, ["a_hi", "a_lo"]).join(b_ids, ["b_hi", "b_lo"])
+             .select("src", "dst"))
     cc = connected_components(ids.select("node"), edges)
     nd = (hashed.groupBy("hash_hi", "hash_lo")
           .agg(F.count(F.lit(1)).alias("n"))

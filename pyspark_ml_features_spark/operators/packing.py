@@ -921,11 +921,9 @@ def e66_cluster_split_no_leakage(spark: SparkSession,
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
     prs = jaccard_pairs(d, tokens("text"), threshold=0.5).select("d1", "d2")
-    edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-             .unionByName(prs.select(F.col("d2").alias("src"),
-                                     F.col("d1").alias("dst"))))
     cc = connected_components(d.select(F.col("doc_id").alias("node")),
-                              edges)
+                              prs.select(F.col("d1").alias("src"),
+                                         F.col("d2").alias("dst")))
     in_train = ((((F.col("cluster_id") % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345))
                  % F.lit(2048)) < 1638).cast("bigint")
     split = cc.select(F.col("node").alias("doc_id"), "cluster_id",

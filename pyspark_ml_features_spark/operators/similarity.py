@@ -611,23 +611,27 @@ def _cluster_bucketized(eb: DataFrame) -> DataFrame:
     )
 
     a, b = _pair_sides(eb)
-    pairs = (a.join(b, "bucket")
+    edges = (a.join(b, "bucket")
              .filter(F.col("v1") < F.col("v2"))
              .filter(_pair_cos() >= SEMANTIC_DUP_COSINE)
-             .select("v1", "v2"))
-    edges = (pairs.select(F.col("v1").alias("src"), F.col("v2").alias("dst"))
-             .unionByName(pairs.select(F.col("v2").alias("src"),
-                                       F.col("v1").alias("dst"))))
-    nodes = eb.select(F.col("vec_id").alias("node"))
-    cc = connected_components(nodes, edges)
-    sizes = (cc.groupBy("cluster_id")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("cluster_size")))
+             .select(F.col("v1").alias("src"), F.col("v2").alias("dst")))
+    cc = connected_components(eb.select(F.col("vec_id").alias("node")),
+                              edges)
+    return _disposition(eb, cc)
+
+
+def _disposition(eb: DataFrame, cc: DataFrame) -> DataFrame:
+    """(vec_id, bucket, cluster_id, cluster_size, stage) for every vector
+    of ``eb``: its ``cc`` cluster, the cluster's size, and 'kept' for the
+    cluster minimum, 'dup_reject' otherwise."""
+    from pyspark_ml_features_spark.operators.graph import with_cluster_size
+
     return (eb.select("vec_id", "bucket")
-            .join(cc.withColumnRenamed("node", "vec_id"), "vec_id")
-            .join(sizes, "cluster_id")
-            .select("vec_id", "bucket", "cluster_id", "cluster_size",
-                    F.when(F.col("vec_id") == F.col("cluster_id"), "kept")
-                    .otherwise("dup_reject").alias("stage")))
+            .join(with_cluster_size(cc).withColumnRenamed("node", "vec_id"),
+                  "vec_id")
+            .withColumn("stage",
+                        F.when(F.col("vec_id") == F.col("cluster_id"),
+                               "kept").otherwise("dup_reject")))
 
 
 def semantic_dedup_disposition(e: DataFrame) -> DataFrame:
@@ -668,8 +672,8 @@ def e114_incremental_semantic_dedup(spark: SparkSession,
 
     - base clusters enter the fixpoint as STAR EDGES (node ↔ its stored
       label — sound because the label, the cluster-min, IS a member, so
-      the star has exactly the base cluster's connectivity in 2·|base|
-      16-byte edges);
+      the star has exactly the base cluster's connectivity in |base|
+      16-byte edges, which connected_components walks both ways);
     - only delta×union candidate pairs are computed (the LSH bucket
       join restricted to pairs touching a new vector);
     - the min-label fixpoint warm-starts from the stored base labels
@@ -744,35 +748,20 @@ def incremental_semantic_disposition(eb: DataFrame,
     # it each delta-delta pair evaluated the 64-element fold twice and
     # needed a .distinct() shuffle afterwards).
     a, b = _pair_sides(eb)
-    pairs = (a.filter(F.col("v1") % 4 == 0)
-             .join(b, "bucket")
-             .filter((F.col("v1") < F.col("v2"))
-                     | (F.col("v2") % 4 != 0))
-             .filter(_pair_cos() >= SEMANTIC_DUP_COSINE)
-             .select("v1", "v2"))
-    delta_edges = (pairs.select(F.col("v1").alias("src"),
-                                F.col("v2").alias("dst"))
-                   .unionByName(pairs.select(F.col("v2").alias("src"),
-                                             F.col("v1").alias("dst"))))
-    star_edges = (base_labels.select(F.col("node").alias("src"),
-                                     F.col("lbl").alias("dst"))
-                  .unionByName(
-                      base_labels.select(F.col("lbl").alias("src"),
-                                         F.col("node").alias("dst"))))
-    nodes = eb.select(F.col("vec_id").alias("node"))
+    delta_edges = (a.filter(F.col("v1") % 4 == 0)
+                   .join(b, "bucket")
+                   .filter((F.col("v1") < F.col("v2"))
+                           | (F.col("v2") % 4 != 0))
+                   .filter(_pair_cos() >= SEMANTIC_DUP_COSINE)
+                   .select(F.col("v1").alias("src"),
+                           F.col("v2").alias("dst")))
+    star_edges = base_labels.select(F.col("node").alias("src"),
+                                    F.col("lbl").alias("dst"))
     cc = connected_components(
-        nodes, delta_edges.unionByName(star_edges),
-        init_labels=base_labels)
-    sizes = (cc.groupBy("cluster_id")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("cluster_size")))
-    return (eb.select("vec_id", "bucket")
-            .join(cc.withColumnRenamed("node", "vec_id"), "vec_id")
-            .join(sizes, "cluster_id")
-            .select("vec_id", "bucket", "cluster_id", "cluster_size",
-                    F.when(F.col("vec_id") == F.col("cluster_id"), "kept")
-                    .otherwise("dup_reject").alias("stage"),
-                    (F.col("vec_id") % 4 == 0).cast("bigint")
-                    .alias("is_new")))
+        eb.select(F.col("vec_id").alias("node")),
+        delta_edges.unionByName(star_edges), init_labels=base_labels)
+    return _disposition(eb, cc).withColumn(
+        "is_new", (F.col("vec_id") % 4 == 0).cast("bigint"))
 
 
 # own bucket + one probe per hyperplane, in plane order

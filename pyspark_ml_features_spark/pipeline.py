@@ -83,11 +83,9 @@ def curate(spark: SparkSession, sf_dir: str, *,
     # keep min doc_id per cluster; cluster_id rides to the split stage.
     prs = (minhash_candidate_pairs(d1.select("doc_id", "text"))
            .filter(F.col("est_jaccard") >= near_dup_min_est_jaccard))
-    edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-             .unionByName(prs.select(F.col("d2").alias("src"),
-                                     F.col("d1").alias("dst"))))
     cc = connected_components(
-        d1.select(F.col("doc_id").alias("node")), edges)
+        d1.select(F.col("doc_id").alias("node")),
+        prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")))
     clusters = cc.select(F.col("node").alias("doc_id"), "cluster_id")
     keep_ids = (clusters.groupBy("cluster_id")
                 .agg(F.min("doc_id").alias("doc_id")))

@@ -77,12 +77,11 @@ def main() -> None:
         prs = minhash_candidate_pairs(d).select("d1", "d2") \
             .localCheckpoint(eager=True)
         n_edges = prs.count()
-        edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-                 .unionByName(prs.select(F.col("d2").alias("src"),
-                                         F.col("d1").alias("dst"))))
         stats: dict = {}
-        cc = connected_components(d.select(F.col("doc_id").alias("node")),
-                                  edges, stats=stats)
+        cc = connected_components(
+            d.select(F.col("doc_id").alias("node")),
+            prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")),
+            stats=stats)
         sizes = cc.groupBy("cluster_id").count()
         agg = sizes.agg(
             F.count(F.lit(1)).alias("n_clusters"),
@@ -103,10 +102,8 @@ def main() -> None:
           f"{'minlabel_s':>10} {'star_s':>7} {'equal':>6}")
     for n in (1024, 4096):
         nodes = spark.range(1, n + 1).select(F.col("id").alias("node"))
-        pairs = spark.range(1, n).select(
+        edges = spark.range(1, n).select(
             F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
-        edges = pairs.unionByName(pairs.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")))
         s_min: dict = {}
         t0 = time.time()
         a = connected_components(nodes, edges, max_rounds=60,

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Graph-family stress tier: measure the near-dup similarity graph's
 geometry (edges, wedges, triangles) and the iterative operators' wall time
-(3-hop BFS = e56's shape, 5-round PageRank = e60's shape) across corpus
-tiers and Jaccard thresholds.
+(graph.py's khop_reach = e56's BFS, pagerank = e60's, connected_components)
+across corpus tiers and Jaccard thresholds. Each operator gets the one-way
+pair list, as the registered queries pass it.
 
 Motivation (recorded in DESIGN_SCALE.md): the synthetic corpus is so
 mutually similar that low thresholds produce a NEAR-COMPLETE graph — at
@@ -28,42 +29,9 @@ from pyspark_ml_features_spark.functions.text import tokens  # noqa: E402
 from pyspark_ml_features_spark.operators.dedup import jaccard_pairs  # noqa: E402
 from pyspark_ml_features_spark.operators.graph import (  # noqa: E402
     connected_components,
+    khop_reach,
+    pagerank,
 )
-
-
-def bfs3(nodes, edges):
-    frontier = edges.select("src", F.col("dst").alias("other"))
-    dist = frontier.withColumn("d", F.lit(1))
-    for k in (2, 3):
-        hop = edges.select(F.col("src").alias("hop_src"),
-                           F.col("dst").alias("hop_dst"))
-        nxt = (frontier.join(hop, frontier["other"] == hop["hop_src"])
-               .select(frontier["src"].alias("src"),
-                       hop["hop_dst"].alias("other"))
-               .filter(F.col("src") != F.col("other"))
-               .distinct()
-               .join(dist.select("src", "other"), ["src", "other"],
-                     "left_anti"))
-        dist = dist.unionByName(nxt.withColumn("d", F.lit(k)))
-        frontier = nxt
-    return dist.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
-
-
-def pagerank5(nodes, edges):
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    rank = nodes.withColumn("r", F.lit(1.0))
-    for _ in range(5):
-        contrib = (edges.join(rank, edges["src"] == rank["node"])
-                   .join(deg, "src")
-                   .select(F.col("dst").alias("node"),
-                           (F.col("r") / F.col("deg")).alias("c"))
-                   .groupBy("node").agg(F.sum("c").alias("s")))
-        rank = (nodes.join(contrib, "node", "left")
-                .select("node", F.round(
-                    F.lit(0.15) + F.lit(0.85) * F.coalesce("s", F.lit(0.0)),
-                    6).alias("r")))
-        rank = rank.localCheckpoint(eager=True)
-    return rank
 
 
 def run(spark: SparkSession, sf_dir: str, tier: str, threshold: float,
@@ -82,17 +50,13 @@ def run(spark: SparkSession, sf_dir: str, tier: str, threshold: float,
     line = (f"{tier:7s} th={threshold:4.2f} n={n:5d} pairs={m:8,d} "
             f"wedges={wedges:12,d} triangles={tris:10,d}")
     if heavy:
-        edges = (prs.select(F.col("d1").alias("src"),
-                            F.col("d2").alias("dst"))
-                 .unionByName(prs.select(F.col("d2").alias("src"),
-                                         F.col("d1").alias("dst"))))
-        edges = edges.localCheckpoint(eager=True)
+        edges = prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
         nodes = d.select(F.col("doc_id").alias("node"))
         t0 = time.time()
-        bfs3(nodes.withColumnRenamed("node", "src"), edges).count()
+        khop_reach(nodes, edges).count()
         bfs_s = time.time() - t0
         t0 = time.time()
-        pagerank5(nodes, edges).count()
+        pagerank(nodes, edges).count()
         pr_s = time.time() - t0
         stats: dict = {}
         t0 = time.time()

@@ -5,7 +5,8 @@ fixpoint; stress_graph pins threshold geometry; this pins e60's
 fixed-iteration Pregel shape under ×K growth).
 
 Tiers: e60's exact pipeline (Jaccard ≥ 0.9 near-dup graph over the
-doc_id % 5 == 0 slice of sf0.1, 5 damped rounds, per-iteration 6-dp
+doc_id % 5 == 0 slice of sf0.1, then graph.py's pagerank — the
+registered iteration, not a copy: 5 damped rounds, per-iteration 6-dp
 round) over ×1/×5/×10 TRULY DISJOINT replicas — every token is
 prefixed with its replica id, so replica subgraphs are identical but
 share no shingles, no candidate pairs, no edges.
@@ -35,6 +36,11 @@ sys.path.insert(0, "/root/repo")
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
+from pyspark_ml_features_spark.operators.graph import (  # noqa: E402
+    near_dup_edges,
+    pagerank,
+)
+
 
 def docs(spark: SparkSession, replicas: int):
     d = (spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
@@ -61,33 +67,16 @@ def docs(spark: SparkSession, replicas: int):
                                         F.lit("_"), t))).alias("text")))
 
 
-def pagerank(spark, d):
-    from pyspark_ml_features_spark.functions.text import tokens
-    from pyspark_ml_features_spark.operators.dedup import jaccard_pairs
-    from pyspark_ml_features_spark.plans.audit import probe_checkpoint
-
-    prs = jaccard_pairs(d, tokens("text"), threshold=0.9).select("d1", "d2")
-    edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-             .unionByName(prs.select(F.col("d2").alias("src"),
-                                     F.col("d1").alias("dst"))))
-    edges = probe_checkpoint(edges, "stress_pagerank.edges")
-    n_edges = edges.count()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = d.select(F.col("doc_id").alias("node"))
-    rank = nodes.withColumn("r", F.lit(1.0))
+def ranks_of(d):
+    """graph.py's pagerank (e60's iteration) over ``d``'s Jaccard >= 0.9
+    pairs: (directed edge count, rank multiset, pagerank's wall — its
+    edge checkpoint plus the 5 rounds)."""
+    prs = near_dup_edges(d, 0.9).localCheckpoint(eager=True)
+    # jaccard_pairs emits each unordered pair once (d1 < d2), so the
+    # directed edge list pagerank walks is exactly twice the pair count
+    n_edges = 2 * prs.count()
     t0 = time.time()
-    for _ in range(5):
-        contrib = (edges.join(rank, edges["src"] == rank["node"])
-                   .join(deg, "src")
-                   .select(F.col("dst").alias("node"),
-                           (F.col("r") / F.col("deg")).alias("c"))
-                   .groupBy("node").agg(F.sum("c").alias("s")))
-        rank = (nodes.join(contrib, "node", "left")
-                .select("node",
-                        F.round(F.lit(0.15)
-                                + F.lit(0.85) * F.coalesce("s", F.lit(0.0)),
-                                6).alias("r")))
-        rank = probe_checkpoint(rank, "stress_pagerank.round")
+    rank = pagerank(d.select(F.col("doc_id").alias("node")), prs)
     ranks = Counter(r["r"] for r in rank.collect())
     return n_edges, ranks, round(time.time() - t0, 2)
 
@@ -102,18 +91,19 @@ def main() -> None:
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
-    base_edges, base_ranks, _ = pagerank(spark, docs(spark, 1))
+    base_edges, base_ranks, _ = ranks_of(docs(spark, 1))
     print(f"{'tier':>5} {'nodes':>7} {'edges':>7} {'wall5r_s':>9} "
           f"edges-xK rank-multiset-xK")
     for k in (1, 5, 10):
         d = docs(spark, k)
         n_nodes = d.count()
-        n_edges, ranks, wall = pagerank(spark, d)
+        n_edges, ranks, wall = ranks_of(d)
         edges_ok = n_edges == base_edges * k
         ranks_ok = ranks == Counter(
             {v: c * k for v, c in base_ranks.items()})
         print(f"{'x' + str(k):>5} {n_nodes:>7} {n_edges:>7} {wall:>9} "
               f"{edges_ok} {ranks_ok}")
+        assert edges_ok and ranks_ok, (k, n_edges, base_edges)
     spark.stop()
 
 

@@ -11,11 +11,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from pyspark_ml_features_spark.functions.text import tokens
-from pyspark_ml_features_spark.operators.dedup import jaccard_pairs
 from pyspark_ml_features_spark.operators.graph import (
     connected_components,
     connected_components_star,
+    near_dup_edges,
 )
 from pyspark_ml_features_spark.sources import table
 
@@ -23,8 +22,8 @@ from tests.conftest import SMOKE_SF_DIR
 
 
 def _df_edges(spark, pairs):
-    sym = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
-    return spark.createDataFrame(sym, "src BIGINT, dst BIGINT")
+    """Each undirected edge once, as both CC functions take it."""
+    return spark.createDataFrame(pairs, "src BIGINT, dst BIGINT")
 
 
 def _df_nodes(spark, ids):
@@ -79,10 +78,7 @@ def test_real_neardup_graph_equality(spark):
     20% document sample) — the graph the oracle-graded queries run on."""
     d = table(spark, SMOKE_SF_DIR, "documents") \
         .filter(F.col("doc_id") % 5 == 0)
-    prs = jaccard_pairs(d, tokens("text"), threshold=0.5)
-    edges = (prs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-             .unionByName(prs.select(F.col("d2").alias("src"),
-                                     F.col("d1").alias("dst"))))
+    edges = near_dup_edges(d, 0.5)
     nodes = d.select(F.col("doc_id").alias("node"))
     a = _labels(connected_components(nodes, edges))
     b = _labels(connected_components_star(nodes, edges))
@@ -149,8 +145,8 @@ def test_star_raises_when_round_cap_binds(spark):
 def test_minlabel_raises_when_round_cap_binds(spark):
     """r12 review: the convergence guard belongs to the shared mechanism,
     not one variant — the min-label fixpoint must also raise (and record
-    converged=False) when max_rounds exhausts before the label-sum probe
-    confirms a fixpoint, since e112/e114 and every dedup cluster query
+    converged=False) when max_rounds exhausts before the changed-label
+    probe confirms a fixpoint, since e112/e114 and every dedup cluster query
     route through THIS variant."""
     nodes = _df_nodes(spark, list(range(1, 21)))
     edges = _df_edges(spark, [(i, i + 1) for i in range(1, 20)])
@@ -164,3 +160,32 @@ def test_minlabel_raises_when_round_cap_binds(spark):
     lbl = _labels(connected_components(nodes, edges, stats=ok))
     assert ok["converged"] is True and ok["rounds"] >= 2
     assert set(lbl.values()) == {1}
+
+
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution in the status store (read with the
+    UI off, as perfbench/tracing.py does); ids are sequential, so the
+    difference of two reads counts the executions between them even
+    once the store starts evicting old entries."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = int(store.executionsCount())
+    return int(store.executionsList(n - 1, 1).apply(0).executionId()) \
+        if n else -1
+
+
+@pytest.mark.parametrize("n,rounds", [(2, 2), (20, 5), (256, 9)])
+def test_minlabel_round_runs_only_its_checkpoint(spark, n, rounds):
+    """The convergence probe rides each round's eager checkpoint as an
+    observe() metric, so building the fixpoint runs exactly the edge
+    and init checkpoints plus ONE execution per round — no up-front
+    probe and no per-round collect. Pinned on chains that need
+    different round counts, so a per-round extra execution cannot hide
+    in a constant."""
+    nodes = _df_nodes(spark, list(range(1, n + 1)))
+    edges = _df_edges(spark, [(i, i + 1) for i in range(1, n)])
+    stats: dict = {}
+    before = _last_execution_id(spark)
+    cc = connected_components(nodes, edges, stats=stats)
+    assert stats["rounds"] == rounds
+    assert _last_execution_id(spark) - before == 2 + rounds
+    assert set(_labels(cc).values()) == {1}

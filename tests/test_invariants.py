@@ -650,10 +650,9 @@ def test_incremental_cc_warm_start_saves_rounds(spark):
     """e47's warm start must converge in no MORE rounds than a cold run
     on the same union graph (equality allowed — the fixture's graphs are
     already diameter-1), and produce identical labels."""
-    from pyspark_ml_features_spark.functions.text import tokens
-    from pyspark_ml_features_spark.operators.dedup import jaccard_pairs
     from pyspark_ml_features_spark.operators.graph import (
         connected_components,
+        near_dup_edges,
     )
     from pyspark_ml_features_spark.sources import table
 
@@ -661,13 +660,8 @@ def test_incremental_cc_warm_start_saves_rounds(spark):
     base = d.filter(F.col("doc_id") % 5 == 0)
     union = d.filter((F.col("doc_id") % 5).isin(0, 1))
 
-    def sym(p):
-        return (p.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-                .unionByName(p.select(F.col("d2").alias("src"),
-                                      F.col("d1").alias("dst"))))
-
-    base_edges = sym(jaccard_pairs(base, tokens("text"), 0.5))
-    union_edges = sym(jaccard_pairs(union, tokens("text"), 0.5))
+    base_edges = near_dup_edges(base, 0.5)
+    union_edges = near_dup_edges(union, 0.5)
     nodes = union.select(F.col("doc_id").alias("node"))
     init = connected_components(
         base.select(F.col("doc_id").alias("node")), base_edges) \

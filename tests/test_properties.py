@@ -103,21 +103,19 @@ def test_connected_components_matches_union_find(spark, case):
     """connected_components on arbitrary random graphs (self-loops and
     duplicate edges included) must equal a Python union-find — including
     long chains, which exercise multi-round convergence (the fixture
-    graphs all close in one round)."""
+    graphs all close in one round). Each drawn edge is passed ONCE, in
+    the direction it was drawn: the function owns symmetrization."""
     from pyspark_ml_features_spark.operators.graph import (
         connected_components,
     )
 
     n, raw_edges = case
-    edges_list = [(a, b) for a, b in raw_edges if a != b]
     nodes = spark.createDataFrame([(i,) for i in range(n)],
                                   schema="node long")
-    sym = ([(a, b) for a, b in edges_list]
-           + [(b, a) for a, b in edges_list]) or [(0, 0)]
-    edges = spark.createDataFrame(sym, schema="src long, dst long")
+    edges = spark.createDataFrame(raw_edges, schema="src long, dst long")
     got = {r["node"]: r["cluster_id"]
            for r in connected_components(nodes, edges).collect()}
-    want = _py_components(n, edges_list)
+    want = _py_components(n, raw_edges)
     assert got == want
 
 
