@@ -5,7 +5,7 @@ on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
 
 Each query is materialized with the noop sink (full execution, no driver
 transfer). Startup/first-job JIT is amortized with one warmup pass of the
-smallest query.
+smallest query. `python bench.py <names...>` times just the named queries.
 """
 
 from __future__ import annotations
@@ -185,7 +185,7 @@ def main() -> None:
         "overwrite").save()
 
     timings: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in sys.argv[1:] or HEADLINE:
         # min of 3 runs: the first pays whole-stage-codegen compilation (a
         # per-query-shape constant, not a data cost) and the min also rides
         # out transient machine noise (cold page cache after other jobs was

@@ -242,7 +242,12 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
          .select(F.greatest("src", "dst").alias("hi"),
                  F.least("src", "dst").alias("lo"))
          .distinct())
-    e = probe_checkpoint(e, "cc_star.init")
+    # each checkpoint carries its row count as an observe() metric, so
+    # the convergence probe needs no count job of its own
+    n_edges = Observation()
+    e = probe_checkpoint(e.observe(n_edges, F.count(F.lit(1)).alias("n")),
+                         "cc_star.init")
+    e_count = n_edges.get["n"]
     rounds = 0
     for rounds in range(1, max_rounds + 1):
         # large-star over both orientations of the current edge set
@@ -265,13 +270,17 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
                    .select(F.col("v").alias("hi"), F.col("m").alias("lo")))
         selfed = smins.select(F.col("u").alias("hi"),
                               F.col("m").alias("lo"))
-        small = lowered.unionByName(selfed).distinct()
-        small = probe_checkpoint(small, "cc_star.round")
+        n_small = Observation()
+        small = probe_checkpoint(
+            lowered.unionByName(selfed).distinct()
+            .observe(n_small, F.count(F.lit(1)).alias("n")),
+            "cc_star.round")
+        small_count = n_small.get["n"]
         # exact set-equality convergence probe: equal counts + empty
         # one-way difference == multiset equality for two distinct sets
-        changed = (small.count() != e.count()
+        changed = (small_count != e_count
                    or small.exceptAll(e).limit(1).count() > 0)
-        e = small
+        e, e_count = small, small_count
         if not changed:
             converged = True
             break

@@ -1,6 +1,6 @@
 """Plan advisor: turn the audit/metrics signals into ACTIONABLE warnings.
 
-`plans.audit` counts scale hazards; `plans.metrics` weighs them; this
+`plans.audit` counts scale hazards; `plans.profile` weighs them; this
 module closes the loop for a user migrating pipelines onto the engine:
 ``advise(df)`` inspects a DataFrame's plans and returns concrete findings
 ("this window has no PARTITION BY over a large input — use
@@ -14,9 +14,9 @@ Usage:
     for f in advise(df):
         print(f.severity, f.rule, "-", f.message)
 
-`advise` is static (plan-only, no execution). Pass ``executed=True``
-after running an action to add runtime findings (spills, empty scans)
-from the executed plan's SQLMetrics.
+`advise` is static (plan-only, no execution). Pass the record of a run,
+``advise(df, profile=profile(spark, run))``, to add runtime findings
+(spills, shuffle volume out of proportion to the output).
 """
 
 from __future__ import annotations
@@ -27,9 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from pyspark_ml_features_spark.plans.audit import audit, plan_text
-from pyspark_ml_features_spark.plans.metrics import runtime_metrics
-
-SINGLE_PARTITION_WINDOW_ROWS = 1_000_000
+from pyspark_ml_features_spark.plans.profile import Profile
 
 
 @dataclass
@@ -39,7 +37,7 @@ class Finding:
     message: str
 
 
-def advise(df: DataFrame, executed: bool = False) -> list[Finding]:
+def advise(df: DataFrame, profile: Profile | None = None) -> list[Finding]:
     a = audit(df)
     plan = plan_text(df)
     findings: list[Finding] = []
@@ -111,25 +109,24 @@ def advise(df: DataFrame, executed: bool = False) -> list[Finding]:
             f"drop them on anything that grows with the data and let AQE "
             f"decide from runtime sizes."))
 
-    if executed:
-        m = runtime_metrics(df)
-        if m.spill_bytes:
+    if profile is not None:
+        if profile.spill_bytes:
             findings.append(Finding(
                 "warn", "spill",
-                f"{m.spill_bytes / 1048576:.1f} MiB spilled: correct but "
-                f"slow. Raise spark.sql.shuffle.partitions (smaller "
+                f"{profile.spill_bytes / 1048576:.1f} MiB spilled: correct "
+                f"but slow. Raise spark.sql.shuffle.partitions (smaller "
                 f"per-task state) or executor memory; for skewed keys see "
                 f"functions/skew.py."))
-        if m.shuffle_bytes_written and m.output_rows and \
-                m.scan_output_rows and \
-                m.shuffle_bytes_written > 100 * 1048576 and \
-                m.output_rows < m.scan_output_rows // 1000:
+        if profile.output_rows and profile.scan_rows and \
+                profile.shuffle_write_bytes > 100 * 1048576 and \
+                profile.output_rows < profile.scan_rows // 1000:
             findings.append(Finding(
                 "info", "shuffle-vs-output",
-                f"{m.shuffle_bytes_written / 1048576:.0f} MiB shuffled to "
-                f"produce {m.output_rows} rows: check whether aggregation "
-                f"or filtering can move below the shuffle (partial "
-                f"aggregation, pre-filtering, semi-join pushdown)."))
+                f"{profile.shuffle_write_bytes / 1048576:.0f} MiB shuffled to "
+                f"produce {profile.output_rows} rows: check whether "
+                f"aggregation or filtering can move below the shuffle "
+                f"(partial aggregation, pre-filtering, semi-join "
+                f"pushdown)."))
     return findings
 
 

@@ -64,12 +64,6 @@ def probe_checkpoint(df: DataFrame, label: str = "") -> DataFrame:
             "label": label,
             "plan": plan_text(df),
             "analyzed": df._jdf.queryExecution().analyzed().toString(),
-            # the pre-checkpoint DataFrame itself: the eager checkpoint
-            # below EXECUTES its plan, so after this call its SQLMetrics
-            # are populated — the shuffle-budget test reads them to see
-            # the exchanges that lineage truncation hides (a shuffle
-            # before a checkpoint is still a shuffle)
-            "df": df,
         })
     return df.localCheckpoint(eager=True)
 
@@ -83,9 +77,7 @@ def probe_stream_query(query, label: str) -> None:
     records the query's EXECUTED micro-batch physical plan (what
     actually ran, post-AQE — `explainInternal` on the finished query)
     so tests can run the same cartesian/BNLJ/Python audit over it.
-    Zero overhead when no capture is active. No "df" entry: the
-    streaming DataFrame cannot be re-executed for SQLMetrics the way a
-    checkpointed batch plan can."""
+    Zero overhead when no capture is active."""
     captured = _CAPTURE.get()
     if captured is not None:
         captured.append({

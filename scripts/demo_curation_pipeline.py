@@ -4,15 +4,16 @@ documents in, packed + split training corpus out, with the funnel
 report a curation run files. See tests/test_pipeline.py for the
 invariant contract each stage's end state satisfies.
 
-Run: cd /tmp && python /root/repo/scripts/demo_curation_pipeline.py \
+Run: cd /tmp && python <checkout>/scripts/demo_curation_pipeline.py \
          [sf_dir=/root/testdata/sf0.01]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

@@ -1,6 +1,6 @@
-"""Driver-contract emulation: run entry + all queries vs DuckDB oracles (see .claude/skills/verify/SKILL.md). Usage: cd /tmp && python /root/repo/scripts/drive_contract.py"""
-import sys, hashlib
-sys.path.insert(0, "/root/repo")
+"""Driver-contract emulation: run entry + all queries vs DuckDB oracles (see .claude/skills/verify/SKILL.md). Usage: cd /tmp && python <checkout>/scripts/drive_contract.py"""
+import os, sys, hashlib
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e
 import duckdb
 from pyspark.sql import SparkSession

@@ -9,18 +9,20 @@ reader can confirm "no Cartesian products, no row-Python off-allowlist,
 bounded shuffles, filters reach the scans" per query without re-running
 .explain by hand. Regenerate after plan-affecting changes:
 
-    cd /tmp && python /root/repo/scripts/gen_plan_audit.py
+    cd /tmp && python <checkout>/scripts/gen_plan_audit.py
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-OUT = "/root/repo/PLAN_AUDIT.md"
+OUT = os.path.join(REPO, "PLAN_AUDIT.md")
 MEASURED_MARKER = "\n## Measured runtime volumes"
 
 HEADER = """# PLAN_AUDIT — physical-plan properties of the bench headline
@@ -79,7 +81,7 @@ def main() -> None:
             f"| {'y' if any(a.pushed_filters) else '-'} |")
 
     # preserve the measured-runtime section maintained by
-    # scripts/measure_shuffles.py --write (different tool, same artifact)
+    # scripts/measure_shuffle.py --write (different tool, same artifact)
     measured_tail = ""
     try:
         with open(OUT) as f:

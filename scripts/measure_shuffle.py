@@ -1,8 +1,15 @@
-"""Measure executed-plan shuffle/spill/peak-task SQLMetrics for every
-bench.py HEADLINE query at sf0.01 — the calibration source for the
-checked-in baselines in tests/test_shuffle_budget.py (ADVICE r6: ceilings
-are now `measured × MARGIN`, re-derived from this script's output, never
-hand-tweaked). Usage: `python scripts/measure_shuffle.py [names...]`.
+"""Profiled shuffle/spill/broadcast/peak-memory volumes of bench.py HEADLINE
+queries (`plans.profile` over each query's build AND noop write, so the
+exchanges inside build-time checkpoints and caches count).
+
+Prints the MEASURED block of tests/test_shuffle_budget.py (shuffle MiB and
+the largest operator peak memory summed over its tasks, the unit of the
+pins): re-calibrate the gate by pasting it, never by hand-tweaking one
+entry. With --write it also replaces PLAN_AUDIT.md's "Measured runtime
+volumes" table (scripts/gen_plan_audit.py keeps that section).
+
+Usage: `python scripts/measure_shuffle.py [--write] [names...]`
+(scale from $SPARK_GRAFT_SF_DIR, default sf0.01, the budget scale).
 """
 
 from __future__ import annotations
@@ -10,42 +17,65 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE  # noqa: E402
 from pyspark_ml_features_spark import registry  # noqa: E402
-from pyspark_ml_features_spark.plans.audit import (  # noqa: E402
-    capture_checkpoint_plans,
-)
-from pyspark_ml_features_spark.plans.metrics import runtime_metrics  # noqa: E402
+from pyspark_ml_features_spark.plans.profile import profile  # noqa: E402
 from pyspark_ml_features_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+PLAN_AUDIT = os.path.join(REPO, "PLAN_AUDIT.md")
+MARKER = "\n## Measured runtime volumes"
+COLUMNS = ("shuffle_MiB", "broadcast_MiB", "spill_MiB", "peak_node_MiB",
+           "peak_task_MiB", "scan_rows", "out_rows")
 
 
 def main() -> None:
-    names = sys.argv[1:] or HEADLINE
+    names = [a for a in sys.argv[1:] if a != "--write"] or HEADLINE
     spark = get_spark(app_name="measure-shuffle")
     qs = registry.all_queries()
+    rows = {name: profile(spark, lambda: qs[name].fn(spark, SF_DIR).write
+                          .format("noop").mode("overwrite").save()).row()
+            for name in names}
+    spark.stop()
+
     print("# measured at", SF_DIR)
     print("MEASURED = {  # query: (shuffle_MiB, peak_mem_MiB)")
-    stats = {}
-    for name in names:
-        with capture_checkpoint_plans() as captured:
-            df = qs[name].fn(spark, SF_DIR)
-            df.collect()
-        rows = [runtime_metrics(df).row()] + [
-            runtime_metrics(c["df"]).row() for c in captured
-            if "df" in c]  # probe_stream_query entries carry no df
-        shuffle = round(sum(r["shuffle_MiB"] for r in rows), 2)
-        spill = round(sum(r["spill_MiB"] for r in rows), 2)
-        peak = round(max(r["peak_task_MiB"] for r in rows), 1)
-        stats[name] = (shuffle, spill, peak)
-        print(f'    "{name}": ({shuffle:.2f}, {peak}),'
-              f"  # spill {spill}")
+    for name, r in rows.items():
+        print(f'    "{name}": ({r["shuffle_MiB"]:.2f}, '
+              f'{round(r["peak_node_MiB"], 1)}),  # spill {r["spill_MiB"]}')
     print("}")
-    spilled = {k: v[1] for k, v in stats.items() if v[1] > 0}
-    print(f"# queries with spill: {spilled or 'none'}")
+    spills = {n: r["spill_MiB"] for n, r in rows.items() if r["spill_MiB"]}
+    print(f"# queries with spill: {spills or 'none'}")
+    if "--write" not in sys.argv:
+        return
+
+    table = ["| query | " + " | ".join(c.replace("_", " ") for c in COLUMNS)
+             + " |", "|---|" + "---:|" * len(COLUMNS)]
+    table += [f"| {name} | " + " | ".join(str(r[c]) for c in COLUMNS) + " |"
+              for name, r in rows.items()]
+    total = round(sum(r["shuffle_MiB"] for r in rows.values()), 2)
+    section = (
+        f"{MARKER} ({os.path.basename(SF_DIR.rstrip('/'))})\n\n"
+        "Per headline query, over its build and its noop write "
+        "(`plans/profile.py`; regenerate with "
+        "`python scripts/measure_shuffle.py --write`). `shuffle MiB` is "
+        "bytes written by every shuffle stage, build-time checkpoints "
+        "included; `peak node MiB` is the largest operator peak memory "
+        "summed over its tasks, `peak task MiB` the most one task held; a "
+        "non-zero `spill MiB` anywhere is a memory-sizing bug at this SF.\n\n"
+        + "\n".join(table)
+        + f"\n\nHeadline total shuffle: {total} MiB; "
+        f"queries that spill: {spills or 'none'}.\n")
+    with open(PLAN_AUDIT) as f:
+        doc = f.read()
+    idx = doc.find(MARKER)
+    head = doc[:idx] if idx != -1 else doc.rstrip("\n") + "\n"
+    with open(PLAN_AUDIT, "w") as f:
+        f.write(head + section)
+    print(f"updated {PLAN_AUDIT}")
 
 
 if __name__ == "__main__":

@@ -15,7 +15,7 @@ buckets}) it reports:
     brute-force side is skipped)
   - wall time of the bucketed pipeline
 
-Usage: cd /tmp && python /root/repo/scripts/stress_ann.py [--full]
+Usage: cd /tmp && python <checkout>/scripts/stress_ann.py [--full]
 (--full also runs the brute-force join + recall at the 10x tier; expect
 minutes - 50M candidate folds.)
 
@@ -24,10 +24,11 @@ Results are recorded in DESIGN_SCALE.md ("Measured ANN candidate growth").
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: E402

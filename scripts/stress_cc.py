@@ -13,16 +13,17 @@ per-replica leading marker token (replicas are NEAR-duplicates of their
 base doc, so every base doc's replica family must collapse into one
 cluster — making expected cluster sizes predictable: ≥ n_replicas + 1).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_cc.py
+Usage: cd /tmp && python <checkout>/scripts/stress_cc.py
 Results are recorded in DESIGN_SCALE.md ("Measured CC convergence").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402

@@ -26,7 +26,7 @@ BASELINE.md):
    shingling cut the composed funnel 2.2× at every tier with identical
    stage counts.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_curate.py
+Usage: cd /tmp && python <checkout>/scripts/stress_curate.py
 Pinned row in BASELINE.md ("SCALE TIER r7: composed curation funnel").
 """
 
@@ -38,7 +38,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

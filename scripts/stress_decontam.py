@@ -21,16 +21,17 @@ Claims under test:
    property (constant per-doc probability at fixed benchmark side), so
    fp counts also scale ~×K.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_decontam.py
+Usage: cd /tmp && python <checkout>/scripts/stress_decontam.py
 Pinned row in BASELINE.md ("SCALE TIER r7: decontamination").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

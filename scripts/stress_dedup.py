@@ -15,7 +15,7 @@ deployment}) it reports:
     the wall time of the full pipeline, unless --no-join skips the 16-bit
     join at the 10x tier (its candidate count alone proves the point)
 
-Usage: cd /tmp && python /root/repo/scripts/stress_dedup.py [--full]
+Usage: cd /tmp && python <checkout>/scripts/stress_dedup.py [--full]
 (--full also runs the 16-bit join at the 10x tier; expect minutes.)
 
 Results are recorded in DESIGN_SCALE.md ("Measured pair-volume growth").
@@ -23,10 +23,11 @@ Results are recorded in DESIGN_SCALE.md ("Measured pair-volume growth").
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402

@@ -19,16 +19,17 @@ Claims under test:
    collapse RATIO is invariant across tiers and the windowed distinct
    count scales exactly ×K per window end.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_events.py
+Usage: cd /tmp && python <checkout>/scripts/stress_events.py
 Pinned row in BASELINE.md ("SCALE TIER r7: event windows").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

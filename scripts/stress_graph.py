@@ -12,15 +12,16 @@ and BFS/triangle shapes degenerate quadratically. Threshold choice is a
 GEOMETRY decision that must be measured, not guessed; the registry's graph
 queries pin 0.9.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_graph.py
+Usage: cd /tmp && python <checkout>/scripts/stress_graph.py
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

@@ -26,17 +26,18 @@ super-linear per-byte drift would mean batch-shape or GIL pathology in
 the Arrow boundary — the regression this row catches. Gate: per-MB
 wall at ×5/×10 within 1.5× of the ×1 tier; all counts exact.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_multimodal.py
+Usage: cd /tmp && python <checkout>/scripts/stress_multimodal.py
 Pinned row in BASELINE.md ("SCALE TIER r9: multimodal decode").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from collections.abc import Iterator
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: E402
 import pyspark.sql.functions as F  # noqa: E402

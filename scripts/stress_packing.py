@@ -16,16 +16,17 @@ hot-spotting one task" — measured like the other stress families:
   max group size (the per-task memory bound the shard knob exists to
   control).
 
-Run: cd /tmp && python /root/repo/scripts/stress_packing.py
+Run: cd /tmp && python <checkout>/scripts/stress_packing.py
 Results recorded in DESIGN_SCALE.md ("Packing shard tiers").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

@@ -21,17 +21,18 @@ Claims under test:
  - wall grows ~linearly with K at fixed round count (each round is
    one edges⋈ranks shuffle — the Pregel cost model, measured).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_pagerank.py
+Usage: cd /tmp && python <checkout>/scripts/stress_pagerank.py
 Pinned row in BASELINE.md ("SCALE TIER r8: pagerank replication").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

@@ -20,16 +20,16 @@ Claims under test:
    digest merge over distinct values dominates, not the row scan;
    gate: ≤1.5× drift on re-runs).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_quantiles.py
+Usage: cd /tmp && python <checkout>/scripts/stress_quantiles.py
 Pinned row in BASELINE.md ("SCALE TIER r8: quantile/histogram").
 """
 
 from __future__ import annotations
 
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
@@ -45,20 +45,19 @@ def lineitem(spark: SparkSession, replicas: int = 1):
 
 
 def run_d51(spark, li):
-    from pyspark_ml_features_spark.plans.metrics import runtime_metrics
+    from pyspark_ml_features_spark.plans.profile import profile
 
     p = F.expr("percentile(l_extendedprice, array(0.25, 0.5, 0.75, 0.99))")
     df = (li.groupBy("l_returnflag")
           .agg(p.alias("p"), F.median("l_extendedprice").alias("med")))
-    t0 = time.time()
-    rows = {r["l_returnflag"]: (r["p"], r["med"]) for r in df.collect()}
-    wall = time.time() - t0
-    m = runtime_metrics(df).row()
-    return rows, m, wall
+    rows = {}
+    run = profile(spark, lambda: rows.update(
+        {r["l_returnflag"]: (r["p"], r["med"]) for r in df.collect()}))
+    return rows, run.row(), run.wall_s
 
 
 def run_d52(spark, li):
-    from pyspark_ml_features_spark.plans.metrics import runtime_metrics
+    from pyspark_ml_features_spark.plans.profile import profile
 
     x = F.col("l_extendedprice")
     b = (F.when(x < 900.0, 0)
@@ -68,11 +67,10 @@ def run_d52(spark, li):
     df = (li.groupBy(b.alias("bucket"))
           .agg(F.count(F.lit(1)).alias("n"),
                F.min(x).alias("lo"), F.max(x).alias("hi")))
-    t0 = time.time()
-    rows = {r["bucket"]: (r["n"], r["lo"], r["hi"]) for r in df.collect()}
-    wall = time.time() - t0
-    m = runtime_metrics(df).row()
-    return rows, m, wall
+    rows = {}
+    run = profile(spark, lambda: rows.update(
+        {r["bucket"]: (r["n"], r["lo"], r["hi"]) for r in df.collect()}))
+    return rows, run.row(), run.wall_s
 
 
 def main() -> None:

@@ -6,7 +6,7 @@ family, measured against the round-7 window-free encoding.
 Claims under test:
  - exactly ONE full-data exchange per ranking (the range partition);
    the rank itself is a projection over the checkpoint — asserted on
-   the captured pre-checkpoint plan and the returned plan per tier;
+   the returned plan per tier;
  - the driver-side metadata collect is P rows regardless of data size
    (the scale-safety argument vs a single-partition window);
  - wall grows ~linearly with rows at fixed P, and raising P divides
@@ -16,16 +16,16 @@ Claims under test:
 Tiers: lineitem long-form (3 features/row) at sf0.01, sf0.1, and sf0.1
 replicated ×5/×10 with tie-break-preserving unique keys.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_ranking.py
+Usage: cd /tmp && python <checkout>/scripts/stress_ranking.py
 Pinned row in BASELINE.md ("SCALE TIER r7: distributed ranking").
 """
 
 from __future__ import annotations
 
+import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
@@ -51,25 +51,24 @@ def measure(spark: SparkSession, df, n_partitions: int) -> dict:
     from pyspark_ml_features_spark.operators.relational import (
         distributed_row_number,
     )
-    from pyspark_ml_features_spark.plans.audit import (
-        audit_text, capture_checkpoint_plans, plan_text,
-    )
-    from pyspark_ml_features_spark.plans.metrics import runtime_metrics
+    from pyspark_ml_features_spark.plans.audit import audit_text, plan_text
+    from pyspark_ml_features_spark.plans.profile import profile
 
-    t0 = time.time()
-    with capture_checkpoint_plans() as captured:
-        ranked = distributed_row_number(
+    out = {}
+
+    def run() -> None:
+        out["ranked"] = ranked = distributed_row_number(
             df, ["feat", "val", "l_orderkey", "l_linenumber"], n_partitions)
-    lo, hi, n = ranked.agg(F.min("grk"), F.max("grk"),
-                           F.count(F.lit(1))).collect()[0]
-    wall = time.time() - t0
+        out["stats"] = ranked.agg(F.min("grk"), F.max("grk"),
+                                  F.count(F.lit(1))).collect()[0]
+
+    p = profile(spark, run)
+    ranked, (lo, hi, n) = out["ranked"], out["stats"]
     post = audit_text(plan_text(ranked))
     assert post.shuffles == 0 and "Window" not in plan_text(ranked), (
         "rank must stay a projection above the checkpoint")
-    pre_rows = [runtime_metrics(c["df"]).row() for c in captured]
-    shuffle = round(sum(r["shuffle_MiB"] for r in pre_rows), 2)
-    return {"rows": n, "lo": lo, "hi": hi, "shuffle_MiB": shuffle,
-            "wall": round(wall, 2)}
+    return {"rows": n, "lo": lo, "hi": hi,
+            "shuffle_MiB": p.row()["shuffle_MiB"], "wall": round(p.wall_s, 2)}
 
 
 def main() -> None:

@@ -19,10 +19,10 @@ grows with data — no artificial hot keys); dimensions stay fixed (the
 realistic shape: at 100 TB the fact grows, region/nation/part do not).
 Each tier is written as parquet dirs named like the driver layout, so the
 REGISTERED queries run unmodified on it. Per (tier, query): min-of-2 wall
-on the noop sink + runtime_metrics (shuffle MiB, peak task MiB) from a
-collect() pass.
+on the noop sink, with the faster run's profile (plans/profile.py:
+shuffle MiB, the largest per-task peak memory, output rows).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_relational.py
+Usage: cd /tmp && python <checkout>/scripts/stress_relational.py
 Results recorded in DESIGN_SCALE.md ("Relational-family scaling").
 """
 
@@ -31,15 +31,14 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 from pyspark_ml_features_spark import registry  # noqa: E402
-from pyspark_ml_features_spark.plans.metrics import runtime_metrics  # noqa: E402
+from pyspark_ml_features_spark.plans.profile import profile  # noqa: E402
 from pyspark_ml_features_spark.session import get_spark  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
@@ -97,16 +96,12 @@ def main() -> None:
             tier_dir = build_tier(spark, k)
             for name in QUERIES:
                 fn = queries[name].fn
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, tier_dir).write.format("noop").mode(
-                        "overwrite").save()
-                    best = min(best, time.perf_counter() - t0)
-                df = fn(spark, tier_dir)
-                df.collect()
-                m = runtime_metrics(df).row()
-                print(f"| x{k} | {name} | {best:.2f} | {m['shuffle_MiB']} | "
+                best = min((profile(spark, lambda: fn(spark, tier_dir).write
+                                    .format("noop").mode("overwrite").save())
+                            for _ in range(2)), key=lambda p: p.wall_s)
+                m = best.row()
+                print(f"| x{k} | {name} | {best.wall_s:.2f} | "
+                      f"{m['shuffle_MiB']} | "
                       f"{m['peak_task_MiB']} | {m['out_rows']} |",
                       flush=True)
     finally:

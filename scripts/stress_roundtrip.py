@@ -24,7 +24,7 @@ reconstructed text byte-equals its source (anti-join mismatch count 0).
 Wall gates: e105 per-doc wall at ×10 within 1.5× of ×1 (linear); e104
 wall at ×10 under 10× of ×1 (sub-linear expected — distinct work flat).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_roundtrip.py
+Usage: cd /tmp && python <checkout>/scripts/stress_roundtrip.py
 Pinned row in BASELINE.md ("SCALE TIER r10: composition round-trips").
 """
 
@@ -36,7 +36,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

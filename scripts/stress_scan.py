@@ -11,16 +11,17 @@ single-partition window holds ALL n rows in one task (the thing that stops
 existing at cluster scale). The wall table documents the local overhead
 price; the per-task row bound is the scale argument.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_scan.py
+Usage: cd /tmp && python <checkout>/scripts/stress_scan.py
 Results recorded in DESIGN_SCALE.md ("Distributed-scan primitive").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession, Window  # noqa: E402

@@ -30,18 +30,19 @@ from-scratch C(union,2) count (bucket-histogram arithmetic, exact),
 (b) the kept-cluster multiset identical to the batch tier, and (c) the
 incremental/batch wall ratio.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_semantic_dedup.py
+Usage: cd /tmp && python <checkout>/scripts/stress_semantic_dedup.py
 Pinned rows in BASELINE.md ("SCALE TIER r12: semantic-dedup blow-up",
 "SCALE TIER r13: semantic-dedup delta-ingest economics").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

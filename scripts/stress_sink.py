@@ -19,7 +19,7 @@ Claims under test:
  - abort() leaves the previous manifest intact (reader sees the last
    committed state, exactly-once visibility).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_sink.py
+Usage: cd /tmp && python <checkout>/scripts/stress_sink.py
 Pinned row in BASELINE.md ("SCALE TIER r8: jsonl sink commit protocol").
 """
 
@@ -32,7 +32,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

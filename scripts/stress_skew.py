@@ -10,8 +10,8 @@ to ONE user
 breaks naive hash partitioning at 100 TB, written as parquet so scans are
 realistic.
 
-Measured, per strategy (wall = min of 2 on noop sink; shuffle/peak from
-plans/metrics.py on a collect):
+Measured, per strategy (wall = min of 2 on noop sink; shuffle and the
+largest per-task peak memory from plans/profile.py over the faster run):
 
 1. window-over-hot-key (rank events per user): the worst case — one task
    owns 60% of the data; peak memory should visibly exceed the uniform
@@ -23,7 +23,7 @@ plans/metrics.py on a collect):
    splits the hot partition at runtime (wall/peak drop); the manual
    salted_join (functions/skew.py) is the fallback measured alongside.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_skew.py
+Usage: cd /tmp && python <checkout>/scripts/stress_skew.py
 Results recorded in DESIGN_SCALE.md ("Skew behavior, measured").
 """
 
@@ -32,15 +32,14 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession, Window  # noqa: E402
 
 from pyspark_ml_features_spark.functions.skew import salted_join  # noqa: E402
-from pyspark_ml_features_spark.plans.metrics import runtime_metrics  # noqa: E402
+from pyspark_ml_features_spark.plans.profile import profile  # noqa: E402
 from pyspark_ml_features_spark.session import get_spark  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
@@ -83,14 +82,11 @@ def build(spark: SparkSession) -> tuple[str, str]:
 
 
 def measure(df, label: str) -> dict:
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    df.collect()
-    m = runtime_metrics(df).row()
-    row = {"case": label, "wall_s": round(best, 2), **m}
+    best = min((profile(df.sparkSession, lambda: df.write.format("noop")
+                        .mode("overwrite").save()) for _ in range(2)),
+               key=lambda p: p.wall_s)
+    m = best.row()
+    row = {"case": label, "wall_s": round(best.wall_s, 2), **m}
     print(f"| {label} | {row['wall_s']} | {m['shuffle_MiB']} | "
           f"{m['peak_task_MiB']} | {m['out_rows']} |", flush=True)
     return row

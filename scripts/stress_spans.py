@@ -20,16 +20,17 @@ span report stays flat. The ×10 tier is the pinned SCALE TIER r7 row
 replication scale, where hit rows grow ~replication× but out_rows stays
 exactly n_docs-bounded.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_spans.py
+Usage: cd /tmp && python <checkout>/scripts/stress_spans.py
 Results recorded in DESIGN_SCALE.md ("Span-level dedup volumes").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402

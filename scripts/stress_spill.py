@@ -16,10 +16,10 @@ JVM launch):
 Shapes:
   - hash-agg: per-order aggregate (~1.5M groups) + checksum reduce
   - sort-merge join: self-join on shifted orderkeys, broadcast disabled
-Per run: wall, spill MiB (plans/metrics.py), and a result CHECKSUM that
+Per run: wall, spill MiB (plans/profile.py), and a result CHECKSUM that
 must match across memory tiers (spill must not change answers).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_spill.py
+Usage: cd /tmp && python <checkout>/scripts/stress_spill.py
 (child mode: stress_spill.py --child <tier_dir> <shape> — internal)
 Results recorded in DESIGN_SCALE.md ("Memory pressure, measured").
 """
@@ -31,9 +31,8 @@ import os
 import shutil
 import subprocess
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = f"/tmp/pmfs_stress_spill_{os.getpid()}"
 
@@ -41,7 +40,7 @@ BASE = f"/tmp/pmfs_stress_spill_{os.getpid()}"
 def child(tier: str, shape: str) -> None:
     import pyspark.sql.functions as F
 
-    from pyspark_ml_features_spark.plans.metrics import runtime_metrics
+    from pyspark_ml_features_spark.plans.profile import profile
     from pyspark_ml_features_spark.session import get_spark
 
     spark = get_spark(app_name=f"stress-spill-{shape}")
@@ -69,16 +68,14 @@ def child(tier: str, shape: str) -> None:
                     .alias("checksum")))
     else:
         raise SystemExit(f"unknown shape {shape}")
-    t0 = time.perf_counter()
-    rows = out.collect()
-    wall = time.perf_counter() - t0
-    m = runtime_metrics(out)
+    rows = []
+    m = profile(spark, lambda: rows.extend(out.collect()))
     print(json.dumps({
         "shape": shape,
         "heap": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        "wall_s": round(wall, 2),
+        "wall_s": round(m.wall_s, 2),
         "spill_MiB": round(m.spill_bytes / 1048576, 1),
-        "shuffle_MiB": round(m.shuffle_bytes_written / 1048576, 1),
+        "shuffle_MiB": round(m.shuffle_write_bytes / 1048576, 1),
         "result": {k: v for k, v in rows[0].asDict().items()},
     }))
     spark.stop()

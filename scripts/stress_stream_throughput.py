@@ -27,7 +27,7 @@ Claims under test:
  - micro-batch count = ceil(files / maxFilesPerTrigger), pinning that
    the drain actually micro-batched.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_stream_throughput.py
+Usage: cd /tmp && python <checkout>/scripts/stress_stream_throughput.py
 Pinned row in BASELINE.md ("SCALE TIER r8: streaming drain throughput").
 """
 
@@ -39,7 +39,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

@@ -26,7 +26,7 @@ skew/spill/ANN claims got measured tiers:
   row (with the one-batch-lag admission rule s9 documents).
 
 Results are recorded in DESIGN_SCALE.md ("Streaming state tiers").
-Run: cd /tmp && python /root/repo/scripts/stress_streaming.py
+Run: cd /tmp && python <checkout>/scripts/stress_streaming.py
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402

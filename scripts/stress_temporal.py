@@ -18,16 +18,17 @@ For each tier it reports:
   - output rows and wall time of the full d95 aggregate, and wall time
     of the d98 as-of merge
 
-Usage: cd /tmp && python /root/repo/scripts/stress_temporal.py
+Usage: cd /tmp && python <checkout>/scripts/stress_temporal.py
 Results are recorded in DESIGN_SCALE.md ("Temporal joins").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402

@@ -23,16 +23,17 @@ ways at ×1/×5/×10 document replication:
 
 Wall grows sublinearly-to-linearly (gate: ≤1.5× drift on re-runs).
 
-Usage: cd /tmp && python /root/repo/scripts/stress_tfidf.py
+Usage: cd /tmp && python <checkout>/scripts/stress_tfidf.py
 Pinned row in BASELINE.md ("SCALE TIER r8: TF-IDF vocabulary growth").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
@@ -58,20 +59,19 @@ def docs(spark: SparkSession, replicas: int, marker: bool):
 
 def run_tfidf(spark, d):
     from pyspark_ml_features_spark.functions.text import tokens
-    from pyspark_ml_features_spark.plans.metrics import runtime_metrics
+    from pyspark_ml_features_spark.plans.profile import profile
 
     tok = d.select("doc_id", "lang",
                    F.explode(tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "lang", "term") \
         .agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    t0 = time.time()
-    # collect the df relation itself (not .count(), whose collapsed plan
-    # would leave dfreq's own executed metrics empty) — vocabulary-sized,
-    # which is the point being measured
-    vocab = len(dfreq.collect())
-    wall_df = time.time() - t0
-    m = runtime_metrics(dfreq).row()
+    # the df relation is vocabulary-sized, which is the point measured
+    rows = []
+    run = profile(spark, lambda: rows.extend(dfreq.collect()))
+    m = run.row()
+    vocab = len(rows)
+    wall_df = run.wall_s
     t0 = time.time()
     n_tf = tf.count()
     wall_tf = time.time() - t0

@@ -24,16 +24,17 @@ Correctness at every tier/mode: sum(frame_n) is checked against the
 closed form (per group of size m ≥ 4: Σ frame sizes = 4m − 6), so the
 frames themselves — not just the row count — are pinned.
 
-Usage: cd /tmp && python /root/repo/scripts/stress_windows.py
+Usage: cd /tmp && python <checkout>/scripts/stress_windows.py
 Pinned row in BASELINE.md ("SCALE TIER r8: window frames").
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession, Window  # noqa: E402

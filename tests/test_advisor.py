@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import Window
 
 from pyspark_ml_features_spark.plans.advisor import advise, assert_no_errors
+from pyspark_ml_features_spark.plans.profile import Profile, profile
 from pyspark_ml_features_spark.sources import table
 from tests.conftest import SF_DIR
 
@@ -64,12 +65,30 @@ def test_broadcast_hint_is_surfaced_for_review(spark):
     assert "broadcast-hints" in _rules(advise(hinted))
 
 
-def test_executed_mode_reports_no_spill_on_small_data(spark):
+def _aggregate(spark):
     li = table(spark, SF_DIR, "lineitem")
-    out = li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("q"))
-    out.collect()
-    rules = _rules(advise(out, executed=True))
+    return li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("q"))
+
+
+def test_executed_mode_reports_no_spill_on_small_data(spark):
+    out = _aggregate(spark)
+    rules = _rules(advise(out, profile=profile(spark, lambda: out.collect())))
     assert "spill" not in rules
+
+
+def test_spill_in_the_profile_is_flagged(spark):
+    spilled = Profile(spill_bytes=64 * 2 ** 20)
+    assert "spill" in _rules(advise(_aggregate(spark), profile=spilled))
+
+
+def test_shuffle_out_of_proportion_to_output_is_flagged(spark):
+    fanned = Profile(shuffle_write_bytes=200 * 2 ** 20, scan_rows=10 ** 7,
+                     output_rows=10)
+    kept = Profile(shuffle_write_bytes=200 * 2 ** 20, scan_rows=10 ** 7,
+                   output_rows=10 ** 6)
+    out = _aggregate(spark)
+    assert "shuffle-vs-output" in _rules(advise(out, profile=fanned))
+    assert "shuffle-vs-output" not in _rules(advise(out, profile=kept))
 
 
 def test_registry_headline_is_advisor_clean(built):

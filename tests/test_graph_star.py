@@ -16,6 +16,7 @@ from pyspark_ml_features_spark.operators.graph import (
     connected_components_star,
     near_dup_edges,
 )
+from pyspark_ml_features_spark.plans.profile import profile
 from pyspark_ml_features_spark.sources import table
 
 from tests.conftest import SMOKE_SF_DIR
@@ -162,17 +163,6 @@ def test_minlabel_raises_when_round_cap_binds(spark):
     assert set(lbl.values()) == {1}
 
 
-def _last_execution_id(spark) -> int:
-    """Id of the newest SQL execution in the status store (read with the
-    UI off, as perfbench/tracing.py does); ids are sequential, so the
-    difference of two reads counts the executions between them even
-    once the store starts evicting old entries."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    n = int(store.executionsCount())
-    return int(store.executionsList(n - 1, 1).apply(0).executionId()) \
-        if n else -1
-
-
 @pytest.mark.parametrize("n,rounds", [(2, 2), (20, 5), (256, 9)])
 def test_minlabel_round_runs_only_its_checkpoint(spark, n, rounds):
     """The convergence probe rides each round's eager checkpoint as an
@@ -184,8 +174,26 @@ def test_minlabel_round_runs_only_its_checkpoint(spark, n, rounds):
     nodes = _df_nodes(spark, list(range(1, n + 1)))
     edges = _df_edges(spark, [(i, i + 1) for i in range(1, n)])
     stats: dict = {}
-    before = _last_execution_id(spark)
-    cc = connected_components(nodes, edges, stats=stats)
+    cc = []
+    run = profile(spark, lambda: cc.append(
+        connected_components(nodes, edges, stats=stats)))
     assert stats["rounds"] == rounds
-    assert _last_execution_id(spark) - before == 2 + rounds
-    assert set(_labels(cc).values()) == {1}
+    assert run.executions == 2 + rounds
+    assert set(_labels(cc[0]).values()) == {1}
+
+
+@pytest.mark.parametrize("n", [2, 20, 256])
+def test_star_round_runs_its_checkpoint_and_at_most_one_probe(spark, n):
+    """Each star round's checkpoint carries the new edge count as an
+    observe() metric, so a round runs its checkpoint plus, only when the
+    counts tie, the exact exceptAll probe — never a count job per side.
+    Pinned on the min-label test's chains, whose round counts differ."""
+    nodes = _df_nodes(spark, list(range(1, n + 1)))
+    edges = _df_edges(spark, [(i, i + 1) for i in range(1, n)])
+    stats: dict = {}
+    cc = []
+    run = profile(spark, lambda: cc.append(
+        connected_components_star(nodes, edges, stats=stats)))
+    assert stats["converged"] is True
+    assert run.executions <= 1 + 2 * stats["rounds"]
+    assert set(_labels(cc[0]).values()) == {1}

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -13,38 +12,24 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import BinaryType, StringType
 
+from pyspark_ml_features_spark.plans.profile import profile
 from pyspark_ml_features_spark.sources import parquet_scan, table
 from pyspark_ml_features_spark.sources.io import INFERENCE_CONFS, TABLES
 from pyspark_ml_features_spark.sources.sinks import write_csv, write_parquet
 from tests.conftest import SF_DIR, SMOKE_SF_DIR
 
 
-def _jobs_launched(spark, fn):
-    """(fn(), number of Spark jobs fn launched), counted by the status
-    tracker under a job group of its own."""
-    sc = spark.sparkContext
-    group = f"test-io-{uuid.uuid4().hex}"
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_repeated_table_call_launches_no_job(spark, tmp_path):
     # the counter sees inference jobs: a path read for the first time
     path = str(tmp_path / "fresh.parquet")
     pq.write_table(pa.table({"a": [1, 2, 3]}), path)
-    _, first = _jobs_launched(spark, lambda: parquet_scan(spark, path))
+    first = profile(spark, lambda: parquet_scan(spark, path)).jobs
     assert first >= 1, "the first read of a path must infer its schema"
 
     table(spark, SMOKE_SF_DIR, "lineitem")
-    df, jobs = _jobs_launched(
-        spark, lambda: table(spark, SMOKE_SF_DIR, "lineitem"))
+    jobs = profile(spark, lambda: table(spark, SMOKE_SF_DIR, "lineitem")).jobs
     assert jobs == 0, f"a repeated table() call launched {jobs} jobs"
-    assert df.count() == table(spark, SMOKE_SF_DIR, "lineitem").count() > 0
+    assert table(spark, SMOKE_SF_DIR, "lineitem").count() > 0
 
 
 def test_memoized_schema_equals_inferred_schema(spark):
@@ -53,8 +38,9 @@ def test_memoized_schema_equals_inferred_schema(spark):
     for name in TABLES:
         path = os.path.join(SMOKE_SF_DIR, f"{name}.parquet")
         parquet_scan(spark, path)
-        memo, jobs = _jobs_launched(spark, lambda: parquet_scan(spark, path))
+        jobs = profile(spark, lambda: parquet_scan(spark, path)).jobs
         assert jobs == 0, f"{name}: a memoized read launched {jobs} jobs"
+        memo = parquet_scan(spark, path)
         assert memo.schema == spark.read.parquet(path).schema, name
 
 

@@ -1,12 +1,18 @@
-"""observe()-based quality metrics: counters ride the running action."""
+"""observe()-based quality metrics (counters ride the running action),
+and run profiles read from Spark's status stores."""
 
 from __future__ import annotations
+
+import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from pyspark_ml_features_spark.functions.metrics import (
     assert_quality, observed_quality)
+from pyspark_ml_features_spark.plans.audit import plan_text, probe_checkpoint
+from pyspark_ml_features_spark.plans.profile import profile
+from pyspark_ml_features_spark.registry import all_queries
 from pyspark_ml_features_spark.sources import table
 from tests.conftest import SF_DIR
 
@@ -46,54 +52,115 @@ def test_assert_quality_gates(spark):
     assert_quality({"n_rows": 100, "n_null_a": 7}, max_null_fraction=0.1)
 
 
-# --- runtime plan metrics (plans.metrics) -------------------------------
+# --- run profiles (plans.profile) ----------------------------------------
 
-def test_runtime_metrics_aggregate_query(spark):
+def _noop_write(df):
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_profile_aggregate_query(spark):
     """A shuffling aggregate reports real shuffle bytes, the scan row
-    count, and the result cardinality from the executed plan."""
-    from pyspark_ml_features_spark.plans.metrics import runtime_metrics
-
+    count, and the result cardinality; it runs as one map and one result
+    stage."""
     li = table(spark, SF_DIR, "lineitem")
     n_in = li.count()
     out = li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("q"))
-    n_out = len(out.collect())
-    m = runtime_metrics(out)
-    assert m.shuffle_bytes_written > 0
-    assert m.shuffle_records_written > 0
-    assert m.scan_output_rows == n_in
-    assert m.output_rows == n_out
-    assert m.spill_bytes == 0  # sf0.01 fits in memory with room to spare
-    r = m.row()
-    assert r["shuffle_MiB"] >= 0 and r["out_rows"] == n_out
+    rows = []
+    p = profile(spark, lambda: rows.extend(out.collect()))
+    assert p.shuffle_write_bytes > 0
+    assert p.stages == 2 and p.executions == 1
+    assert p.scan_rows == n_in
+    assert p.output_rows == len(rows)
+    assert p.spill_bytes == 0  # sf0.01 fits in memory with room to spare
+    assert p.row()["out_rows"] == len(rows)
 
 
-def test_runtime_metrics_broadcast_join(spark):
-    """A broadcast join reports broadcast relation bytes separately from
-    shuffle bytes (a broadcast is NOT a shuffle)."""
-    from pyspark_ml_features_spark.plans.metrics import runtime_metrics
-
+def test_profile_broadcast_kept_apart_from_shuffle(spark):
+    """A broadcast join reports the broadcast relation's bytes, and they
+    are not shuffle bytes: only the tiny grouped aggregate shuffles."""
     li = table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     od = table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderpriority")
     j = (li.join(F.broadcast(od), li.l_orderkey == od.o_orderkey)
          .groupBy("o_orderpriority").count())
-    j.collect()
-    m = runtime_metrics(j)
-    assert m.broadcast_bytes > 0
+    p = profile(spark, lambda: j.collect())
+    assert p.broadcast_bytes > 0
+    assert 0 < p.shuffle_write_bytes < p.broadcast_bytes / 100
 
 
-def test_runtime_metrics_shared_exchange_counted_once(spark):
-    """Window + aggregate on the SAME key reuse one Exchange; the walk
-    must report exactly one Exchange node (reuse-dedup by node id)."""
-    from pyspark_ml_features_spark.plans.metrics import runtime_metrics
+def test_profile_reused_exchange_counted_once(spark):
+    """A union of one aggregate with itself reuses the aggregate's
+    exchange: the run writes the same shuffle bytes in the same stages as
+    the aggregate alone."""
+    li = table(spark, SF_DIR, "lineitem")
+    agg = li.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
+    both = agg.union(agg)
+    single = profile(spark, lambda: agg.collect())
+    reused = profile(spark, lambda: both.collect())
+    assert "ReusedExchange" in plan_text(both)
+    assert reused.shuffle_write_bytes == single.shuffle_write_bytes > 0
+    assert reused.stages == single.stages == 2
 
-    ev = table(spark, SF_DIR, "events")
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    out = (ev.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") <= 3)
-           .groupBy("user_id").count())
-    out.collect()
-    m = runtime_metrics(out)
-    exchanges = [n for n in m.nodes if n.name == "Exchange"]
-    assert len(exchanges) == 1
-    assert m.shuffle_bytes_written > 0
+
+def test_profile_counts_build_time_checkpoint(spark):
+    """An exchange that runs inside a build-time probe_checkpoint is in
+    the record with no capture context: the run's later execution reads
+    the checkpoint and shuffles nothing itself."""
+    li = table(spark, SF_DIR, "lineitem")
+    n_in = li.count()
+
+    def run():
+        agg = probe_checkpoint(
+            li.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q")))
+        _noop_write(agg.filter(F.col("q") > 1))
+
+    p = profile(spark, run)
+    assert p.executions == 2
+    assert p.shuffle_write_bytes > 0
+    assert p.scan_rows == n_in  # the source scan ran in the checkpoint
+
+
+def test_count_and_noop_write_profiled_like_collect(spark):
+    """The record does not depend on which action ran the query: a noop
+    write reads the same as a collect, and a count() still sees the
+    aggregate's scan and shuffle."""
+    li = table(spark, SF_DIR, "lineitem")
+    out = li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("q"))
+    collected = profile(spark, lambda: out.collect())
+    written = profile(spark, lambda: _noop_write(out))
+    counted = profile(spark, lambda: out.count())
+    assert written.row() == collected.row()
+    assert written.stages == collected.stages
+    assert counted.scan_rows == collected.scan_rows
+    assert counted.shuffle_write_bytes > 0
+
+
+def test_profile_agrees_with_perfbench_tracer(spark, monkeypatch):
+    """The engine's reader and perfbench's Tracer read the same stores the
+    same way: on d36 and e38 in one session they report the same
+    shuffle-write bytes and stages. Each takes its own run (both attribute
+    jobs through a job group, so they cannot share one); a warm-up run
+    first settles the per-session table memo. One Tracer serves both
+    queries, as in a perfbench pass: its job-group names are unique only
+    within one Tracer."""
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+    import tracing
+
+    tracer = tracing.Tracer()
+    jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
+    tracer.attach(spark, jvm_pid)
+    for name in ("d36_tpch_q3_shipping_priority", "e38_rollup_merge_upsert"):
+        fn = all_queries()[name].fn
+
+        def run():
+            _noop_write(fn(spark, SF_DIR))
+
+        run()
+        with tracer.span("query", qid=name), \
+                tracer.span("exec.write", group=True):
+            run()
+        tracer.end_query(name)
+        traced = tracer.per_query[name]
+        p = profile(spark, run)
+        assert p.shuffle_write_bytes == traced["shuffle_write_bytes"] > 0, name
+        assert p.stages == traced["stages"], name

@@ -14,31 +14,34 @@ hand-tweaked ceilings. MARGIN is 2.0 because a real shape regression is
 ≥2× while partition-count/compression/Spark-version noise stays well
 under it. Re-calibrate by re-running `python scripts/measure_shuffle.py`
 and pasting its output — never by nudging a single entry (a plan-level
-justification goes in the commit message either way).
+justification goes in the commit message either way). Both the gate and
+the script read `plans.profile.profile` over a query's build AND its run,
+so every execution counts, build-time checkpoints and caches included;
+pins taken before that saw only the returned plan plus the captured
+checkpoints.
 
 Peak-memory semantics (round-7 finding): the `peakMemory` SQLMetric SUMS
 across tasks, so a 32-task sort stage reporting 16.2 MiB/task reads as
-~519 MiB (d106) — the number below is a per-NODE total, not a per-task
-peak. Fixed per-task page reservations (sorter/aggregate hash map,
-~16 MiB each under this session's memory config) dominate every measured
-value; data-dependent growth on top of that is exactly what the ×2
-margin catches. Spill must stay ZERO everywhere — at sf0.01 any spill
-means a task holds data wildly out of proportion to its slice.
+~519 MiB (d106) — the number below is a per-NODE total
+(`Profile.peak_node_memory`), not a per-task peak. Fixed per-task page
+reservations (sorter/aggregate hash map, ~16 MiB each under this
+session's memory config) dominate every measured value; data-dependent
+growth on top of that is exactly what the ×2 margin catches. Spill must
+stay ZERO everywhere — at sf0.01 any spill means a task holds data
+wildly out of proportion to its slice.
 """
 
 from __future__ import annotations
 
-from pyspark_ml_features_spark.plans.metrics import runtime_metrics
+from pyspark_ml_features_spark.plans.profile import profile
 from pyspark_ml_features_spark.registry import all_queries
 from tests.conftest import SF_DIR
 
 # Measured (total shuffle_MiB, peak-memory-metric MiB) at sf0.01
 # (2026-08-15, round 7, via scripts/measure_shuffle.py), including
 # exchanges that execute inside a localCheckpoint (invisible on the
-# returned DataFrame's plan — probe_checkpoint hands the pre-truncation
-# DataFrame to the capture so its executed SQLMetrics are readable;
-# round-6 review: d106's dominant range-repartition shuffle was missed
-# by the visible plan).
+# returned DataFrame's plan; round-6 review: d106's dominant
+# range-repartition shuffle was missed by the visible plan).
 MEASURED = {  # query: (shuffle_MiB, peak_mem_MiB)
     "d4_pricing_summary": (0.00, 16.2),
     "d1_broadcast_join_revenue": (0.00, 16.2),
@@ -151,24 +154,15 @@ def test_shuffle_volumes_within_pinned_budgets(spark):
         import pytest
 
         pytest.skip("budgets are calibrated at sf0.01")
-    from pyspark_ml_features_spark.plans.audit import (
-        capture_checkpoint_plans,
-    )
-
     qs = all_queries()
     violations = []
     for name, (m_shuffle, m_peak) in MEASURED.items():
         shuffle_ceiling = max(m_shuffle * MARGIN, SHUFFLE_FLOOR_MIB)
         peak_ceiling = max(m_peak * MARGIN, PEAK_FLOOR_MIB)
-        with capture_checkpoint_plans() as captured:
-            df = qs[name].fn(spark, SF_DIR)
-            df.collect()
-        rows = [runtime_metrics(df).row()] + [
-            runtime_metrics(c["df"]).row() for c in captured
-            if "df" in c]  # probe_stream_query entries carry no df
-        shuffle = round(sum(r["shuffle_MiB"] for r in rows), 2)
-        spill = sum(r["spill_MiB"] for r in rows)
-        peak = max(r["peak_task_MiB"] for r in rows)
+        r = profile(spark, lambda: qs[name].fn(spark, SF_DIR).write
+                    .format("noop").mode("overwrite").save()).row()
+        shuffle, spill = r["shuffle_MiB"], r["spill_MiB"]
+        peak = r["peak_node_MiB"]
         if shuffle > shuffle_ceiling:
             violations.append(
                 f"{name}: shuffle {shuffle} MiB (incl. checkpointed "
