@@ -170,7 +170,7 @@ HEADLINE = [
     # edge baseline, excluded from the headline since r4 with e3/e45
     # (deliberate correctness baseline, not a scale path); s17/s18 are
     # streaming drains (the headline times batch plans; streaming
-    # throughput has its own ladder in scripts/stress_stream_throughput.py).
+    # throughput has its own ladder in scripts/ladder.py stream_throughput).
 ]
 
 

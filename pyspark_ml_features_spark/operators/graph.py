@@ -221,7 +221,7 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
     silently mislabel); at the fixpoint every surviving edge is
     (node, component-min), so labels read straight off the edge list
     and isolated nodes label themselves. The paper PROVES O(log n)
-    rounds on ANY graph; measured on long chains (scripts/stress_cc.py
+    rounds on ANY graph; measured on long chains (scripts/ladder.py cc
     ladder) both variants land at ~log2(n)+1 — 4096-node path: 13 star
     rounds vs 13 jumped min-label rounds, with min-label ~2× faster per
     round (one shuffle and a probe that rides its checkpoint vs two
@@ -922,7 +922,7 @@ def e109_dup_clusters_cc_star(spark: SparkSession,
     bit-match). Equality with the min-label fixpoint across topology
     classes — paths, bridges, cliques, random graphs — is pinned in
     tests/test_graph_star.py; round counts on long chains are measured
-    side by side in scripts/stress_cc.py's ladder (4096-node path:
+    side by side in `scripts/ladder.py cc` (4096-node path:
     13 rounds for both variants — see connected_components_star's
     docstring for the honest reading: star buys the proven bound, not
     an empirical chain speedup over jumped min-label).

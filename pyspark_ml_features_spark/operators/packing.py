@@ -468,11 +468,15 @@ def e51_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard tiers"). Token counts are computed Spark-side (JVM split+size);
     only (key, n_tokens) reaches Python — the text column never crosses
     the Arrow boundary."""
-    d = table(spark, sf_dir, "documents")
-    n_tok = F.size(tokens("text")).cast("bigint")
-    base = d.select("lang", (F.col("doc_id") % 4).alias("shard"),
-                    "doc_id", n_tok.alias("n_tokens"))
-    return greedy_pack(base, GREEDY_PACK_CAP)
+    return greedy_pack(pack_input(table(spark, sf_dir, "documents")),
+                       GREEDY_PACK_CAP)
+
+
+def pack_input(d: DataFrame, shards: int = 4) -> DataFrame:
+    """e51's packing input: (lang, shard = doc_id % shards, doc_id,
+    n_tokens) per document — ``shards`` is the per-task state knob."""
+    return d.select("lang", (F.col("doc_id") % shards).alias("shard"), "doc_id",
+                    F.size(tokens("text")).cast("bigint").alias("n_tokens"))
 
 
 def greedy_pack(base: DataFrame, capacity: int) -> DataFrame:

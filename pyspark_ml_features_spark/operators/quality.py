@@ -161,23 +161,46 @@ BLOOM_M = 4096
 BLOOM_FNS = ((389, 1543), (761, 2711), (997, 3833))
 
 
-def _e52_oracle() -> str:
+def _bloom_ctes(text_expr: str) -> str:
+    """`bloom_hits`' oracle CTEs over ``documents``, hashing ``text_expr``."""
     from pyspark_ml_features_spark.functions.text import duckdb_rolling_hash
 
-    h = duckdb_rolling_hash("text")
     pos_rows = "\n    UNION ALL\n".join(
         f"    SELECT doc_id, (h * {p} + {q}) % {BLOOM_M} AS pos FROM hashed"
         for p, q in BLOOM_FNS)
-    return f"""
-WITH hashed AS (
-    SELECT doc_id, text, {h} AS h FROM documents
+    return f"""hashed AS (
+    SELECT doc_id, text, {duckdb_rolling_hash(text_expr)} AS h FROM documents
 ), pos AS (
 {pos_rows}
 ), bloom AS (
     SELECT DISTINCT pos FROM pos WHERE doc_id % 5 = 0
 ), corpus_pos AS (
     SELECT DISTINCT doc_id, pos FROM pos WHERE doc_id % 5 <> 0
-), hits AS (
+)"""
+
+
+def bloom_hits(hashed: DataFrame) -> DataFrame:
+    """(doc_id, n_pos, n_hit) per corpus doc (doc_id % 5 != 0) of
+    ``hashed`` (doc_id, h): a Bloom hit when n_hit = n_pos against the
+    benchmark slice's DISTINCT bit positions (<= BLOOM_M rows, broadcast)."""
+    pos = hashed.select(
+        "doc_id",
+        F.explode(F.array(*[
+            ((F.col("h") * p + q) % BLOOM_M).alias(f"p{i}")
+            for i, (p, q) in enumerate(BLOOM_FNS)])).alias("pos"))
+    bloom = pos.filter(F.col("doc_id") % 5 == 0).select("pos").distinct()
+    corpus_pos = (pos.filter(F.col("doc_id") % 5 != 0)
+                  .select("doc_id", "pos").distinct())
+    return (corpus_pos.join(F.broadcast(bloom.withColumn("hit", F.lit(1))),
+                            "pos", "left")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_pos"),
+                 F.count("hit").alias("n_hit")))
+
+
+def _e52_oracle() -> str:
+    return f"""
+WITH {_bloom_ctes("text")}, hits AS (
     SELECT c.doc_id,
            count(*) AS n_pos,
            count(b.pos) AS n_hit
@@ -214,9 +237,10 @@ def e52_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     saturation (7% of bits set at sf0.01; 53% at sf0.1 — the fixture
     demonstrates both regimes).
 
-    The whole filter is declarative: bit positions are rows, the filter is
-    a DISTINCT aggregate (≤ m rows regardless of corpus size), membership
-    is a broadcast join + count match — no driver-side bitset, no UDF.
+    The whole filter is declarative (``bloom_hits``): bit positions are
+    rows, the filter is a DISTINCT aggregate (≤ m rows regardless of corpus
+    size), membership is a broadcast join + count match — no driver-side
+    bitset, no UDF.
 
     100 TB: the REAL deployment replaces the position-rows join with a
     broadcast m-bit bitmap (Spark's ``df.stat.bloomFilter`` or a runtime
@@ -228,21 +252,7 @@ def e52_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_ml_features_spark.functions.text import rolling_hash
 
     d = table(spark, sf_dir, "documents")
-    hashed = d.select("doc_id", "text", rolling_hash("text").alias("h"))
-    pos = hashed.select(
-        "doc_id",
-        F.explode(F.array(*[
-            ((F.col("h") * p + q) % BLOOM_M).alias(f"p{i}")
-            for i, (p, q) in enumerate(BLOOM_FNS)])).alias("pos"))
-    bloom = (pos.filter(F.col("doc_id") % 5 == 0)
-             .select("pos").distinct())
-    corpus_pos = (pos.filter(F.col("doc_id") % 5 != 0)
-                  .select("doc_id", "pos").distinct())
-    hits = (corpus_pos.join(F.broadcast(bloom.withColumn("hit", F.lit(1))),
-                            "pos", "left")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_pos"),
-                 F.count("hit").alias("n_hit")))
+    hits = bloom_hits(d.select("doc_id", rolling_hash("text").alias("h")))
     bench_texts = (d.filter(F.col("doc_id") % 5 == 0)
                    .select("text").distinct())
     exact = (d.filter(F.col("doc_id") % 5 != 0)
@@ -1277,23 +1287,10 @@ def e108_quality_filter_chain_audit(spark: SparkSession,
 
 
 def _e110_oracle() -> str:
-    from pyspark_ml_features_spark.functions.text import duckdb_rolling_hash
     from pyspark_ml_features_spark.operators.packing import GREEDY_PACK_CAP
 
-    h = duckdb_rolling_hash("coalesce(text, '')")
-    pos_rows = "\n    UNION ALL\n".join(
-        f"    SELECT doc_id, (h * {p} + {q}) % {BLOOM_M} AS pos FROM hashed"
-        for p, q in BLOOM_FNS)
     return f"""
-WITH RECURSIVE hashed AS (
-    SELECT doc_id, text, {h} AS h FROM documents
-), pos AS (
-{pos_rows}
-), bloom AS (
-    SELECT DISTINCT pos FROM pos WHERE doc_id % 5 = 0
-), corpus_pos AS (
-    SELECT DISTINCT doc_id, pos FROM pos WHERE doc_id % 5 <> 0
-), hits AS (
+WITH RECURSIVE {_bloom_ctes("coalesce(text, '')")}, hits AS (
     SELECT c.doc_id, count(*) AS n_pos, count(b.pos) AS n_hit
     FROM corpus_pos c LEFT JOIN bloom b ON c.pos = b.pos
     GROUP BY c.doc_id
@@ -1374,21 +1371,7 @@ def e110_decontam_pack_audit(spark: SparkSession,
     # bigint Arrow schema as NaN — an engine-only failure the SQL oracle
     # would not reproduce.
     text = F.coalesce(F.col("text"), F.lit(""))
-    hashed = d.select("doc_id", rolling_hash(text).alias("h"))
-    pos = hashed.select(
-        "doc_id",
-        F.explode(F.array(*[
-            ((F.col("h") * p + q) % BLOOM_M).alias(f"p{i}")
-            for i, (p, q) in enumerate(BLOOM_FNS)])).alias("pos"))
-    bloom = (pos.filter(F.col("doc_id") % 5 == 0)
-             .select("pos").distinct())
-    corpus_pos = (pos.filter(F.col("doc_id") % 5 != 0)
-                  .select("doc_id", "pos").distinct())
-    hits = (corpus_pos.join(F.broadcast(bloom.withColumn("hit", F.lit(1))),
-                            "pos", "left")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_pos"),
-                 F.count("hit").alias("n_hit")))
+    hits = bloom_hits(d.select("doc_id", rolling_hash(text).alias("h")))
     flags = (d.filter(F.col("doc_id") % 5 != 0)
              .select("doc_id", "lang",
                      (F.col("doc_id") % 4).alias("shard"),

@@ -2384,6 +2384,17 @@ def distributed_prefix_sum(df: DataFrame, order_cols: list[str],
             .drop("pid"))
 
 
+D106_ORDER = ["feat", "val", "l_orderkey", "l_linenumber"]
+
+
+def long_features(li: DataFrame) -> DataFrame:
+    """d106's long form: (l_orderkey, l_linenumber, feat, val) per feature."""
+    return li.selectExpr(
+        "l_orderkey", "l_linenumber",
+        "stack(3, 'd', l_discount, 'p', l_extendedprice, "
+        "'q', CAST(l_quantity AS DOUBLE)) AS (feat, val)")
+
+
 @register(
     "d106_quantile_normalize",
     oracle="""
@@ -2436,12 +2447,7 @@ def d106_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; the same primitive serves ECDF and exact-quantile
     assignment."""
     li = table(spark, sf_dir, "lineitem")
-    long = li.selectExpr(
-        "l_orderkey", "l_linenumber",
-        "stack(3, 'd', l_discount, 'p', l_extendedprice, "
-        "'q', CAST(l_quantity AS DOUBLE)) AS (feat, val)")
-    ranked = distributed_row_number(
-        long, ["feat", "val", "l_orderkey", "l_linenumber"], 32)
+    ranked = distributed_row_number(long_features(li), D106_ORDER, 32)
     # global rank over (feat, val, key) -> per-feature rank by subtracting
     # the count of rows in preceding features (features are equal-sized:
     # one row per lineitem each — so count the SOURCE table, a columnless

@@ -215,8 +215,13 @@ def e4b_lsh_bucket_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine within bucket. Deterministic (planes are literals) → exact
     oracle. At scale the bucket join replaces the O(|Q|·n) cross join with
     O(|Q|·n/2^p) and shuffles on the bucket key."""
-    e = _bucketize(table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")))
+    return lsh_top5(_bucketize(table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("emb"))))
+
+
+def lsh_top5(e: DataFrame) -> DataFrame:
+    """e4b's search over a _bucketize()d frame: the top-5 same-bucket
+    neighbours of each query (vec_id % 50 = 0) by rounded cosine."""
     q = (e.filter(F.col("vec_id") % 50 == 0)
          .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"),
                  F.col("nrm").alias("qnrm"), "bucket"))
@@ -637,7 +642,7 @@ def _disposition(eb: DataFrame, cc: DataFrame) -> DataFrame:
 def semantic_dedup_disposition(e: DataFrame) -> DataFrame:
     """The e112 pipeline over any (vec_id, emb: array<double>) DataFrame —
     ONE definition shared by the graded query and the replication ladder
-    (scripts/stress_semantic_dedup.py), so the ladder exercises exactly
+    (scripts/ladder.py semantic_dedup), so the ladder exercises exactly
     the graded plan (the dup_cluster_assignment pattern, graph.py)."""
     return _cluster_bucketized(_bucketize(e))
 
@@ -729,7 +734,7 @@ def e114_incremental_semantic_dedup(spark: SparkSession,
 def incremental_semantic_disposition(eb: DataFrame,
                                      base_labels: DataFrame) -> DataFrame:
     """Stage 2 of e114 — ONE definition shared by the graded query and
-    the delta-ingest ladder tier (scripts/stress_semantic_dedup.py), so
+    the delta-ingest ladder tier (scripts/ladder.py semantic_dedup), so
     the ladder's incremental economics are measured on exactly the
     graded plan. Inputs: a _bucketize()d union frame (vec_id, emb, nrm,
     bucket) where delta = vec_id % 4 == 0 (the fixture's ingest split —
@@ -1003,7 +1008,7 @@ def e116_or_banding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cites: similarity.py:_bucketize/_duckdb_bucket (now band-parameterized,
     still the single shared definition), similarity.py:e115 (the sibling
     mitigation this is graded against), DESIGN_SCALE.md Round-12/13
-    sections (the trade stress_ann measured, now an exactness pin)."""
+    sections (the trade `scripts/ladder.py ann` measures, pinned exactly)."""
     # fan_out (r14): e115's shape with 4 independent band bucketizations
     # (20 folds/row) plus the same truth BNLJ — all single-task on the
     # unsplittable scan otherwise (no-op on a multi-split cluster scan).

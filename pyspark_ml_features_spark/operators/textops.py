@@ -57,6 +57,14 @@ def e7_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(n_tok).alias("max_tokens"))
 
 
+def term_stats(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """e8's term statistics over (doc_id, lang, text): term frequencies
+    (doc_id, lang, term, tf) and one (term, df) row per vocabulary term."""
+    tok = d.select("doc_id", "lang", F.explode(tokens("text")).alias("term"))
+    tf = tok.groupBy("doc_id", "lang", "term").agg(F.count(F.lit(1)).alias("tf"))
+    return tf, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+
+
 @register(
     "e8_tfidf_topterms",
     oracle="""
@@ -96,9 +104,7 @@ def e8_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides already hash-partition on `term`. The single-row n_docs
     aggregate stays an explicit broadcast."""
     d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "lang", F.explode(tokens("text")).alias("term"))
-    tf = tok.groupBy("doc_id", "lang", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    tf, df = term_stats(d)
     n = d.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     idf = F.log((F.col("n_docs") + 1) / (F.col("df") + 1)) + 1
     scored = (

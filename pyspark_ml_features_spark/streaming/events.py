@@ -48,12 +48,15 @@ def _stage_single_parquet(sf_dir: str, name: str) -> str:
     return stage
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str,
+                  max_files_per_trigger: int | None = None) -> DataFrame:
     """events as a file-source stream. The file source wants a directory;
     the driver ships a single parquet file, so we expose it via a symlinked
-    staging dir (a no-copy operation)."""
+    staging dir (a no-copy operation). A multi-file events.parquet
+    directory streams as is, ``max_files_per_trigger`` files a batch."""
     src = os.path.join(sf_dir, "events.parquet")
-    stage = _stage_single_parquet(sf_dir, "events")
+    stage = src if os.path.isdir(src) else _stage_single_parquet(sf_dir,
+                                                                 "events")
     # Match the batch reader's layout handling (sources/io.py:table): the
     # legacy nanos layout must be read as long and truncated; the round-3+
     # timestamp[us] layout streams natively. The conf is set before the
@@ -63,7 +66,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_raw = dict(raw.dtypes)["ts"]
     raw_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in raw.schema.fields)
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
+    reader = spark.readStream.schema(raw_schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = reader.parquet(stage)
     if ts_raw == "bigint":  # legacy nanos layout
         return stream.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000")))

@@ -16,20 +16,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from pyspark_ml_features_spark.pipeline import curate, funnel_report
-    from pyspark_ml_features_spark.session import tune_session
+    from pyspark_ml_features_spark.session import get_spark, tune_session
 
-    spark = tune_session(
-        SparkSession.builder.master("local[8]")
-        .appName("curation-pipeline-demo")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = tune_session(get_spark(app_name="curation-pipeline-demo"))
 
     r = curate(spark, sf_dir)
     print(funnel_report(r))

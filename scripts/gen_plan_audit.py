@@ -20,7 +20,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
+from pyspark_ml_features_spark.session import get_spark  # noqa: E402
 
 OUT = os.path.join(REPO, "PLAN_AUDIT.md")
 MEASURED_MARKER = "\n## Measured runtime volumes"
@@ -51,12 +51,8 @@ per-micro-batch; tests/test_streaming.py covers their semantics).
 
 
 def main() -> None:
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.ui.enabled", "false")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.sql.session.timeZone", "UTC")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(app_name="plan-audit", master="local[8]",
+                      shuffle_partitions=16)
 
     import bench
     from pyspark_ml_features_spark import registry

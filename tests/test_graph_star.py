@@ -4,7 +4,7 @@ min-label fixpoint on every graph topology class the repo uses, plus the
 round bound that justifies its existence: ~log2(n) rounds on a
 long-chain graph (the PROVEN O(log n) bound — jumped min-label matches
 it empirically on paths but carries no worst-case guarantee; see the
-measured ladder in scripts/stress_cc.py)."""
+measured ladder in scripts/ladder.py cc)."""
 
 from __future__ import annotations
 
@@ -95,7 +95,7 @@ def test_star_rounds_logarithmic_on_long_chain(spark):
     separation vs UN-jumped propagation (O(diameter) = 255 rounds,
     capped) is what the algorithm buys on topologies where jumping's
     single hop per round can't keep up — measured side by side in
-    scripts/stress_cc.py."""
+    scripts/ladder.py cc."""
     n = 256
     nodes = list(range(1, n + 1))
     edges = [(i, i + 1) for i in range(1, n)]

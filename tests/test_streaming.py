@@ -298,8 +298,8 @@ def test_chained_stateful_windows_match_batch_closed_set(spark):
 
 
 def test_watermark_bounds_state_and_drops_late_replay(spark, tmp_path):
-    """The measured stress_streaming.py result, pinned as an invariant
-    (round 5): across checkpoint-restart drains of advancing event time,
+    """The measured `scripts/ladder.py streaming` result, pinned as an
+    invariant (round 5): across checkpoint-restart drains of advancing event time,
     a watermarked windowed aggregate's live state PLATEAUS at the
     windows inside the horizon (evicting closed windows every stage), and a
     replay of long-past hours is fully dropped —
