@@ -33,7 +33,7 @@ _READ = ("number of output rows", "peak memory", "data size")
 
 @dataclass
 class Profile:
-    """Totals over one run. Broadcast bytes and the operator peak come
+    """Totals over one run. Broadcast bytes and the operator peaks come
     from the SQL store's printed values, so they are exact only to the
     printed digit ("64.2 MiB", "2.0 GiB"); stage fields are exact."""
 
@@ -48,10 +48,17 @@ class Profile:
     spill_bytes: int = 0         # spilled data, at its in-memory size
     scan_rows: int = 0           # rows leaving source scans
     output_rows: int = 0         # rows out of the last execution's root
-    # peak memory two ways: the largest operator peak, which Spark sums
-    # over the operator's tasks, and the largest one task held
+    # peak memory three ways: the largest operator peak, which Spark sums
+    # over the operator's tasks; the most one task held in one operator;
+    # and the most one task held over all its operators
     peak_node_memory: int = 0
+    peak_node_task_memory: int = 0
     peak_task_memory: int = 0
+    # the session's memory page: Spark sizes it at start-up from execution
+    # memory and cores (nextPowerOf2(memory / cores / 16) within 1-64 MiB,
+    # less a 16-byte array header under G1); sorters and aggregation maps
+    # reserve whole pages
+    page_bytes: int = 0
 
     def row(self) -> dict[str, float]:
         """Compact dict for tables/JSON (bytes in MiB, 2 dp)."""
@@ -61,6 +68,9 @@ class Profile:
             "spill_MiB": round(self.spill_bytes / MIB, 2),
             "peak_node_MiB": round(self.peak_node_memory / MIB, 2),
             "peak_task_MiB": round(self.peak_task_memory / MIB, 2),
+            "peak_node_task_pages": round(
+                self.peak_node_task_memory / self.page_bytes, 3)
+            if self.page_bytes else 0.0,
             "scan_rows": self.scan_rows,
             "out_rows": self.output_rows,
         }
@@ -87,6 +97,8 @@ def profile(spark, run) -> Profile:
     finally:
         p = Profile(wall_s=time.perf_counter() - t0)
         sc.setLocalProperty(GROUP_PROP, outer)
+    p.page_bytes = int(
+        sc._jvm.org.apache.spark.SparkEnv.get().memoryManager().pageSizeBytes())
     sc._jsc.sc().listenerBus().waitUntilEmpty()
 
     _read_stages(sc, sc.statusTracker().getJobIdsForGroup(group), p)
@@ -158,6 +170,8 @@ def _read_execution(sql, eid: int, p: Profile) -> None:
                 p.scan_rows += value if source else 0
             elif key == "peak memory":
                 p.peak_node_memory = max(p.peak_node_memory, value)
+                p.peak_node_task_memory = max(p.peak_node_task_memory,
+                                              metric_max(str(text.get())))
             elif name == "BroadcastExchange":
                 p.broadcast_bytes += value
     p.output_rows = root_rows or 0
@@ -170,3 +184,14 @@ def metric_value(text: str) -> int:
     head = text.strip().split("\n")[-1].split(" (")[0].split()
     value = float(head[0].replace(",", ""))
     return round(value * _SIZES[head[1]] if len(head) > 1 else value)
+
+
+def metric_max(text: str) -> int:
+    """The most one task reported of a metric printed as in
+    ``metric_value``: the ``max`` field of a ``total (min, med, max
+    (stageId: taskId))`` block, or the value itself, which Spark prints
+    alone when one task reported."""
+    line = text.strip().split("\n")[-1]
+    if " (" not in line:
+        return metric_value(line)
+    return metric_value(line.split(" (", 1)[1].split(", ")[2])

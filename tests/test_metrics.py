@@ -11,7 +11,8 @@ import pytest
 from pyspark_ml_features_spark.functions.metrics import (
     assert_quality, observed_quality)
 from pyspark_ml_features_spark.plans.audit import plan_text, probe_checkpoint
-from pyspark_ml_features_spark.plans.profile import profile
+from pyspark_ml_features_spark.plans.profile import (
+    MIB, metric_max, metric_value, profile)
 from pyspark_ml_features_spark.registry import all_queries
 from pyspark_ml_features_spark.sources import table
 from tests.conftest import SF_DIR
@@ -56,6 +57,16 @@ def test_assert_quality_gates(spark):
 
 def _noop_write(df):
     df.write.format("noop").mode("overwrite").save()
+
+
+def test_metric_max_reads_one_task():
+    """The per-task peak is the block's max field, or the value itself
+    when one task reported; the summed total stays metric_value's."""
+    block = ("total (min, med, max (stageId: taskId))\n"
+             "257.0 MiB (64.2 MiB, 64.2 MiB, 64.2 MiB (stage 4.0: task 5))")
+    assert metric_max(block) == round(64.2 * MIB)
+    assert metric_value(block) == 257 * MIB
+    assert metric_max("65.0 MiB") == 65 * MIB
 
 
 def test_profile_aggregate_query(spark):
