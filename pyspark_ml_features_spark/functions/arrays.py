@@ -53,8 +53,3 @@ def duckdb_dot(a: str, b: str, dim: int) -> str:
 
 def duckdb_norm(a: str, dim: int) -> str:
     return f"sqrt({duckdb_dot(a, a, dim)})"
-
-
-def duckdb_cosine(a: str, b: str, dim: int) -> str:
-    return (f"({duckdb_dot(a, b, dim)} / "
-            f"({duckdb_norm(a, dim)} * {duckdb_norm(b, dim)}))")

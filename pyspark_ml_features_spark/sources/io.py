@@ -82,7 +82,9 @@ def parquet_scan(spark: SparkSession, path: str) -> DataFrame:
         relations = spark._pmfs_relations = {}
     plan = relations.get(key)
     if plan is None:
-        df = spark.read.parquet(path)
+        # read the key's path: a relation holding a symlink's path breaks
+        # every later read of the file once the link is removed
+        df = spark.read.parquet(resolved)
         relations[key] = df._jdf.queryExecution().analyzed()
         return df
     # built directly: spark._jvm.org.apache... costs a round trip per dot

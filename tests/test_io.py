@@ -4,6 +4,7 @@ plot utility."""
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pyarrow as pa
@@ -76,6 +77,20 @@ def test_inference_conf_is_part_of_the_key(spark, tmp_path):
         assert parquet_scan(spark, path).schema["b"].dataType == BinaryType()
     finally:
         spark.conf.unset(conf)
+
+
+def test_read_through_removed_symlink_keeps_the_file_readable(spark, tmp_path):
+    # the memo is keyed by the resolved path, so the relation it holds must
+    # read the resolved path too: a link removed after the first read must
+    # not break later reads of the same file
+    real = tmp_path / "real"
+    real.mkdir()
+    shutil.copy(os.path.join(SMOKE_SF_DIR, "nation.parquet"), real)
+    link = tmp_path / "link"
+    link.symlink_to(real, target_is_directory=True)
+    assert parquet_scan(spark, str(link / "nation.parquet")).count() == 25
+    link.unlink()
+    assert parquet_scan(spark, str(real / "nation.parquet")).count() == 25
 
 
 def test_two_scans_of_one_table_self_join(spark):

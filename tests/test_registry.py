@@ -1,16 +1,15 @@
-"""Registry hygiene: COVERAGE.md stays in step with the registry and the
-grade files, no operator module silently rebinds a top-level name, and the
+"""Registry hygiene: COVERAGE.md stays in step with the registry and
+GRADES.json, no operator module silently rebinds a top-level name, and the
 shared built frames stay read-only."""
 
 from __future__ import annotations
 
 import ast
-import re
+import runpy
 from pathlib import Path
 
 import pytest
 
-from pyspark_ml_features_spark import registry
 from tests.conftest import SF_DIR
 
 REPO = Path(__file__).parent.parent
@@ -18,35 +17,19 @@ OPERATORS = REPO / "pyspark_ml_features_spark" / "operators"
 
 
 def test_coverage_md_incorporates_every_grade_file():
-    """Staleness guard (VERDICT r6 task 1): COVERAGE.md's footer records
-    exactly which CORRECTNESS_r*.json files gen_coverage.py read. If a new
-    round's grades land without `python scripts/gen_coverage.py` being
-    re-run, the footer misses the new basename and this test goes red —
-    the recurring "COVERAGE.md is stale" hygiene finding (VERDICT r5 task
-    3, r6 task 1) becomes a test failure instead of a judge note.
+    """Staleness guard: the committed COVERAGE.md equals what
+    `scripts/gen_coverage.py` renders from the registry and GRADES.json.
 
-    The inventory rows must also name exactly the registered queries, so
-    an operator module dropped from queries.py fails here instead of
-    silently removing its queries from the engine."""
-    on_disk = sorted(p.name for p in REPO.glob("CORRECTNESS_r*.json"))
-    text = (REPO / "COVERAGE.md").read_text()
-    footer = [ln for ln in text.splitlines()
-              if ln.startswith("Incorporated grade files:")]
-    assert footer, ("COVERAGE.md has no staleness footer — regenerate with "
-                    "`python scripts/gen_coverage.py`")
-    recorded = sorted(n.strip().strip("`") for n in footer[0]
-                      .removeprefix("Incorporated grade files:").split(", ")
-                      if n.strip())
-    assert recorded == on_disk, (
-        f"COVERAGE.md is stale: it incorporated {recorded} but the repo has "
-        f"{on_disk} — re-run `python scripts/gen_coverage.py` and commit")
-    listed = set(re.findall(r"^\| `([^`]+)` \|", text, flags=re.MULTILINE))
-    registered = set(registry.all_queries())
-    assert listed == registered, (
-        f"COVERAGE.md rows and the registry disagree: only in COVERAGE.md "
-        f"{sorted(listed - registered)[:5]}, only registered "
-        f"{sorted(registered - listed)[:5]} — a module import missing from "
-        f"queries.py, or a stale COVERAGE.md")
+    One equality covers three drifts: the rows name exactly the registered
+    queries (an operator module dropped from queries.py fails here instead
+    of silently removing its queries from the engine), every grade cell
+    matches GRADES.json, and each row's oracle kind, tags and summary match
+    its registration."""
+    gen = runpy.run_path(str(REPO / "scripts" / "gen_coverage.py"),
+                         run_name="__check__")
+    assert (REPO / "COVERAGE.md").read_text() == gen["render"](), (
+        "COVERAGE.md is stale — re-run `python scripts/gen_coverage.py` "
+        "and commit")
 
 
 def _top_level_bindings(tree: ast.Module) -> list[tuple[str, int]]:
