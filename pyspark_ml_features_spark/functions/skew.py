@@ -11,9 +11,63 @@ spread across n tasks; result is identical to the plain join.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from py4j.java_gateway import JavaClass
+from pyspark.sql import DataFrame, SparkSession
 
 SALT_COL = "__salt"
+
+#: Session confs that change how a file relation splits into partitions.
+SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
+_FILE_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+
+
+def _scan_relation(df: DataFrame):
+    """The relation ``df`` reads when its analyzed plan is Project and
+    Filter nodes over one non-partitioned, unbucketed file relation;
+    otherwise None."""
+    plan = df._jdf.queryExecution().analyzed()
+    name = plan.nodeName()
+    while name in ("Project", "Filter"):
+        plan = plan.child()
+        name = plan.nodeName()
+    if name != "LogicalRelation":
+        return None
+    relation = plan.relation()
+    if (relation.getClass().getName() != _FILE_RELATION
+            or not relation.partitionSchema().isEmpty()
+            or not relation.bucketSpec().isEmpty()):
+        return None
+    return relation
+
+
+def _partition_count(spark: SparkSession, df: DataFrame) -> int:
+    """``df.rdd.getNumPartitions()``, read once per relation and split
+    conf values in ``spark`` for a frame ``_scan_relation`` accepts."""
+    relation = _scan_relation(df)
+    if relation is None:
+        return df.rdd.getNumPartitions()
+    memo = getattr(spark, "_pmfs_partition_counts", None)
+    if memo is None:
+        memo = spark._pmfs_partition_counts = {}
+    key = tuple(spark.conf.get(k) for k in SPLIT_CONFS)
+    counts = memo.get(key)
+    if counts is None:
+        # keyed by JVM identity: a relation's equals compares root paths,
+        # which a file rewritten in place keeps
+        client = spark._jvm._gateway_client
+        counts = memo[key] = JavaClass("java.util.Collections", client).synchronizedMap(
+            JavaClass("java.util.IdentityHashMap", client)())
+    count = counts.get(relation)
+    if count is None:
+        count = df.rdd.getNumPartitions()
+        counts.put(relation, count)
+    return count
 
 
 def fan_out(df: DataFrame, *key_cols: str,
@@ -48,15 +102,29 @@ def fan_out(df: DataFrame, *key_cols: str,
     registers.
 
     Call this DIRECTLY on a scan (or a scan + narrow projection), not
-    mid-lineage: the ``df.rdd.getNumPartitions()`` gate forces full
-    physical planning of the upstream frame on every call and reflects
-    plan-time (pre-AQE) partitioning — cheap and correct for a raw
-    scan, expensive and potentially misleading after a shuffle
-    (ADVICE r13).
+    mid-lineage: the ``df.rdd.getNumPartitions()`` gate plans, code-
+    generates and closure-cleans the upstream frame (tens of ms) and
+    reflects plan-time (pre-AQE) partitioning — correct for a raw scan,
+    potentially misleading after a shuffle (ADVICE r13).
+
+    The gate is read once per relation. A frame whose analyzed plan is
+    ``Project`` and ``Filter`` nodes over one file relation
+    (``HadoopFsRelation``) with no partition columns and no buckets has
+    its scan's partition count: the count depends only on that relation's
+    files and the split confs (``SPLIT_CONFS``). ``table()`` hands every
+    read of an unchanged file in a session the same relation, so the
+    count is kept on the session per relation (by JVM identity) and split
+    conf values, and a later call with the same key plans nothing,
+    whatever its ``n``. A rewritten file gets a new relation,
+    ``spark.newSession()`` a memo of its own, and any other frame (a
+    join, a shuffle, a range, a partitioned or bucketed table) pays
+    ``getNumPartitions()`` on every call. A filter the optimizer folds to
+    an empty relation is still counted as its scan; only where rows sit
+    can differ, never the rows.
     """
-    sc = df.sparkSession.sparkContext
-    n = min_partitions or sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    spark = df.sparkSession
+    n = min_partitions or spark.sparkContext.defaultParallelism
+    if _partition_count(spark, df) >= n:
         return df
     if key_cols:
         return df.repartition(n, *[F.col(c) for c in key_cols])

@@ -250,8 +250,12 @@ FROM documents
 def t4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting via polynomial rolling hash (base 31 mod
     2^31-1) over raw and normalized text — integer fold, engine-exact.
-    At scale this is the cheap first-pass key for exact dedup."""
-    d = table(spark, sf_dir, "documents")
+    At scale this is the cheap first-pass key for exact dedup.
+
+    The per-character fold is the stage's whole cost, so the unsplittable
+    scan is spread on ``doc_id`` first: one task otherwise runs it while
+    the other cores idle (a no-op at one core)."""
+    d = fan_out(table(spark, sf_dir, "documents"), "doc_id")
     return d.select(
         "doc_id",
         rolling_hash("text").alias("fingerprint"),

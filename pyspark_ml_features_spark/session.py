@@ -25,12 +25,31 @@ On a ``local[...]`` master (the default) Python workers also start from
 parsed directory so a UDF task stops re-reading ``pyspark.zip`` on every
 task. Other masters keep ``pyspark.worker``: their executors cannot see
 the driver's source tree.
+
+Importing this module also memoizes Py4J's class and method lookups. Each
+``F.*`` call resolves ``functions`` through the JVM view and then the
+function through the class, two reflection round trips before it invokes
+anything; a simple name missing from the view's star imports scans every
+jar on the class path. ``JVMView.__getattr__`` and
+``JavaClass.__getattr__`` now keep each ``JavaClass`` and ``JavaMember``
+they return, under (gateway client, view id or class name, attribute), so
+a warm query build sends no reflection command. That is safe because
+neither object holds state from the lookup: a ``JavaMember`` names a
+static method, and Java picks the overload when it is called. Packages
+and static-field values are looked up every time, failed lookups are not
+kept, and two gateways never share an entry. A name looked up before a
+later ``java_import`` that shadows it keeps its first class (PySpark
+imports everything when it launches the gateway). The wrappers rely on
+py4j internals (``JVMView._id``, ``JavaClass._fqn``,
+``_gateway_client``); pyspark pins py4j to one exact version, 0.10.9.9
+for pyspark 4.1.2.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass, JavaMember, JVMView
 from pyspark.sql import SparkSession
 
 DEFAULT_SEED = 42
@@ -154,3 +173,37 @@ def tune_session(spark: SparkSession) -> SparkSession:
         if spark.conf.get(key) != value and spark.conf.isModifiable(key):
             spark.conf.set(key, value)
     return spark
+
+
+# (gateway client, view id or class name, attribute) -> JavaClass/JavaMember
+_jvm_lookups: dict[tuple, object] = {}
+
+
+def _memo_lookup(lookup, scope: str):
+    def __getattr__(self, name):
+        # through __dict__: a missing attribute would re-enter __getattr__
+        attrs = self.__dict__
+        client, where = attrs.get("_gateway_client"), attrs.get(scope)
+        if client is None or where is None:
+            return lookup(self, name)
+        key = (client, where, name)
+        found = _jvm_lookups.get(key)
+        if found is None:
+            found = lookup(self, name)
+            if isinstance(found, (JavaClass, JavaMember)):
+                _jvm_lookups[key] = found
+        return found
+
+    __getattr__._pmfs_memo = True
+    return __getattr__
+
+
+def _memoize_jvm_lookups() -> None:
+    """Serve repeated class and method lookups from ``_jvm_lookups``
+    (module docstring); a second call leaves the wrappers as they are."""
+    for cls, scope in ((JVMView, "_id"), (JavaClass, "_fqn")):
+        if not getattr(cls.__getattr__, "_pmfs_memo", False):
+            cls.__getattr__ = _memo_lookup(cls.__getattr__, scope)
+
+
+_memoize_jvm_lookups()

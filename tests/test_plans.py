@@ -843,6 +843,26 @@ def test_dup_span_report_single_gram_shuffle(spark):
         "only the n_words attach may join"
 
 
+def test_fingerprint_fans_out_only_an_unsplit_scan(spark):
+    """t4: the rolling-hash fold is a narrow projection of the documents
+    scan, so its only exchange is fan_out's hash on doc_id, present when
+    the scan has fewer partitions than ``defaultParallelism`` and absent
+    otherwise (one core, or a scan that already splits)."""
+    import re
+
+    from pyspark_ml_features_spark.sources import table
+
+    scan_parts = table(spark, SF_DIR, "documents").rdd.getNumPartitions()
+    fans_out = scan_parts < spark.sparkContext.defaultParallelism
+    plan = _plan(spark, "t4_fingerprint")
+    exchanges = re.findall(r"\(\d+\) Exchange\b", plan)
+    assert len(exchanges) == fans_out, (
+        f"t4 must shuffle only when fan_out fires ({fans_out}); plan has "
+        f"{len(exchanges)} exchanges")
+    if fans_out:
+        assert "hashpartitioning(doc_id" in plan
+
+
 def test_quantile_normalize_single_post_checkpoint_exchange(spark):
     """d106 (r14): the rank-mean is a window over rk, not a
     groupBy(rk)+join-back — the post-checkpoint plan must carry exactly

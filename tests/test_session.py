@@ -122,3 +122,86 @@ def test_tune_session_sets_only_what_differs(spark, monkeypatch):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+class _StubClient:
+    """A gateway client with no JVM: every view name is a class in its own
+    package and every class attribute a method. It records what it sent."""
+
+    def __init__(self, package):
+        self.package = package
+        self.gateway_property = SimpleNamespace(pool={})
+        self.converters = []
+        self.sent = []
+
+    def send_command(self, command):
+        from py4j import protocol
+
+        self.sent.append(command)
+        kind, name = command.split("\n")[1:3]
+        if kind == "u":
+            return protocol.SUCCESS_CLASS + f"{self.package}.{name}"
+        return protocol.SUCCESS + protocol.METHOD_TYPE
+
+
+def test_jvm_lookups_are_memoized_per_gateway(monkeypatch):
+    from py4j.java_gateway import JavaClass, JavaMember, JVMView
+
+    monkeypatch.setattr(session, "_jvm_lookups", {})
+    wrapped = (JVMView.__getattr__, JavaClass.__getattr__)
+    session._memoize_jvm_lookups()
+    assert (JVMView.__getattr__, JavaClass.__getattr__) == wrapped, \
+        "a second install must leave the wrappers as they are"
+    for client in (_StubClient("a"), _StubClient("b")):
+        view = JVMView(client, "jvm", id="rj")
+        cls = view.functions
+        assert isinstance(cls, JavaClass)
+        assert cls._fqn == f"{client.package}.functions", \
+            "a lookup was served another gateway's class"
+        member = cls.col
+        assert isinstance(member, JavaMember) and member.gateway_client is client
+        # a new view object with the same id shares the client's entries
+        assert JVMView(client, "jvm", id="rj").functions is cls
+        assert cls.col is member
+        assert len(client.sent) == 2, client.sent
+        JVMView(client, "jvm", id="rj2").functions
+        assert len(client.sent) == 3, "another view must look up afresh"
+
+
+def test_package_lookups_still_reach_the_jvm(spark, monkeypatch):
+    from py4j.java_gateway import JavaPackage
+
+    jvm = spark.sparkContext._jvm
+    for _ in range(2):
+        found = []
+        sent = _commands_sent(monkeypatch, lambda: found.append(jvm.java.lang))
+        assert isinstance(found[0], JavaPackage)
+        assert len([c for c in sent if c.startswith("r\n")]) == 2, \
+            "a package lookup must not be memoized"
+
+
+def test_warm_query_build_sends_no_reflection_command(spark, monkeypatch):
+    """Every F.* call and PySpark helper resolves its JVM class and method
+    through the memo, so once a query has been built, building it again
+    looks nothing up: the perfbench workloads' queries at sf0.001."""
+    import json
+
+    from pyspark_ml_features_spark import registry
+    from tests.conftest import SMOKE_SF_DIR
+
+    spec = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                        "perfbench", "spec.json")
+    with open(spec) as fh:
+        workloads = json.load(fh)["workloads"]
+    qs = registry.all_queries()
+    names = [n for w in ("relational", "curation") for n in workloads[w]["queries"]]
+    assert len(names) == 9
+
+    def build_all():
+        for name in names:
+            qs[name].fn(spark, SMOKE_SF_DIR)
+
+    build_all()
+    sent = _commands_sent(monkeypatch, build_all)
+    lookups = [c for c in sent if c.startswith("r\n")]
+    assert sent and not lookups, f"{len(lookups)} of {len(sent)} commands: {lookups[:5]}"
