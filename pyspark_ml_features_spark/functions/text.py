@@ -1,6 +1,7 @@
 """Text-analysis column helpers: tokenization, stopwords, language markers,
-rolling-hash fingerprints. All pure SQL expressions (no Python UDFs) so they
-stay inside whole-stage codegen and have exact DuckDB twins.
+t2's quality score, rolling-hash fingerprints and the LCG split coin. All
+pure SQL expressions (no Python UDFs) so they stay inside whole-stage
+codegen, each with its exact DuckDB twin (``duckdb_*``) for the oracles.
 """
 
 from __future__ import annotations
@@ -19,11 +20,58 @@ LANG_MARKERS = {
 }
 HASH_MOD = 2147483647  # 2^31 - 1; rolling-hash modulus
 HASH_BASE = 31
+_STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
 
 
 def tokens(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.split(c, " ")
+
+
+def quality_signals(toks: Column) -> dict[str, Column]:
+    """t2's per-document signals over a token-array column, as doubles:
+    ``n_tokens``, ``distinct_ratio``, ``stopword_ratio``, ``avg_word_len``
+    and ``quality_score`` = 0.3·distinct + 0.3·(1 − stop) +
+    0.4·least(avg_len / 10, 1). The operand and evaluation order is fixed,
+    so every engine computes the identical double (no libm anywhere)."""
+    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
+    n_tokens = F.size(toks).cast("double")
+    n_distinct = F.size(F.array_distinct(toks)).cast("double")
+    n_stop = F.size(
+        F.filter(toks, lambda t: F.array_contains(stop_arr, t))).cast("double")
+    total_chars = F.aggregate(
+        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
+    ).cast("double")
+    distinct_ratio = n_distinct / n_tokens
+    stop_ratio = n_stop / n_tokens
+    avg_word_len = total_chars / n_tokens
+    return {
+        "n_tokens": n_tokens,
+        "distinct_ratio": distinct_ratio,
+        "stopword_ratio": stop_ratio,
+        "avg_word_len": avg_word_len,
+        "quality_score": (F.lit(0.3) * distinct_ratio
+                          + F.lit(0.3) * (F.lit(1.0) - stop_ratio)
+                          + F.lit(0.4) * F.least(avg_word_len / 10.0,
+                                                 F.lit(1.0))),
+    }
+
+
+def quality_score(toks: Column) -> Column:
+    """t2's document quality score (see :func:`quality_signals`)."""
+    return quality_signals(toks)["quality_score"]
+
+
+def duckdb_quality_score(text_expr: str) -> str:
+    """DuckDB twin of :func:`quality_score` over a text expression (the
+    tokens are ``str_split(text, ' ')``, as :func:`tokens`)."""
+    toks = f"str_split({text_expr}, ' ')"
+    return (
+        f"0.3 * (len(list_distinct({toks}))::DOUBLE / len({toks}))"
+        f" + 0.3 * (1.0 - len(list_filter({toks},"
+        f" t -> list_contains({_STOP_SQL}, t)))::DOUBLE / len({toks}))"
+        f" + 0.4 * least(list_sum(list_transform({toks},"
+        f" t -> length(t)))::DOUBLE / len({toks}) / 10.0, 1.0)")
 
 
 def word_ngrams(tok_col: Column | str, n: int) -> Column:
@@ -71,3 +119,18 @@ def duckdb_rolling_hash(text_expr: str, base: int = HASH_BASE) -> str:
         f"i -> ascii(substr({text_expr}, i, 1))::BIGINT)), "
         f"(acc, c) -> (acc * {base} + c) % {HASH_MOD})"
     )
+
+
+def lcg(key: Column | str) -> Column:
+    """One unreduced LCG step over a BIGINT key, the engine-portable split
+    and sample coin: the key is masked to 31 bits BEFORE the multiply, so
+    the product stays below 2^62 at any key (unmasked, it wraps int64 in
+    non-ANSI Spark and raises in DuckDB). Callers apply their own modulus
+    and comparison."""
+    c = F.col(key) if isinstance(key, str) else key
+    return (c % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345)
+
+
+def duckdb_lcg(key_expr: str) -> str:
+    """DuckDB twin of :func:`lcg` (``%`` truncates toward zero in both)."""
+    return f"(({key_expr} % 2147483648) * 1103515245 + 12345)"

@@ -1547,15 +1547,19 @@ def d136_unpivot_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-@register(
-    "d138_identifier_clause",
-    oracle="""
+# d138's oracle, and d142's: orders and price cents per priority.
+PRIORITY_CENTS_ORACLE = """
 SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
        CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
            AS price_cents
 FROM orders
 GROUP BY o_orderpriority
-""",
+"""
+
+
+@register(
+    "d138_identifier_clause",
+    oracle=PRIORITY_CENTS_ORACLE,
     tags=("engine", "sql-variables", "spark4"),
 )
 def d138_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -531,16 +531,21 @@ def a21_orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.max("o_orderdate").alias("last_order")))
 
 
-@register(
-    "a22_python_sink_roundtrip",
-    oracle="""
+# a22's and a26's oracle: the round-tripped documents' per-language rollup
+# equals the original table's.
+LANG_ROLLUP_ORACLE = """
 SELECT lang,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(doc_id) AS BIGINT) AS sum_doc_id,
        CAST(sum(length(text)) AS BIGINT) AS sum_chars
 FROM documents
 GROUP BY lang
-""",
+"""
+
+
+@register(
+    "a22_python_sink_roundtrip",
+    oracle=LANG_ROLLUP_ORACLE,
     tags=("engine", "sink", "python-datasource"),
 )
 def a22_python_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -748,14 +753,7 @@ def a25_xml_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a26_text_source_roundtrip",
-    oracle="""
-SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(doc_id) AS BIGINT) AS sum_doc_id,
-       CAST(sum(length(text)) AS BIGINT) AS sum_chars
-FROM documents
-GROUP BY lang
-""",
+    oracle=LANG_ROLLUP_ORACLE,
     tags=("engine", "source", "text", "sink"),
 )
 def a26_text_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

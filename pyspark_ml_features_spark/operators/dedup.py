@@ -51,12 +51,13 @@ def e1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count(F.lit(1)).alias("n_copies")))
 
 
-def jaccard_pairs(docs: DataFrame, shingle_col, threshold: float) -> DataFrame:
-    """Exact pairwise Jaccard over per-doc distinct shingle arrays via an
-    inverted-index self-join: explode shingles, join on shingle with
-    doc_id ordering, count shared shingles per pair, then
-    ``J = shared / (|a| + |b| - shared)`` — integer-exact arithmetic.
-    Only pairs sharing ≥1 shingle are ever materialized."""
+def shared_shingles(docs: DataFrame, shingle_col) -> DataFrame:
+    """Shared-shingle counts of every doc pair that shares one, via an
+    inverted-index self-join over per-doc distinct shingle arrays: explode
+    shingles, join on shingle with doc_id ordering, count per pair, and
+    join back both sizes — (d1, d2, shared, n_sh1, n_sh2), d1 < d2, all
+    integers. Only pairs sharing ≥1 shingle are ever materialized.
+    ``_shared_shingle_ctes`` is the oracle twin."""
     shingled = docs.select("doc_id", F.array_distinct(shingle_col).alias("sh"))
     sizes = shingled.select("doc_id", F.size("sh").alias("n_sh"))
     inv = shingled.select("doc_id", F.explode("sh").alias("shingle"))
@@ -70,33 +71,80 @@ def jaccard_pairs(docs: DataFrame, shingle_col, threshold: float) -> DataFrame:
     # per-doc size join-back: corpus-scaling, so NO broadcast hint (the
     # e8-vocab rule) — AQE broadcasts at small SF from runtime sizes and
     # degrades to a shuffle join at corpus scale
-    out = (
-        shared
-        .join(sa, F.col("d1") == F.col("sa.doc_id"))
-        .join(sb, F.col("d2") == F.col("sb.doc_id"))
-        .select(
-            "d1", "d2",
-            (F.col("shared").cast("double")
-             / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("shared"))
-             ).alias("jaccard")))
-    return out.filter(F.col("jaccard") >= threshold)
+    return (shared
+            .join(sa, F.col("d1") == F.col("sa.doc_id"))
+            .join(sb, F.col("d2") == F.col("sb.doc_id"))
+            .select("d1", "d2", "shared", F.col("sa.n_sh").alias("n_sh1"),
+                    F.col("sb.n_sh").alias("n_sh2")))
 
 
-@register(
-    "e3_jaccard_pairs",
-    oracle="""
-WITH sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
+def jaccard_pairs(docs: DataFrame, shingle_col, threshold: float) -> DataFrame:
+    """Exact pairwise Jaccard ``J = shared / (|a| + |b| - shared)`` over
+    :func:`shared_shingles` — integer-exact up to the one division —
+    as (d1, d2, jaccard) for pairs with J ≥ ``threshold``."""
+    return (shared_shingles(docs, shingle_col)
+            .select("d1", "d2",
+                    (F.col("shared").cast("double")
+                     / (F.col("n_sh1") + F.col("n_sh2") - F.col("shared"))
+                     ).alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold))
+
+
+def _shared_shingle_ctes(src: str) -> str:
+    """Oracle twin of :func:`shared_shingles` over a CTE ``src(doc_id, sh)``
+    of distinct shingle lists: the CTEs ``sizes`` (doc_id, n_sh), ``inv``
+    and ``shared`` (d1, d2, shared), d1 < d2."""
+    return f"""sizes AS (
+    SELECT doc_id, len(sh) AS n_sh FROM {src}
 ), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
+    SELECT doc_id, unnest(sh) AS shingle FROM {src}
 ), shared AS (
     SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
     FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
     GROUP BY a.doc_id, b.doc_id
-)
+)"""
+
+
+def _near_dup_edges_ctes(sample: str, threshold: float,
+                         sub_cols: str = "doc_id") -> str:
+    """Oracle twin of ``graph.near_dup_edges`` over ``documents WHERE
+    sample``: opens a recursive WITH with ``sub`` and ends at ``edges``,
+    the token-Jaccard ≥ ``threshold`` ``pairs`` in both directions. (It
+    lives here, not in graph.py, because graph.py imports this module.)"""
+    return f"""
+WITH RECURSIVE sub AS (
+    SELECT {sub_cols}, list_distinct(str_split(text, ' ')) AS sh
+    FROM documents WHERE {sample}
+), {_shared_shingle_ctes("sub")}, pairs AS (
+    SELECT d1, d2 FROM shared
+    JOIN sizes sa ON d1 = sa.doc_id
+    JOIN sizes sb ON d2 = sb.doc_id
+    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= {threshold}
+), edges AS (
+    SELECT d1 AS src, d2 AS dst FROM pairs
+    UNION ALL
+    SELECT d2 AS src, d1 AS dst FROM pairs
+)"""
+
+
+# Oracle twin of graph.connected_components: min-label reachability over
+# ``edges`` from every ``sub`` document, as ``cc`` (doc_id, cluster_id).
+_CC_CTES = """, reach(node, lbl) AS (
+    SELECT doc_id, doc_id FROM sub
+    UNION
+    SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
+), cc AS (
+    SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node
+)"""
+
+
+@register(
+    "e3_jaccard_pairs",
+    oracle=f"""
+WITH sub AS (
+    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
+    FROM documents WHERE doc_id % 5 = 0
+), {_shared_shingle_ctes("sub")}
 SELECT d1, d2,
        shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) AS jaccard
 FROM shared
@@ -116,7 +164,7 @@ def e3_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e3b_ngram_jaccard_pairs",
-    oracle="""
+    oracle=f"""
 WITH sub AS (
     SELECT doc_id, str_split(text, ' ') AS t
     FROM documents WHERE doc_id % 5 = 0
@@ -125,15 +173,7 @@ WITH sub AS (
            list_distinct(list_transform(range(1, greatest(len(t) - 2, 0) + 1),
                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
     FROM sub
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sh
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sh
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-)
+), {_shared_shingle_ctes("sh")}
 SELECT d1, d2,
        shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) AS jaccard
 FROM shared
@@ -789,35 +829,8 @@ def e1b_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e21_dedup_clusters",
-    oracle="""
-WITH RECURSIVE sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), edges AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id
-    JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= 0.8
-), sym AS (
-    SELECT d1 AS a, d2 AS b FROM edges
-    UNION ALL SELECT d2, d1 FROM edges
-), reach AS (
-    SELECT doc_id AS node, doc_id AS r FROM sub
-    UNION
-    SELECT reach.node, sym.b FROM reach JOIN sym ON reach.r = sym.a
-)
-SELECT node AS doc_id,
-       min(r) AS cluster_id,
-       (node = min(r)) AS is_kept
-FROM reach GROUP BY node
+    oracle=_near_dup_edges_ctes("doc_id % 5 = 0", 0.8) + _CC_CTES + """
+SELECT doc_id, cluster_id, (doc_id = cluster_id) AS is_kept FROM cc
 """,
     tags=("north-star", "dedup", "clustering", "iterative"),
 )
@@ -1183,19 +1196,11 @@ def e36_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e39_overlap_pairs",
-    oracle="""
+    oracle=f"""
 WITH sub AS (
     SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
     FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-)
+), {_shared_shingle_ctes("sub")}
 SELECT d1, d2,
        CAST(shared AS BIGINT) AS shared,
        shared::DOUBLE / least(sa.n_sh, sb.n_sh) AS overlap
@@ -1219,21 +1224,9 @@ def e39_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     production path replaces unigram postings with banded MinHash
     (e33) before the pair join."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    shingled = d.select("doc_id", F.array_distinct(tokens("text")).alias("sh"))
-    sizes = shingled.select("doc_id", F.size("sh").alias("n_sh"))
-    inv = shingled.select("doc_id", F.explode("sh").alias("shingle"))
-    a, b = inv.alias("a"), inv.alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("shared")))
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
     overlap = (F.col("shared").cast("double")
-               / F.least(F.col("sa.n_sh"), F.col("sb.n_sh")))
-    return (shared  # per-doc size join-back: no hint (e8-vocab rule)
-            .join(sa, F.col("d1") == F.col("sa.doc_id"))
-            .join(sb, F.col("d2") == F.col("sb.doc_id"))
+               / F.least(F.col("n_sh1"), F.col("n_sh2")))
+    return (shared_shingles(d, tokens("text"))
             .select("d1", "d2", F.col("shared").cast("bigint").alias("shared"),
                     overlap.alias("overlap"))
             .filter(F.col("overlap") >= 0.9))
@@ -1241,19 +1234,11 @@ def e39_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e40_nearest_doc_topk",
-    oracle="""
+    oracle=f"""
 WITH sub AS (
     SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
     FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
+), {_shared_shingle_ctes("sub")}, pairs AS (
     SELECT d1, d2,
            shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) AS jaccard
     FROM shared

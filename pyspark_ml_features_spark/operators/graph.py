@@ -61,6 +61,8 @@ from pyspark_ml_features_spark.operators.dedup import (
     MINHASH_AFFINE,
     MINHASH_P,
     MINHASH_SHINGLE_B,
+    _CC_CTES,
+    _near_dup_edges_ctes,
     jaccard_pairs,
     minhash_signatures,
 )
@@ -307,45 +309,6 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
                     F.coalesce("star_lbl", F.col("node"))
                     .alias("cluster_id")))
 
-
-def _near_dup_edges_ctes(sample: str, threshold: float,
-                         sub_cols: str = "doc_id") -> str:
-    """Oracle twin of ``near_dup_edges`` over ``documents WHERE sample``:
-    opens a recursive WITH and ends at ``edges``, the pairs in both
-    directions."""
-    return f"""
-WITH RECURSIVE sub AS (
-    SELECT {sub_cols}, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE {sample}
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id
-    JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= {threshold}
-), edges AS (
-    SELECT d1 AS src, d2 AS dst FROM pairs
-    UNION ALL
-    SELECT d2 AS src, d1 AS dst FROM pairs
-)"""
-
-
-# Oracle twin of connected_components: min-label reachability over
-# ``edges`` from every ``sub`` document, as ``cc`` (doc_id, cluster_id).
-_CC_CTES = """, reach(node, lbl) AS (
-    SELECT doc_id, doc_id FROM sub
-    UNION
-    SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-), cc AS (
-    SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node
-)"""
 
 # e45's (and e109's) oracle: cluster id and size per sampled document.
 _DUP_CLUSTERS_ORACLE = (
@@ -607,24 +570,7 @@ def e58_semantic_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e59_triangle_count",
-    oracle="""
-WITH sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id
-    JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= 0.9
-), tri AS (
+    oracle=_near_dup_edges_ctes("doc_id % 5 = 0", 0.9) + """, tri AS (
     SELECT p1.d1 AS a, p1.d2 AS b, p2.d2 AS c
     FROM pairs p1
     JOIN pairs p2 ON p2.d1 = p1.d2
@@ -687,24 +633,8 @@ def _pagerank_oracle(n_iters: int = 5, threshold: float = 0.9) -> str:
     """Unrolled fixed-iteration PageRank as chained CTEs — standard SQL
     forbids aggregation inside a recursive CTE member, so a FIXED
     iteration count unrolls instead (deterministic and engine-portable)."""
-    sql = f"""
-WITH sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
-), sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sub),
-inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sub),
-shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= {threshold}
-), edges AS (
-    SELECT d1 AS src, d2 AS dst FROM pairs
-    UNION ALL SELECT d2, d1 FROM pairs
-), deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
+    sql = _near_dup_edges_ctes("doc_id % 5 = 0", threshold) + """,
+deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
 r0 AS (SELECT doc_id AS node, 1.0::DOUBLE AS r FROM sub)
 """
     prev = "r0"

@@ -1204,18 +1204,16 @@ def e99_image_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("n_byte_variants")))
 
 
-@register(
-    "e101_image_ahash_neardup",
-    oracle="""
-WITH d AS (
-    SELECT doc_id, doc_id % 64 AS ck, doc_id % 5 AS bright FROM documents
-), px AS (
-    -- the 8x8 nearest-neighbor sample of the BASE pattern (brightness
-    -- cancels out of the threshold test exactly, so it never appears)
+def _ahash_ctes(cks: str) -> str:
+    """The aHash oracle chain over the content keys ``ck`` of the FROM item
+    ``cks``: ``px`` (the 8x8 nearest-neighbor sample of the base pattern —
+    brightness cancels out of the threshold test exactly, so it never
+    appears), ``tot``, ``bits`` and ``ahash`` (ck, hash_hi, hash_lo)."""
+    return f"""px AS (
     SELECT ck, yy * 8 + xx AS i,
            ((xx * (16 + ck % 16)) // 8 * 7
             + (yy * (12 + ck % 8)) // 8 * 13 + ck) % 128 AS v
-    FROM (SELECT DISTINCT ck FROM d) AS cks,
+    FROM {cks},
          UNNEST(range(0, 8)) AS tx(xx),
          UNNEST(range(0, 8)) AS ty(yy)
 ), tot AS (
@@ -1224,7 +1222,7 @@ WITH d AS (
     SELECT px.ck, px.i,
            CASE WHEN 64 * px.v > tot.s THEN 1 ELSE 0 END AS b
     FROM px JOIN tot USING (ck)
-), hash AS (
+), ahash AS (
     SELECT ck,
            CAST(sum(CASE WHEN i >= 32
                          THEN b * (1::BIGINT << (i - 32)) ELSE 0 END)
@@ -1233,11 +1231,19 @@ WITH d AS (
                          THEN b * (1::BIGINT << i) ELSE 0 END)
                 AS BIGINT) AS hash_lo
     FROM bits GROUP BY ck
-)
+)"""
+
+
+@register(
+    "e101_image_ahash_neardup",
+    oracle=f"""
+WITH d AS (
+    SELECT doc_id, doc_id % 64 AS ck, doc_id % 5 AS bright FROM documents
+), {_ahash_ctes("(SELECT DISTINCT ck FROM d) AS cks")}
 SELECT h.hash_hi, h.hash_lo,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(count(DISTINCT d.bright) AS BIGINT) AS n_brightness_variants
-FROM d JOIN hash h USING (ck)
+FROM d JOIN ahash h USING (ck)
 GROUP BY h.hash_hi, h.hash_lo
 """,
     tags=("north-star", "llm-pipeline", "multimodal", "dedup", "neardup"),
@@ -1312,31 +1318,11 @@ def doc_ahash(i: int) -> tuple[int, int]:
 
 @register(
     "e102_image_hamming_pairs",
-    oracle="""
+    oracle=f"""
 WITH d AS (
     SELECT DISTINCT doc_id % 64 AS ck FROM documents
-), px AS (
-    SELECT ck, yy * 8 + xx AS i,
-           ((xx * (16 + ck % 16)) // 8 * 7
-            + (yy * (12 + ck % 8)) // 8 * 13 + ck) % 128 AS v
-    FROM d,
-         UNNEST(range(0, 8)) AS tx(xx),
-         UNNEST(range(0, 8)) AS ty(yy)
-), tot AS (
-    SELECT ck, sum(v) AS s FROM px GROUP BY ck
-), bits AS (
-    SELECT px.ck, px.i,
-           CASE WHEN 64 * px.v > tot.s THEN 1 ELSE 0 END AS b
-    FROM px JOIN tot USING (ck)
-), hx AS (
-    SELECT DISTINCT
-           CAST(sum(CASE WHEN i >= 32
-                         THEN b * (1::BIGINT << (i - 32)) ELSE 0 END)
-                AS BIGINT) AS hash_hi,
-           CAST(sum(CASE WHEN i < 32
-                         THEN b * (1::BIGINT << i) ELSE 0 END)
-                AS BIGINT) AS hash_lo
-    FROM bits GROUP BY ck
+), {_ahash_ctes("d")}, hx AS (
+    SELECT DISTINCT hash_hi, hash_lo FROM ahash
 ), bands AS (
     SELECT hash_hi, hash_lo, bb.band_id,
            CASE bb.band_id
@@ -1451,33 +1437,11 @@ def hamming_pairs(hx: DataFrame, radius: int = 8) -> DataFrame:
 
 @register(
     "e103_image_neardup_clusters",
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE d AS (
     SELECT doc_id, doc_id % 64 AS ck FROM documents
-), px AS (
-    SELECT ck, yy * 8 + xx AS i,
-           ((xx * (16 + ck % 16)) // 8 * 7
-            + (yy * (12 + ck % 8)) // 8 * 13 + ck) % 128 AS v
-    FROM (SELECT DISTINCT ck FROM d) AS cks,
-         UNNEST(range(0, 8)) AS tx(xx),
-         UNNEST(range(0, 8)) AS ty(yy)
-), tot AS (
-    SELECT ck, sum(v) AS s FROM px GROUP BY ck
-), bits AS (
-    SELECT px.ck, px.i,
-           CASE WHEN 64 * px.v > tot.s THEN 1 ELSE 0 END AS b
-    FROM px JOIN tot USING (ck)
-), hq AS (
-    SELECT ck,
-           CAST(sum(CASE WHEN i >= 32
-                         THEN b * (1::BIGINT << (i - 32)) ELSE 0 END)
-                AS BIGINT) AS hash_hi,
-           CAST(sum(CASE WHEN i < 32
-                         THEN b * (1::BIGINT << i) ELSE 0 END)
-                AS BIGINT) AS hash_lo
-    FROM bits GROUP BY ck
-), hx AS (
-    SELECT DISTINCT hash_hi, hash_lo FROM hq
+), {_ahash_ctes("(SELECT DISTINCT ck FROM d) AS cks")}, hx AS (
+    SELECT DISTINCT hash_hi, hash_lo FROM ahash
 ), keys AS (
     -- one HUGEINT key per hash: lexicographic pair order == numeric
     -- order of hi*2^32+lo, and HUGEINT sidesteps the BIGINT sign bit
@@ -1517,9 +1481,9 @@ WITH RECURSIVE d AS (
 ), cc AS (
     SELECT node, min(lbl) AS rep FROM reach GROUP BY node
 ), nd AS (
-    SELECT hq.hash_hi::HUGEINT * 4294967296 + hq.hash_lo AS node,
+    SELECT ahash.hash_hi::HUGEINT * 4294967296 + ahash.hash_lo AS node,
            count(*) AS n_docs
-    FROM d JOIN hq USING (ck)
+    FROM d JOIN ahash USING (ck)
     GROUP BY 1
 )
 SELECT CAST(cc.rep // 4294967296 AS BIGINT) AS rep_hi,

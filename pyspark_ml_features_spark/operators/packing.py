@@ -15,11 +15,20 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspark_ml_features_spark.functions.text import (
+    duckdb_lcg,
+    duckdb_quality_score,
     duckdb_rolling_hash,
+    lcg,
+    quality_score,
     rolling_hash,
     tokens,
 )
-from pyspark_ml_features_spark.operators.dedup import jaccard_pairs
+from pyspark_ml_features_spark.operators.dedup import (
+    _CC_CTES,
+    _near_dup_edges_ctes,
+    _shared_shingle_ctes,
+    jaccard_pairs,
+)
 from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import table
 
@@ -301,24 +310,11 @@ def e23_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "e25_corpus_curation",
     oracle=f"""
-WITH m AS (
+WITH scored AS (
     SELECT doc_id, lang, source, text,
-           len(str_split(text, ' '))::DOUBLE AS n_tokens,
-           len(list_distinct(str_split(text, ' ')))::DOUBLE AS n_distinct,
-           len(list_filter(str_split(text, ' '),
-               t -> list_contains(['the', 'a', 'of', 'and', 'is'], t)))::DOUBLE
-               AS n_stop,
-           list_sum(list_transform(str_split(text, ' '),
-                                   t -> length(t)))::DOUBLE AS total_chars
-    FROM documents
-), scored AS (
-    SELECT doc_id, lang, source, text,
-           0.3 * (n_distinct / n_tokens)
-             + 0.3 * (1.0 - n_stop / n_tokens)
-             + 0.4 * least((total_chars / n_tokens) / 10.0, 1.0)
-               AS quality_score,
+           {duckdb_quality_score('text')} AS quality_score,
            100 - 4 * regexp_extract(source, 'src([0-9]+)', 1)::INT AS weight_pct
-    FROM m
+    FROM documents
 )
 SELECT doc_id, lang, source, quality_score,
        CASE WHEN {duckdb_rolling_hash('text')} % 100 < 80 THEN 'train'
@@ -339,22 +335,8 @@ def e25_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic column expression instead of a sampling pass. The score
     comparison is safe behind an exact oracle because t2's arithmetic is
     bit-identical across engines (fixed evaluation order, no libm)."""
-    from pyspark_ml_features_spark.functions.text import STOPWORDS
-
     d = table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_tokens = F.size(toks).cast("double")
-    n_distinct = F.size(F.array_distinct(toks)).cast("double")
-    n_stop = F.size(
-        F.filter(toks, lambda t: F.array_contains(stop_arr, t))).cast("double")
-    total_chars = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
-    ).cast("double")
-    quality = (F.lit(0.3) * (n_distinct / n_tokens)
-               + F.lit(0.3) * (F.lit(1.0) - n_stop / n_tokens)
-               + F.lit(0.4) * F.least((total_chars / n_tokens) / 10.0,
-                                      F.lit(1.0)))
+    quality = quality_score(tokens("text"))
     weight = (F.lit(100)
               - 4 * F.regexp_extract("source", "src([0-9]+)", 1).cast("int"))
     bucket = F.pmod(rolling_hash("text"), F.lit(100))
@@ -684,21 +666,12 @@ def e57_lang_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e62_split_leakage_report",
-    oracle="""
+    oracle=f"""
 WITH sub AS (
     SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh,
-        CAST(((doc_id % 2147483648) * 1103515245 + 12345) % 2048 < 1638 AS BIGINT)
-            AS in_train
+        CAST({duckdb_lcg('doc_id')} % 2048 < 1638 AS BIGINT) AS in_train
     FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
+), {_shared_shingle_ctes("sub")}, pairs AS (
     SELECT d1, d2,
            round(shared::DOUBLE / (sa.n_sh + sb.n_sh - shared), 6)
                AS jaccard
@@ -738,8 +711,7 @@ def e62_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join at corpus scale (the e8 vocab rule; ADVICE r4); the
     split predicate is scan-side arithmetic."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    in_train = ((((F.col("doc_id") % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345))
-                 % F.lit(2048)) < 1638).cast("bigint")
+    in_train = ((lcg("doc_id") % F.lit(2048)) < 1638).cast("bigint")
     membership = d.select("doc_id", in_train.alias("in_train"))
     prs = (jaccard_pairs(d, tokens("text"), threshold=0.5)
            .select("d1", "d2", F.round("jaccard", 6).alias("jaccard")))
@@ -755,7 +727,7 @@ def e62_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e65_mixture_epoch_expansion",
-    oracle="""
+    oracle=f"""
 WITH per_doc AS (
     SELECT doc_id, lang,
            CAST(len(list_filter(str_split(text, ' '), t -> t <> ''))
@@ -780,7 +752,7 @@ WITH per_doc AS (
 ), rep AS (
     SELECT d.doc_id, d.lang, d.nt, w.target_share,
            CAST(floor(w.weight) AS BIGINT)
-           + CAST(((d.doc_id % 2147483648) * 1103515245 + 12345) % 2048
+           + CAST({duckdb_lcg('d.doc_id')} % 2048
                   < round((w.weight - floor(w.weight)) * 2048)
                   AS BIGINT) AS repeats
     FROM per_doc d JOIN w ON d.lang = w.lang
@@ -834,8 +806,7 @@ def e65_mixture_epoch_expansion(spark: SparkSession,
          .select("lang", "target_share", "weight"))
     base = F.floor(F.col("weight")).cast("bigint")
     frac = F.col("weight") - F.floor(F.col("weight"))
-    lcg = ((F.col("doc_id") % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345)) % F.lit(2048)
-    extra = (lcg < F.round(frac * 2048)).cast("bigint")
+    extra = ((lcg("doc_id") % F.lit(2048)) < F.round(frac * 2048)).cast("bigint")
     rep = (per_doc.join(F.broadcast(w), "lang")
            .withColumn("repeats", base + extra))
     virtual = rep.select(
@@ -855,37 +826,9 @@ def e65_mixture_epoch_expansion(spark: SparkSession,
 
 @register(
     "e66_cluster_split_no_leakage",
-    oracle="""
-WITH RECURSIVE sub AS (
-    SELECT doc_id, list_distinct(str_split(text, ' ')) AS sh
-    FROM documents WHERE doc_id % 5 = 0
-), sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM sub
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM sub
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), pairs AS (
-    SELECT d1, d2 FROM shared
-    JOIN sizes sa ON d1 = sa.doc_id
-    JOIN sizes sb ON d2 = sb.doc_id
-    WHERE shared::DOUBLE / (sa.n_sh + sb.n_sh - shared) >= 0.5
-), edges AS (
-    SELECT d1 AS src, d2 AS dst FROM pairs
-    UNION ALL
-    SELECT d2 AS src, d1 AS dst FROM pairs
-), reach(node, lbl) AS (
-    SELECT doc_id, doc_id FROM sub
-    UNION
-    SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-), cc AS (
-    SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node
-), split AS (
+    oracle=_near_dup_edges_ctes("doc_id % 5 = 0", 0.5) + _CC_CTES + f""", split AS (
     SELECT doc_id, cluster_id,
-           CAST(((cluster_id % 2147483648) * 1103515245 + 12345) % 2048 < 1638 AS BIGINT)
-               AS in_train
+           CAST({duckdb_lcg('cluster_id')} % 2048 < 1638 AS BIGINT) AS in_train
     FROM cc
 ), leaks AS (
     SELECT count(*) AS n_leak FROM pairs p
@@ -928,8 +871,7 @@ def e66_cluster_split_no_leakage(spark: SparkSession,
     cc = connected_components(d.select(F.col("doc_id").alias("node")),
                               prs.select(F.col("d1").alias("src"),
                                          F.col("d2").alias("dst")))
-    in_train = ((((F.col("cluster_id") % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345))
-                 % F.lit(2048)) < 1638).cast("bigint")
+    in_train = ((lcg("cluster_id") % F.lit(2048)) < 1638).cast("bigint")
     split = cc.select(F.col("node").alias("doc_id"), "cluster_id",
                       in_train.alias("in_train"))
     sa = split.select(F.col("doc_id").alias("d1"),
@@ -1133,8 +1075,7 @@ N_SHARDS = 8
     "e89_balanced_shards",
     oracle=f"""
 WITH t AS (
-    SELECT ((doc_id % 2147483648) * 1103515245 + 12345) % 2147483648 % {N_SHARDS}
-               AS shard,
+    SELECT {duckdb_lcg('doc_id')} % 2147483648 % {N_SHARDS} AS shard,
            CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens
     FROM documents
 ), s AS (
@@ -1164,8 +1105,7 @@ def e89_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     LCG product is bounded below 2^62 at ANY doc_id — no silent int64
     wrap in non-ANSI Spark, no overflow error in DuckDB."""
     d = table(spark, sf_dir, "documents").select(
-        (((F.col("doc_id") % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345))
-         % F.lit(2147483648) % F.lit(N_SHARDS)).cast("bigint")
+        (lcg("doc_id") % F.lit(2147483648) % F.lit(N_SHARDS)).cast("bigint")
         .alias("shard"),
         F.size(tokens("text")).cast("bigint").alias("n_tokens"))
     s = d.groupBy("shard").agg(

@@ -25,15 +25,22 @@ has no dedup surface; SURVEY §2-E north-star scope.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from pyspark_ml_features_spark.functions.text import (
-    STOPWORDS,
+    duckdb_lcg,
+    duckdb_quality_score,
+    lcg,
+    quality_score,
     tokens,
     word_ngrams,
 )
+from pyspark_ml_features_spark.operators.advanced_sql import (
+    PRIORITY_CENTS_ORACLE,
+)
 from pyspark_ml_features_spark.operators.dedup import (
     _duckdb_minhash_ctes,
+    _shared_shingle_ctes,
     jaccard_pairs,
     minhash_candidate_pairs,
     numeric_shingles,
@@ -50,15 +57,7 @@ from pyspark_ml_features_spark.sources import table
 def _e46_oracle() -> str:
     return f"""
 WITH {_duckdb_minhash_ctes()},
-sizes AS (
-    SELECT doc_id, len(sh) AS n_sh FROM shingled
-), inv AS (
-    SELECT doc_id, unnest(sh) AS shingle FROM shingled
-), shared AS (
-    SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS shared
-    FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-), truth AS (
+{_shared_shingle_ctes("shingled")}, truth AS (
     SELECT d1, d2 FROM shared
     JOIN sizes sa ON d1 = sa.doc_id
     JOIN sizes sb ON d2 = sb.doc_id
@@ -321,6 +320,24 @@ def e54_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
          / F.count(F.lit(1))).alias("dup_rate"))
 
 
+def shingle_hits(sh: DataFrame, is_ref: Column) -> DataFrame:
+    """For each doc of ``sh`` (doc_id, sh: its distinct shingles) outside
+    the reference slice ``is_ref``: how many shingles it has and how many
+    of them appear among the slice's distinct shingles — (doc_id,
+    n_shingles, n_hit). The reference set is eval-sized and broadcasts
+    into a left join, so the corpus side is one explode and one hash
+    aggregate on doc_id; docs without shingles drop out of the explode."""
+    ref = (sh.filter(is_ref)
+           .select(F.explode("sh").alias("shingle")).distinct()
+           .withColumn("hit", F.lit(1)))
+    corpus = sh.filter(~is_ref).select("doc_id",
+                                       F.explode("sh").alias("shingle"))
+    return (corpus.join(F.broadcast(ref), "shingle", "left")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_shingles"),
+                 F.count("hit").alias("n_hit")))
+
+
 @register(
     "e55_ngram_decontaminate",
     oracle="""
@@ -364,26 +381,16 @@ def e55_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     For benchmark sets too big to broadcast, the shingle join falls back
     to the inverted-index equi-join (e3's plan) — still candidate-bounded,
     never pairwise."""
-    from pyspark_ml_features_spark.functions.text import tokens, word_ngrams
-
     # Token array materialized before the gram lambda (word_ngrams'
     # quadratic-re-evaluation rule; the n<3 guard lives in word_ngrams).
     d = (table(spark, sf_dir, "documents")
          .select("doc_id", tokens("text").alias("__toks")))
     sh = d.select("doc_id",
                   F.array_distinct(word_ngrams("__toks", 3)).alias("sh"))
-    bench = (sh.filter(F.col("doc_id") % 5 == 0)
-             .select(F.explode("sh").alias("shingle")).distinct()
-             .withColumn("hit", F.lit(1)))
-    corpus = (sh.filter(F.col("doc_id") % 5 != 0)
-              .select("doc_id", F.explode("sh").alias("shingle")))
-    return (corpus.join(F.broadcast(bench), "shingle", "left")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_shingles"),
-                 F.count("hit").alias("n_shared"))
-            .filter(F.col("n_shared") > 0)
-            .select("doc_id", "n_shingles", "n_shared",
-                    (F.col("n_shared").cast("double") / F.col("n_shingles"))
+    return (shingle_hits(sh, F.col("doc_id") % 5 == 0)
+            .filter(F.col("n_hit") > 0)
+            .select("doc_id", "n_shingles", F.col("n_hit").alias("n_shared"),
+                    (F.col("n_hit").cast("double") / F.col("n_shingles"))
                     .alias("contamination")))
 
 
@@ -890,16 +897,9 @@ def e88_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("doc_id", tokens("text").alias("__toks"))
           .select("doc_id",
                   F.array_distinct(word_ngrams("__toks", 3)).alias("sh")))
-    ref = (sh.filter(F.col("doc_id") % 5 == 0)
-           .select(F.explode("sh").alias("shingle")).distinct()
-           .withColumn("hit", F.lit(1)))
-    corpus = (sh.filter(F.col("doc_id") % 5 != 0)
-              .select("doc_id", F.explode("sh").alias("shingle")))
-    return (corpus.join(F.broadcast(ref), "shingle", "left")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
-                 F.count_if(F.col("hit").isNull()).cast("bigint")
-                 .alias("n_novel"))
+    return (shingle_hits(sh, F.col("doc_id") % 5 == 0)
+            .select("doc_id", "n_shingles",
+                    (F.col("n_shingles") - F.col("n_hit")).alias("n_novel"))
             .select("doc_id", "n_shingles", "n_novel",
                     F.expr("CAST(10000L * n_novel DIV n_shingles AS BIGINT)")
                     .alias("novelty_bp")))
@@ -907,17 +907,10 @@ def e88_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "e93_quality_decile_dup_rate",
-    oracle="""
+    oracle=f"""
 WITH m AS (
     SELECT doc_id, lower(trim(text)) AS k,
-           0.3 * (len(list_distinct(str_split(text, ' ')))::DOUBLE
-                  / len(str_split(text, ' ')))
-         + 0.3 * (1.0 - len(list_filter(str_split(text, ' '),
-               t -> list_contains(['the', 'a', 'of', 'and', 'is'], t)
-               ))::DOUBLE / len(str_split(text, ' ')))
-         + 0.4 * least((list_sum(list_transform(str_split(text, ' '),
-               t -> length(t)))::DOUBLE / len(str_split(text, ' ')))
-               / 10.0, 1.0) AS q
+           {duckdb_quality_score('text')} AS q
     FROM documents
 ), dup AS (
     SELECT k, count(*) AS members FROM m GROUP BY k
@@ -956,26 +949,13 @@ def e93_quality_decile_dup_rate(spark: SparkSession,
 
     100 TB: t2's map-side score + e1's hash-agg multiplicity + one
     range shuffle for the ranking + a 10-row aggregate."""
-    from pyspark_ml_features_spark.functions.text import STOPWORDS
     from pyspark_ml_features_spark.operators.relational import (
         distributed_row_number,
     )
 
     d = table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_tokens = F.size(toks).cast("double")
-    q = (F.lit(0.3) * (F.size(F.array_distinct(toks)).cast("double")
-                       / n_tokens)
-         + F.lit(0.3) * (F.lit(1.0) - F.size(
-             F.filter(toks, lambda t: F.array_contains(stop_arr, t))
-         ).cast("double") / n_tokens)
-         + F.lit(0.4) * F.least(
-             F.aggregate(toks, F.lit(0).cast("bigint"),
-                         lambda a, t: a + F.length(t)).cast("double")
-             / n_tokens / 10.0, F.lit(1.0)))
     m = d.select("doc_id", F.lower(F.trim("text")).alias("k"),
-                 q.alias("q"))
+                 quality_score(tokens("text")).alias("q"))
     dup = m.groupBy("k").agg(F.count(F.lit(1)).alias("members"))
     scored = m.join(dup, "k").select("doc_id", "q", "members")
     ranked = distributed_row_number(scored, ["q", "doc_id"], 16)
@@ -998,23 +978,9 @@ QA_PACK_PER_CELL = 3
 @register(
     "e97_qa_sample_pack",
     oracle=f"""
-WITH m AS (
-    SELECT doc_id, lang,
-           len(str_split(text, ' '))::DOUBLE AS n_tokens,
-           len(list_distinct(str_split(text, ' ')))::DOUBLE AS n_distinct,
-           len(list_filter(str_split(text, ' '),
-               t -> list_contains({list(STOPWORDS)}, t)
-               ))::DOUBLE AS n_stop,
-           list_sum(list_transform(str_split(text, ' '),
-                                   t -> length(t)))::DOUBLE AS total_chars
+WITH scored AS (
+    SELECT doc_id, lang, {duckdb_quality_score('text')} AS quality_score
     FROM documents
-), scored AS (
-    SELECT doc_id, lang,
-           0.3 * (n_distinct / n_tokens)
-             + 0.3 * (1.0 - n_stop / n_tokens)
-             + 0.4 * least((total_chars / n_tokens) / 10.0, 1.0)
-               AS quality_score
-    FROM m
 ), banded AS (
     SELECT doc_id, lang, quality_score,
            CAST(least(floor(quality_score * 5), 4) AS BIGINT) AS band
@@ -1023,8 +989,7 @@ WITH m AS (
     SELECT doc_id, lang, band, quality_score,
            row_number() OVER (
                PARTITION BY lang, band
-               ORDER BY ((doc_id % 2147483648) * 1103515245 + 12345)
-                        % 2147483648, doc_id) AS rn
+               ORDER BY {duckdb_lcg('doc_id')} % 2147483648, doc_id) AS rn
     FROM banded
 )
 SELECT doc_id, lang, band, quality_score
@@ -1048,25 +1013,12 @@ def e97_qa_sample_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     task keeps k rows per cell, never the cell's full contents."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", tokens("text").alias("__toks"))
-    toks = F.col("__toks")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_tokens = F.size(toks).cast("double")
-    n_distinct = F.size(F.array_distinct(toks)).cast("double")
-    n_stop = F.size(F.filter(
-        toks, lambda t: F.array_contains(stop_arr, t))).cast("double")
-    total_chars = F.aggregate(
-        toks, F.lit(0).cast("bigint"),
-        lambda acc, t: acc + F.length(t)).cast("double")
-    score = (F.lit(0.3) * (n_distinct / n_tokens)
-             + F.lit(0.3) * (F.lit(1.0) - n_stop / n_tokens)
-             + F.lit(0.4) * F.least((total_chars / n_tokens) / F.lit(10.0),
-                                    F.lit(1.0)))
+    score = quality_score(F.col("__toks"))
     banded = d.select(
         "doc_id", "lang", score.alias("quality_score"),
         F.least(F.floor(score * 5), F.lit(4)).cast("bigint").alias("band"))
-    lcg = ((F.col("doc_id") % F.lit(2147483648)) * F.lit(1103515245)
-           + F.lit(12345)) % F.lit(2147483648)
-    w = Window.partitionBy("lang", "band").orderBy(lcg.asc(), "doc_id")
+    coin = lcg("doc_id") % F.lit(2147483648)
+    w = Window.partitionBy("lang", "band").orderBy(coin.asc(), "doc_id")
     return (banded.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= QA_PACK_PER_CELL)
             .select("doc_id", "lang", "band", "quality_score"))
@@ -1074,13 +1026,7 @@ def e97_qa_sample_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d142_observed_quality_metrics",
-    oracle="""
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS price_cents
-FROM orders
-GROUP BY o_orderpriority
-""",
+    oracle=PRIORITY_CENTS_ORACLE,
     tags=("engine", "observability", "spark4"),
 )
 def d142_observed_quality_metrics(spark: SparkSession,

@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import DoubleType
 
-from pyspark_ml_features_spark.functions.text import STOPWORDS
+from pyspark_ml_features_spark.functions.text import STOPWORDS, duckdb_lcg, lcg
 from pyspark_ml_features_spark.plans.audit import probe_checkpoint
 from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import table
@@ -1728,10 +1728,9 @@ def d89_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d90_hash_sample_agg",
-    oracle="""
+    oracle=f"""
 WITH s AS (
-    SELECT * FROM orders
-    WHERE ((o_orderkey % 2147483648) * 1103515245 + 12345) % 2048 < 205
+    SELECT * FROM orders WHERE {duckdb_lcg('o_orderkey')} % 2048 < 205
 )
 SELECT o_orderpriority,
        CAST(count(*) AS BIGINT) AS n_sampled,
@@ -1756,8 +1755,7 @@ def d90_hash_sample_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the predicate is scan-side (no shuffle to sample); sampled
     rows flow into one small partial-aggregated GROUP BY."""
     o = table(spark, sf_dir, "orders")
-    keep = (((F.col("o_orderkey") % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345))
-            % F.lit(2048)) < 205
+    keep = (lcg("o_orderkey") % F.lit(2048)) < 205
     return (o.filter(keep)
             .groupBy("o_orderpriority")
             .agg(F.count(F.lit(1)).alias("n_sampled"),

@@ -138,16 +138,20 @@ def e10b_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_events", "total_value"))
 
 
-@register(
-    "e19_incremental_rollup",
-    oracle="""
+# e19's oracle, and its streaming twin s18's: the one-shot hourly rollup.
+HOURLY_ROLLUP_ORACLE = """
 SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
        event_type,
        count(*) AS n_events,
        round(sum(value), 6) AS total_value
 FROM events
 GROUP BY 1, 2
-""",
+"""
+
+
+@register(
+    "e19_incremental_rollup",
+    oracle=HOURLY_ROLLUP_ORACLE,
     tags=("north-star", "E10", "incremental"),
 )
 def e19_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -772,9 +776,8 @@ def d81_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("last_purchase_id"))
 
 
-@register(
-    "d93_cumulative_distinct_users",
-    oracle="""
+# d93's oracle, and its streaming twin s17's.
+CUMULATIVE_USERS_ORACLE = """
 WITH firsts AS (
     SELECT user_id, min(CAST(ts AS DATE)) AS first_day
     FROM events GROUP BY user_id
@@ -787,7 +790,26 @@ SELECT CAST(day AS TIMESTAMP) AS day, new_users,
                                  ROWS UNBOUNDED PRECEDING) AS BIGINT)
            AS cum_users
 FROM by_day
-""",
+"""
+
+
+def cumulative_users(firsts: DataFrame) -> DataFrame:
+    """d93's finish over a first-seen table ``firsts`` (user_id,
+    first_day): new users per day and their running sum, one row per
+    day as (day TIMESTAMP, new_users, cum_users)."""
+    by_day = (firsts.groupBy(F.col("first_day").alias("day"))
+              .agg(F.count(F.lit(1)).alias("new_users")))
+    w = Window.orderBy(F.col("day").asc()) \
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return (by_day.select(
+        F.col("day").cast("timestamp").alias("day"),
+        "new_users",
+        F.sum("new_users").over(w).cast("bigint").alias("cum_users")))
+
+
+@register(
+    "d93_cumulative_distinct_users",
+    oracle=CUMULATIVE_USERS_ORACLE,
     tags=("engine", "D8", "window", "distinct", "incremental"),
 )
 def d93_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -805,16 +827,9 @@ def d93_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame
     days, so it broadcasts trivially. This is also the incremental shape:
     firsts is a MERGE-maintainable table (e19/e38 pattern)."""
     e = table(spark, sf_dir, "events")
-    firsts = (e.groupBy("user_id")
-              .agg(F.min(F.col("ts").cast("date")).alias("first_day")))
-    by_day = (firsts.groupBy(F.col("first_day").alias("day"))
-              .agg(F.count(F.lit(1)).alias("new_users")))
-    w = Window.orderBy(F.col("day").asc()) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (by_day.select(
-        F.col("day").cast("timestamp").alias("day"),
-        "new_users",
-        F.sum("new_users").over(w).cast("bigint").alias("cum_users")))
+    return cumulative_users(
+        e.groupBy("user_id")
+        .agg(F.min(F.col("ts").cast("date")).alias("first_day")))
 
 
 @register(

@@ -13,13 +13,15 @@ rows after map-side partial aggregation.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from pyspark_ml_features_spark.functions.skew import fan_out
 from pyspark_ml_features_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
+    duckdb_quality_score,
     duckdb_rolling_hash,
+    quality_signals,
     rolling_hash,
     tokens,
     word_ngrams,
@@ -161,7 +163,7 @@ def t1_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t2_quality_score",
     oracle=f"""
 WITH m AS (
-    SELECT doc_id, lang,
+    SELECT doc_id, lang, text,
            len(str_split(text, ' '))::DOUBLE AS n_tokens,
            len(list_distinct(str_split(text, ' ')))::DOUBLE AS n_distinct,
            len(list_filter(str_split(text, ' '),
@@ -175,9 +177,7 @@ SELECT doc_id, lang,
        n_distinct / n_tokens AS distinct_ratio,
        n_stop / n_tokens AS stopword_ratio,
        total_chars / n_tokens AS avg_word_len,
-       0.3 * (n_distinct / n_tokens)
-         + 0.3 * (1.0 - n_stop / n_tokens)
-         + 0.4 * least((total_chars / n_tokens) / 10.0, 1.0) AS quality_score
+       {duckdb_quality_score('text')} AS quality_score
 FROM m
 """,
     tags=("north-star", "text-analysis"),
@@ -187,27 +187,12 @@ def t2_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted sum with a fixed evaluation order so every engine computes the
     identical double. Pure map work, no shuffle."""
     d = table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_tokens = F.size(toks).cast("double")
-    n_distinct = F.size(F.array_distinct(toks)).cast("double")
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t))).cast("double")
-    total_chars = F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
-    ).cast("double")
-    distinct_ratio = n_distinct / n_tokens
-    stop_ratio = n_stop / n_tokens
-    avg_word_len = total_chars / n_tokens
-    quality = (F.lit(0.3) * distinct_ratio
-               + F.lit(0.3) * (F.lit(1.0) - stop_ratio)
-               + F.lit(0.4) * F.least(avg_word_len / 10.0, F.lit(1.0)))
+    q = quality_signals(tokens("text"))
     return d.select(
         "doc_id", "lang",
-        n_tokens.cast("bigint").alias("n_tokens"),
-        distinct_ratio.alias("distinct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        avg_word_len.alias("avg_word_len"),
-        quality.alias("quality_score"))
+        q["n_tokens"].cast("bigint").alias("n_tokens"),
+        *[q[k].alias(k) for k in ("distinct_ratio", "stopword_ratio",
+                                  "avg_word_len", "quality_score")])
 
 
 @register(
@@ -848,6 +833,18 @@ GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have",
 _GOPHER_STOP_SQL = "[" + ",".join(f"'{w}'" for w in GOPHER_STOPWORDS) + "]"
 
 
+def gopher_word_shape(toks: str) -> tuple[Column, Column]:
+    """The Gopher length-free signals of a non-empty token-array column:
+    (mean word length, fraction of words with an alphabetic character),
+    unrounded doubles — one integer fold or count over one size each."""
+    mean_word_len = (F.aggregate(toks, F.lit(0).cast("bigint"),
+                                 lambda a, t: a + F.length(t))
+                     / F.size(toks))
+    frac_alpha = (F.size(F.filter(toks, lambda t: t.rlike("[a-z]")))
+                  / F.size(toks))
+    return mean_word_len, frac_alpha
+
+
 @register(
     "t16_gopher_rules",
     oracle=f"""
@@ -903,14 +900,12 @@ def t16_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.filter(tokens("text"), lambda t: t != "")
     f = d.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 1)
     stop = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
+    mean_word_len, frac_alpha = gopher_word_shape("toks")
     m = f.select(
         "doc_id",
         F.size("toks").cast("bigint").alias("n_words"),
-        F.round(F.aggregate("toks", F.lit(0).cast("bigint"),
-                            lambda a, t: a + F.length(t))
-                / F.size("toks"), 6).alias("mean_word_len"),
-        F.round(F.size(F.filter("toks", lambda t: t.rlike("[a-z]")))
-                / F.size("toks"), 6).alias("frac_alpha_words"),
+        F.round(mean_word_len, 6).alias("mean_word_len"),
+        F.round(frac_alpha, 6).alias("frac_alpha_words"),
         F.size(F.array_intersect(F.array_distinct("toks"), stop))
         .cast("bigint").alias("n_stop_hits"))
     ok_count = (F.col("n_words") >= 50) & (F.col("n_words") <= 100000)

@@ -5,10 +5,21 @@ The registry proves each operator against a DuckDB oracle in isolation;
 this module proves they COMPOSE: exact dedup → near-dup clustering →
 benchmark decontamination → quality filtering → language-mixture report →
 capacity-respecting packing → cluster-aware leakage-free split, with a
-funnel report of what each stage removed. Every stage is the same code
-path as its registered query family (cited per stage below), so the
-pipeline inherits their verified semantics and their 100 TB plans —
-nothing here introduces a new shuffle shape.
+funnel report of what each stage removed. Each stage calls the function
+its registered query family calls, so the pipeline inherits their
+verified semantics and their 100 TB plans — nothing here introduces a new
+shuffle shape:
+
+- near-dup clustering: ``dedup.minhash_candidate_pairs`` (e33) and
+  ``graph.connected_components`` (e45);
+- decontamination: ``quality.shingle_hits`` (e55, e88);
+- quality filter: ``textops.gopher_word_shape`` (t16);
+- packing: ``packing.greedy_pack`` (e51);
+- split: ``functions.text.lcg`` (e66, and the d90/e62/e65/e89/e97
+  samplers).
+
+Exact dedup (e1) and the mixture report (e57) are one aggregate each,
+written inline.
 
     from pyspark_ml_features_spark.pipeline import curate
     result = curate(spark, "/root/testdata/sf0.01")
@@ -33,7 +44,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pyspark_ml_features_spark.functions.text import tokens, word_ngrams
+from pyspark_ml_features_spark.functions.text import lcg, tokens, word_ngrams
 from pyspark_ml_features_spark.sources import table
 
 
@@ -64,6 +75,8 @@ def curate(spark: SparkSession, sf_dir: str, *,
         connected_components,
     )
     from pyspark_ml_features_spark.operators.packing import greedy_pack
+    from pyspark_ml_features_spark.operators.quality import shingle_hits
+    from pyspark_ml_features_spark.operators.textops import gopher_word_shape
 
     funnel: list[tuple[str, int, int]] = []
     d = (table(spark, sf_dir, "documents")
@@ -103,16 +116,9 @@ def curate(spark: SparkSession, sf_dir: str, *,
     sh = (d2.select("doc_id", tokens("text").alias("__toks"))
           .select("doc_id",
                   F.array_distinct(word_ngrams("__toks", 3)).alias("sh")))
-    bench = (sh.filter(F.col("doc_id") % 5 == 0)
-             .select(F.explode("sh").alias("shingle")).distinct()
-             .withColumn("hit", F.lit(1)))
-    corpus_sh = (sh.filter(F.col("doc_id") % 5 != 0)
-                 .select("doc_id", F.explode("sh").alias("shingle")))
-    contaminated = (corpus_sh.join(F.broadcast(bench), "shingle", "left")
-                    .groupBy("doc_id")
-                    .agg((F.count("hit") / F.count(F.lit(1)))
-                         .alias("contamination"))
-                    .filter(F.col("contamination") >= contamination_max)
+    contaminated = (shingle_hits(sh, F.col("doc_id") % 5 == 0)
+                    .filter(F.col("n_hit") / F.col("n_shingles")
+                            >= contamination_max)
                     .select("doc_id"))
     d3 = (d2.filter(F.col("doc_id") % 5 != 0)
           .join(contaminated, "doc_id", "left_anti"))
@@ -122,10 +128,7 @@ def curate(spark: SparkSession, sf_dir: str, *,
     # 4. QUALITY filter (t16's length-free signals, parameterized).
     toks = F.filter(tokens("text"), lambda x: x != "")
     q = d3.withColumn("toks", toks).filter(F.size("toks") >= 1)
-    mwl = (F.aggregate("toks", F.lit(0).cast("bigint"),
-                       lambda a, x: a + F.length(x)) / F.size("toks"))
-    frac_alpha = (F.size(F.filter("toks", lambda x: x.rlike("[a-z]")))
-                  / F.size("toks"))
+    mwl, frac_alpha = gopher_word_shape("toks")
     lo, hi = mean_word_len_bounds
     d4 = (q.filter((mwl >= lo) & (mwl <= hi)
                    & (frac_alpha >= min_frac_alpha))
@@ -160,8 +163,8 @@ def curate(spark: SparkSession, sf_dir: str, *,
     split = (d4.join(clusters, "doc_id")
              .withColumn(
                  "in_train",
-                 ((((F.col("cluster_id") % F.lit(2147483648)) * F.lit(1103515245) + F.lit(12345))
-                   % F.lit(2048)) < F.lit(int(2048 * train_frac)))
+                 ((lcg("cluster_id") % F.lit(2048))
+                  < F.lit(int(2048 * train_frac)))
                  .cast("bigint"))
              .select("doc_id", "lang", "n_tokens", "cluster_id",
                      "in_train"))

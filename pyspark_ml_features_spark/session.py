@@ -66,6 +66,11 @@ ENGINE_CONFS = (
     # interpretation with DuckDB's naive reading for oracle parity.
     ("spark.sql.session.timeZone", "UTC"),
     ("spark.python.sql.dataFrameDebugging.enabled", "false"),
+    # The legacy events layout stores ts as TIMESTAMP(NANOS), which the
+    # vectorized reader rejects; read it as long (sources.io.with_event_ts
+    # truncates it). Set for every read, so it never splits the parquet
+    # relation memo, whose key holds this conf, by read order.
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
 )
 
 

@@ -92,40 +92,42 @@ def parquet_scan(spark: SparkSession, path: str) -> DataFrame:
     return DataFrame(dataset.ofRows(spark._jsparkSession, plan.newInstance()), spark)
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver table (TESTDATA.md) from a scale-factor directory.
+def with_event_ts(df: DataFrame, stored_ts_type: str) -> DataFrame:
+    """``df`` (an events read, batch or stream) with ``ts`` as a
+    session-local TIMESTAMP, given the type its parquet file stores ``ts``
+    as.
 
     ``events.ts`` has shipped in two physical layouts across driver
     rounds: TIMESTAMP(NANOS) (rounds 1-2), which Spark's vectorized reader
-    rejects outright — read nanos as long and truncate to microsecond
+    rejects outright — read as long under ``nanosAsLong`` (an engine conf,
+    ``session.ENGINE_CONFS``) and truncated here to microsecond
     timestamps, the same truncation DuckDB applies when narrowing
     TIMESTAMP_NS — and plain timestamp[us] (round 3+), which both engines
-    read natively. Detect from the loaded dtype and convert only the
-    legacy layout, and normalize TIMESTAMP_NTZ to session-local TIMESTAMP
-    so downstream window/watermark code sees one type either way.
+    read natively. TIMESTAMP_NTZ is cast to session-local TIMESTAMP so
+    downstream window/watermark code sees one type either way."""
+    from pyspark.sql import functions as F
+
+    if stored_ts_type == "bigint":  # legacy nanos layout
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    if stored_ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one driver table (TESTDATA.md) from a scale-factor directory;
+    ``events`` goes through :func:`with_event_ts`.
 
     Reads go through ``parquet_scan``, so a table's relation is resolved
     once per session and file version, and each later call gets a new
-    instance of it. The events branch sets ``nanosAsLong`` before the scan
-    reads the memo key, so the key records the conf the relation was
-    resolved under.
+    instance of it.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = parquet_scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = parquet_scan(spark, path)
-        from pyspark.sql import functions as F
-
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":  # legacy nanos layout
-            return df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        if ts_type == "timestamp_ntz":
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return parquet_scan(spark, path)
+        return with_event_ts(df, dict(df.dtypes)["ts"])
+    return df
 
 
 def csv_scan(spark: SparkSession, path: str,

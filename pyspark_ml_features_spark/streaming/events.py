@@ -23,8 +23,14 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from pyspark_ml_features_spark.operators.sessionize import (
+    CUMULATIVE_USERS_ORACLE,
+    HOURLY_ROLLUP_ORACLE,
+    cumulative_users,
+)
 from pyspark_ml_features_spark.registry import register
 from pyspark_ml_features_spark.sources import parquet_scan, table
+from pyspark_ml_features_spark.sources.io import with_event_ts
 from pyspark_ml_features_spark.tmp_artifacts import register as _rm_at_exit
 
 _sink_counter = itertools.count()
@@ -57,25 +63,15 @@ def events_stream(spark: SparkSession, sf_dir: str,
     src = os.path.join(sf_dir, "events.parquet")
     stage = src if os.path.isdir(src) else _stage_single_parquet(sf_dir,
                                                                  "events")
-    # Match the batch reader's layout handling (sources/io.py:table): the
-    # legacy nanos layout must be read as long and truncated; the round-3+
-    # timestamp[us] layout streams natively. The conf is set before the
-    # schema read, as table() does, so both share one memoized relation.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # The stream takes the batch read's stored schema, and the batch
+    # reader's ts normalization (one memoized relation for both).
     raw = parquet_scan(spark, src)
-    ts_raw = dict(raw.dtypes)["ts"]
     raw_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in raw.schema.fields)
     reader = spark.readStream.schema(raw_schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(stage)
-    if ts_raw == "bigint":  # legacy nanos layout
-        return stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if ts_raw == "timestamp_ntz":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return with_event_ts(reader.parquet(stage), dict(raw.dtypes)["ts"])
 
 
 def streaming_tumbling_counts(events: DataFrame) -> DataFrame:
@@ -248,20 +244,7 @@ def s16_streaming_dedup_exact(spark: SparkSession,
 
 @register(
     "s17_streaming_new_users_exact",
-    oracle="""
-WITH firsts AS (
-    SELECT user_id, min(CAST(ts AS DATE)) AS first_day
-    FROM events GROUP BY user_id
-), by_day AS (
-    SELECT first_day AS day, CAST(count(*) AS BIGINT) AS new_users
-    FROM firsts GROUP BY first_day
-)
-SELECT CAST(day AS TIMESTAMP) AS day, new_users,
-       CAST(sum(new_users) OVER (ORDER BY day ASC
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS cum_users
-FROM by_day
-""",
+    oracle=CUMULATIVE_USERS_ORACLE,
     tags=("north-star", "D8", "streaming", "incremental", "integration"),
 )
 def s17_streaming_new_users_exact(spark: SparkSession,
@@ -282,32 +265,15 @@ def s17_streaming_new_users_exact(spark: SparkSession,
     100 TB: the streaming state is 16 bytes/user (the MERGE-maintainable
     `firsts` table d93's docstring names); the downstream window runs
     over calendar days, never events (d93's economics)."""
-    from pyspark.sql import Window
-
     s = events_stream(spark, sf_dir)
     firsts = (s.groupBy("user_id")
               .agg(F.min(F.col("ts").cast("date")).alias("first_day")))
-    mat = run_stream_to_memory(firsts, mode="complete")
-    by_day = (mat.groupBy(F.col("first_day").alias("day"))
-              .agg(F.count(F.lit(1)).alias("new_users")))
-    w = Window.orderBy(F.col("day").asc()) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (by_day.select(
-        F.col("day").cast("timestamp").alias("day"),
-        "new_users",
-        F.sum("new_users").over(w).cast("bigint").alias("cum_users")))
+    return cumulative_users(run_stream_to_memory(firsts, mode="complete"))
 
 
 @register(
     "s18_streaming_merge_rollup_exact",
-    oracle="""
-SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-       event_type,
-       count(*) AS n_events,
-       round(sum(value), 6) AS total_value
-FROM events
-GROUP BY 1, 2
-""",
+    oracle=HOURLY_ROLLUP_ORACLE,
     tags=("north-star", "E10", "streaming", "incremental", "integration"),
 )
 def s18_streaming_merge_rollup_exact(spark: SparkSession,
@@ -564,20 +530,10 @@ def s8_streaming_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     is unsupported (and unnecessary — the second is over days, not
     events). Rows-only for the driver; equality with d93 is asserted in
     tests/test_streaming.py."""
-    from pyspark.sql import Window
-
     s = events_stream(spark, sf_dir)
     firsts = (s.groupBy("user_id")
               .agg(F.min(F.col("ts").cast("date")).alias("first_day")))
-    mat = run_stream_to_memory(firsts, mode="complete")
-    by_day = (mat.groupBy(F.col("first_day").alias("day"))
-              .agg(F.count(F.lit(1)).alias("new_users")))
-    w = Window.orderBy(F.col("day").asc()) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (by_day.select(
-        F.col("day").cast("timestamp").alias("day"),
-        "new_users",
-        F.sum("new_users").over(w).cast("bigint").alias("cum_users")))
+    return cumulative_users(run_stream_to_memory(firsts, mode="complete"))
 
 
 LATE_SPLIT_DAY = "2024-01-15"

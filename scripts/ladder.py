@@ -109,8 +109,6 @@ def build_tier(spark, k: int, modes: dict[str, str], root: str,
         src = os.path.join(base, f"{name}.parquet")
         dst = os.path.join(out, f"{name}.parquet")
         if name in modes:
-            if name == "events":  # read every ts layout, as table() does
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
             for rep in replicas(spark.read.parquet(src), k, IDS[name],
                                 modes[name], TEXT.get(name)):
                 # one file per replica, so a scan gets k splits

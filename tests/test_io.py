@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql.types import BinaryType, StringType
 
 from pyspark_ml_features_spark.plans.profile import profile
+from pyspark_ml_features_spark.session import tune_session
 from pyspark_ml_features_spark.sources import parquet_scan, table
 from pyspark_ml_features_spark.sources.io import INFERENCE_CONFS, TABLES
 from pyspark_ml_features_spark.sources.sinks import write_csv, write_parquet
@@ -33,9 +34,19 @@ def test_repeated_table_call_launches_no_job(spark, tmp_path):
     assert table(spark, SMOKE_SF_DIR, "lineitem").count() > 0
 
 
+def test_events_read_keeps_other_tables_memoized(spark):
+    # a fresh session, tuned as every query build tunes it: reading events
+    # must not change a conf in the memo key, or the next lineitem read
+    # resolves lineitem a second time
+    fresh = tune_session(spark.newSession())
+    table(fresh, SMOKE_SF_DIR, "lineitem")
+    table(fresh, SMOKE_SF_DIR, "events")
+    jobs = profile(fresh, lambda: table(fresh, SMOKE_SF_DIR, "lineitem")).jobs
+    assert jobs == 0, f"lineitem was resolved again after events ({jobs} jobs)"
+    assert len(fresh._pmfs_relations) == 2
+
+
 def test_memoized_schema_equals_inferred_schema(spark):
-    # events is read with nanosAsLong set, as table() reads it
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for name in TABLES:
         path = os.path.join(SMOKE_SF_DIR, f"{name}.parquet")
         parquet_scan(spark, path)

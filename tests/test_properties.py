@@ -9,7 +9,7 @@ import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pyspark_ml_features_spark.functions.text import HASH_BASE, HASH_MOD
+from pyspark_ml_features_spark.functions.text import HASH_BASE, HASH_MOD, STOPWORDS
 
 SLOW = settings(max_examples=5, deadline=None,
                 suppress_health_check=list(HealthCheck))
@@ -233,3 +233,63 @@ def test_png_codec_roundtrip_random_content(data):
         pos += 12 + length
     raw = zlib.decompress(bytes(idat))
     assert (decoded == _reference_defilter(raw, w, h)).all()
+
+
+def _duckdb_scalars(sql: str, rows: list[tuple], schema: str) -> list:
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t ({schema})")
+    con.executemany(f"INSERT INTO t VALUES ({', '.join('?' * len(rows[0]))})",
+                    rows)
+    return [r[0] for r in con.execute(sql).fetchall()]
+
+
+_WORDS = st.one_of(st.sampled_from(STOPWORDS),
+                   st.from_regex(r"[a-z]{1,12}", fullmatch=True))
+# one Spark job and one DuckDB query per example; a last-ulp slip (say, a
+# reassociated division) shows in about a fifth of documents
+TWIN = settings(max_examples=20, deadline=None,
+                suppress_health_check=list(HealthCheck))
+
+
+@TWIN
+@given(st.lists(st.lists(_WORDS, min_size=1, max_size=15),
+                min_size=1, max_size=8))
+def test_quality_score_matches_duckdb_twin_bit_for_bit(spark, docs):
+    from pyspark_ml_features_spark.functions.text import (
+        duckdb_quality_score,
+        quality_score,
+        tokens,
+    )
+
+    rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
+    df = spark.createDataFrame(rows, schema="id int, text string")
+    got = [r["q"] for r in df.select(
+        "id", quality_score(tokens("text")).alias("q")).orderBy("id").collect()]
+    want = _duckdb_scalars(
+        f"SELECT {duckdb_quality_score('text')} FROM t ORDER BY id",
+        rows, "id INTEGER, text VARCHAR")
+    assert [q.hex() for q in got] == [q.hex() for q in want]
+
+
+_EDGE_KEYS = [0, 1, -1, 2**31 - 1, 2**31, 2**31 + 1, -(2**31) + 1, -(2**31),
+              -(2**31) - 1, 2**63 - 1, -(2**63)]
+
+
+@TWIN
+@given(st.lists(st.one_of(st.sampled_from(_EDGE_KEYS),
+                          st.integers(min_value=-(2**31) - 5,
+                                      max_value=2**31 + 5),
+                          st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+                min_size=1, max_size=20))
+def test_lcg_matches_duckdb_twin_bit_for_bit(spark, keys):
+    from pyspark_ml_features_spark.functions.text import duckdb_lcg, lcg
+
+    rows = list(enumerate(keys))
+    df = spark.createDataFrame(rows, schema="id int, k bigint")
+    got = [r["h"] for r in
+           df.select("id", lcg("k").alias("h")).orderBy("id").collect()]
+    want = _duckdb_scalars(f"SELECT {duckdb_lcg('k')} FROM t ORDER BY id",
+                           rows, "id INTEGER, k BIGINT")
+    assert got == want
