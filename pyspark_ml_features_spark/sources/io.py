@@ -92,10 +92,9 @@ def parquet_scan(spark: SparkSession, path: str) -> DataFrame:
     return DataFrame(dataset.ofRows(spark._jsparkSession, plan.newInstance()), spark)
 
 
-def with_event_ts(df: DataFrame, stored_ts_type: str) -> DataFrame:
-    """``df`` (an events read, batch or stream) with ``ts`` as a
-    session-local TIMESTAMP, given the type its parquet file stores ``ts``
-    as.
+def with_event_ts(df: DataFrame) -> DataFrame:
+    """``df`` (an events read, batch or stream, with the file's stored
+    schema) with ``ts`` as a session-local TIMESTAMP.
 
     ``events.ts`` has shipped in two physical layouts across driver
     rounds: TIMESTAMP(NANOS) (rounds 1-2), which Spark's vectorized reader
@@ -107,9 +106,10 @@ def with_event_ts(df: DataFrame, stored_ts_type: str) -> DataFrame:
     downstream window/watermark code sees one type either way."""
     from pyspark.sql import functions as F
 
-    if stored_ts_type == "bigint":  # legacy nanos layout
+    stored = dict(df.dtypes)["ts"]
+    if stored == "bigint":  # legacy nanos layout
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if stored_ts_type == "timestamp_ntz":
+    if stored == "timestamp_ntz":
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
@@ -126,7 +126,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     df = parquet_scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        return with_event_ts(df, dict(df.dtypes)["ts"])
+        return with_event_ts(df)
     return df
 
 

@@ -71,7 +71,7 @@ def events_stream(spark: SparkSession, sf_dir: str,
     reader = spark.readStream.schema(raw_schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return with_event_ts(reader.parquet(stage), dict(raw.dtypes)["ts"])
+    return with_event_ts(reader.parquet(stage))
 
 
 def streaming_tumbling_counts(events: DataFrame) -> DataFrame:
